@@ -1,7 +1,6 @@
 package graft.flow
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ipfns._
 
@@ -11,13 +10,7 @@ case class FlowConfig(
     localRegion: String = "region-1",
     localCluster: String = "cluster-a",
     environment: String = "production",
-    ignoreUDP: Boolean = true,
-    /** LPM strategy: broadcast binary trie (O(32)/probe, zero shuffle,
-      * streaming-safe — the default, mirroring the reference's patricia
-      * trie, remote.go:177-186) vs broadcast range-join + window top-1
-      * (pure Catalyst ops, kept as the cross-check: the window
-      * partitionBy(flow_id) costs a full fact shuffle). */
-    lpmViaTrie: Boolean = true)
+    ignoreUDP: Boolean = true)
 
 /** The kubenetmon labeling + aggregation pipeline, re-expressed as
   * composable Catalyst-friendly `DataFrame => DataFrame` stages
@@ -32,10 +25,9 @@ case class FlowConfig(
   *    the dimension key, which Catalyst executes as partial (map-side)
   *    aggregation → exchange → final aggregation, so the exchange
   *    carries pre-summed (key × 2 longs) rows, not raw flows;
-  *  - longest-prefix-match is a broadcast range-join + per-flow top-1
-  *    (max prefix length). With a broadcast build side the probe is a
-  *    nested-loop over ~44k prefixes per partition; `LpmJoin.viaTrie`
-  *    offers the O(32)-per-probe binary-trie variant for hot paths;
+  *  - longest-prefix-match is a per-row probe of a broadcast binary
+  *    trie (`LpmJoin.viaTrie`, O(32) per probe, no shuffle), so every
+  *    observation keeps its own match — streams included;
   *  - every filter is a pushable Catalyst predicate; no UDFs in the
   *    filter path.
   */
@@ -222,14 +214,12 @@ object FlowPipeline {
     flows.filter(col("flow_type").isNotNull)
 
   // ---- J5: longest-prefix-match classification + P3 proto naming ----
-  /** Range-join variant: broadcast the interval table, keep the longest
-    * matching prefix per flow (window top-1), classify per
-    * remote.go:131-175 / remote_test.go:76-220 truth table.
+  /** Longest matching prefix per observation ([[LpmJoin.viaTrie]]),
+    * classified per the remote.go:131-175 / remote_test.go:76-220 truth
+    * table.
     */
   def classify(prefixes: DataFrame, cfg: FlowConfig)(flows: DataFrame): DataFrame = {
-    val matched =
-      if (cfg.lpmViaTrie) LpmJoin.viaTrie(flows, prefixes, col("remote_ip"))
-      else LpmJoin.viaRangeJoin(flows, prefixes, col("remote_ip"))
+    val matched = LpmJoin.viaTrie(flows, prefixes, col("remote_ip"))
     matched.select(
       flows.columns.map(col) ++ Seq(
         when(ip_is_private(col("remote_ip")), lit("INTRA_VPC"))
@@ -390,41 +380,18 @@ object FlowPipeline {
   }
 }
 
-/** Longest-prefix-match join strategies (SURVEY.md §2.4 J5). */
+/** Longest-prefix-match join (SURVEY.md §2.4 J5). */
 object LpmJoin {
-  /** Bucketed broadcast range join + top-1 by prefix length, pure
-    * Catalyst ops. A naive interval join is a BroadcastNestedLoopJoin —
-    * O(|flows| x |prefixes|) probe work (measured 20x slowdown at
-    * sf0.1). Instead each prefix is exploded into the /16 buckets it
-    * covers, turning the join into a broadcast HASH join on bucket
-    * equality with the range predicate as a residual filter: probe cost
-    * drops to |flows| x (prefixes per /16). The per-flow top-1 (longest
-    * p_len) runs as a window that Spark collapses via WindowGroupLimit
-    * before the exchange. Null-extends when no prefix matches
-    * (public-internet default, remote.go:177-186).
-    */
-  def viaRangeJoin(flows: DataFrame, prefixes: DataFrame, ip: Column): DataFrame = {
-    val bucketed = prefixes.withColumn("__bkt",
-      explode(expr("sequence(shiftright(p_start, 16), shiftright(p_end, 16))")))
-    val joined = flows.join(broadcast(bucketed),
-      shiftright(ip, 16) === col("__bkt") &&
-        ip >= col("p_start") && ip <= col("p_end"), "left_outer")
-    val w = Window.partitionBy(col("flow_id"))
-      .orderBy(col("p_len").desc_nulls_last)
-    joined.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__bkt", "p_start", "p_end")
-  }
-
-  /** Broadcast-trie variant: collect the (small) prefix dim on the driver,
-    * build an [[Ipv4Trie]], probe with the native codegen'd [[TrieLpm]]
-    * expression (the trie ships as a plan reference object — per-executor
-    * deserialization like a broadcast, zero UDF boxing), then
+  /** Collect the (small) prefix dim on the driver, build an
+    * [[Ipv4Trie]], probe with the native codegen'd [[TrieLpm]]
+    * expression (the trie ships as a plan reference object —
+    * per-executor deserialization like a broadcast, zero UDF boxing), then
     * broadcast-hash-join the payload columns back on. O(32) per probe,
-    * no shuffle, no window — THE strategy for 100 TB facts and the only
-    * one usable under Structured Streaming (window over flow_id is
-    * unsupported on streams). Mirrors the reference's in-memory patricia
-    * trie under RWMutex (remote.go:22-26).
+    * no shuffle, no window: each observation keeps its own match, which
+    * also makes it usable under Structured Streaming. Null-extends when
+    * no prefix matches (public-internet default, remote.go:177-186).
+    * Mirrors the reference's in-memory patricia trie under RWMutex
+    * (remote.go:22-26).
     */
   def viaTrie(flows: DataFrame, prefixes: DataFrame, ip: Column): DataFrame = {
     val spark = flows.sparkSession

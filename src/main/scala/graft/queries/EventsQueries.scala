@@ -89,8 +89,7 @@ object EventsQueries {
     // BUCKET equi-join (each span explodes into ≤24 covered hours; each
     // 1h window IS its bucket, so no pair dedup is even needed) with
     // the overlap inequality as a residual — a broadcastable hash join
-    // instead of the nested-loop every naive interval join plans, the
-    // same decomposition LpmJoin.viaRangeJoin uses for prefix ranges.
+    // instead of the nested-loop every naive interval join plans.
     "qj_interval_overlap" -> ((s, d) => {
       val ev = graft.Tables.events(s, d)
       val a = ev.groupBy((col("user_id") % 50).as("u"),

@@ -92,8 +92,9 @@ object FlowQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A5's data side as a DRIVER GATE: the per-outcome counts tagged
     // with the reference Prometheus counter family each outcome feeds
-    // — exactly what startWithMetrics lands per micro-batch, computed
-    // over the whole corpus so the oracle can replay it
+    // — what MetricsExporter.counters folds from the outcome commits
+    // of StreamingFlows.start, computed over the whole corpus so the
+    // oracle can replay it
     "qf_metric_families" -> ((s, d) => {
       val (f, p, n, px) = stages(s, d)
       FlowPipeline.routeOutcomes(p, n, px, cfg)(f)

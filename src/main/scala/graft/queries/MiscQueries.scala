@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.flow.{FlowConfig, FlowPipeline, SyntheticFlows}
 import graft.multimodal.MediaOps
-import graft.sink.{MaterializedView, NetworkFlowTable, TxFileIndex, TxTable}
+import graft.sink.{MaterializedView, TxFileIndex, TxTable}
 import graft.streaming.StreamingFlows
 
 /** Streaming, multimodal and sink operator surface. The two qs_*
@@ -67,7 +67,7 @@ object MiscQueries {
       val pods = SyntheticFlows.pods(s, d)
       val nodes = SyntheticFlows.nodes(s, d)
       val prefixes = SyntheticFlows.prefixes(s, d)
-      val cfg = FlowConfig(lpmViaTrie = true)
+      val cfg = FlowConfig()
       val flows = SyntheticFlows.flowsFromEvents(
         StreamingFlows.eventsStream(s, d).select(
           col("event_id"), col("user_id"), col("ts")))
@@ -1891,16 +1891,18 @@ object MiscQueries {
       after
     }),
 
-    // write the summing table (partitioned+sorted zstd parquet), read it
-    // back, and aggregate — exercises the full sink + scan path
+    // write the summing table (date-partitioned, range-clustered zstd
+    // TxTable), read it back, and aggregate — exercises the full sink +
+    // scan path; a fresh table per run so the append lands once
     "qsink_roundtrip" -> ((s, d) => {
       val (f, p, n, px) = (SyntheticFlows.flows(s, d), SyntheticFlows.pods(s, d),
         SyntheticFlows.nodes(s, d), SyntheticFlows.prefixes(s, d))
       val summed = FlowPipeline.run(f, p, n, px, FlowConfig())
       val path = sys.props("java.io.tmpdir") +
         s"/graft_sink_${math.abs(d.hashCode)}"
-      NetworkFlowTable.write(summed, path)
-      NetworkFlowTable.read(s, path)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+      TxTable.append(s, summed, path)
+      TxTable.read(s, path)
         .groupBy("direction")
         .agg(sum("bytes").as("bytes"), sum("packets").as("packets"),
           count(lit(1)).as("n_rows"))

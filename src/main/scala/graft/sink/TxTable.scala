@@ -6,15 +6,21 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-/** A minimal log-structured commit protocol for the summing table — the
-  * object-store-safe variant of [[NetworkFlowTable]] (whose
-  * rename-based maintenance is atomic on HDFS/local but not on
-  * S3-style stores; see the note at NetworkFlowTable.scala:73-80). The
-  * reference sidesteps the problem because ClickHouse owns its storage
-  * (/root/reference/test/network_flows_0.sql:39-44); a 100 TB Spark
-  * deployment needs what Delta/Iceberg provide: data files are
-  * immutable and unreferenced-until-committed, and the only mutation is
-  * an atomic publish of one small log file.
+/** A minimal log-structured commit protocol for the summing table: the
+  * Spark-native replacement for ClickHouse's `network_flows_0`
+  * SummingMergeTree (reference test/network_flows_0.sql:1-44),
+  * and the one table both the batch backfill and the streaming flow job
+  * ([[graft.streaming.StreamingFlows.start]]) commit to. Directory
+  * renames are not atomic on S3-style stores, so nothing here relies on
+  * one; the reference sidesteps the problem because ClickHouse owns its
+  * storage, and a 100 TB Spark deployment needs what Delta/Iceberg
+  * provide: data files are immutable and unreferenced-until-committed,
+  * and the only mutation is an atomic publish of one small log file.
+  *
+  * Writers append per-batch PARTIAL SUMS (additive deltas); [[compact]]
+  * is the background merge that collapses them, and readers that need
+  * merged rows before it runs re-sum with [[resum]] — ClickHouse's
+  * SummingMergeTree read contract.
   *
   * Layout:
   * {{{
@@ -63,6 +69,24 @@ object TxTable {
     extends IllegalArgumentException(msg)
   private val LogDirName = "_txlog"
   private val measures = Set("bytes", "packets", "n_obs")
+
+  /** Sort prefix mirroring the reference ORDER BY head exactly
+    * (network_flows_0.sql:41-42; date is implicit in partitioning):
+    * intervalStartTime, direction, proto, localApp, remoteApp,
+    * localPod, remotePod.
+    */
+  val sortKey: Seq[String] = Seq(
+    "interval_start", "direction", "proto_name", "local_app",
+    "remote_app", "local_pod", "remote_pod")
+
+  /** The Summing merge over a frame of partial sums: rows that share
+    * every non-measure column collapse into one, measures summed. What
+    * [[compact]] writes, and how a reader merges uncompacted appends.
+    */
+  def resum(df: DataFrame): DataFrame =
+    df.groupBy(df.columns.filterNot(measures).map(col): _*)
+      .agg(sum("bytes").as("bytes"), sum("packets").as("packets"),
+        sum("n_obs").as("n_obs"))
 
   /** Columns whose per-file min/max land in the commit log. The head of
     * the table's sort key is the natural choice: [[prep]]'s
@@ -895,7 +919,7 @@ object TxTable {
           keys.foreach(k => require(df.columns.contains(k),
             s"bucketed table: every write needs key column $k"))
           require(!df.columns.contains("__gb"), "__gb is reserved")
-          val sk = NetworkFlowTable.sortKey.filter(df.columns.contains)
+          val sk = sortKey.filter(df.columns.contains)
           df.withColumn("__gb", pmod(hash(keys.map(col): _*), lit(n)))
             .repartition(n, col("__gb"))
             .sortWithinPartitions(("__gb" +: sk).map(col): _*)
@@ -1915,10 +1939,12 @@ object TxTable {
     * whose schema is not the flow summing schema (e.g. a materialized
     * view's group-keys + partial-states rows) keep whatever sort-key
     * columns they share — at minimum `date`, which every tx table
-    * carries as its partition column.
+    * carries as its partition column. Range partitioning on (date,
+    * sort key…), not `repartition(date)`: that maps each calendar day
+    * to ONE write task, while this splits a day across many.
     */
-  private def prep(df: DataFrame): DataFrame = {
-    val sk = NetworkFlowTable.sortKey.filter(df.columns.contains)
+  private[graft] def prep(df: DataFrame): DataFrame = {
+    val sk = sortKey.filter(df.columns.contains)
     val parted = df.repartitionByRange(("date" +: sk).map(col): _*)
     if (sk.isEmpty) parted else parted.sortWithinPartitions(sk.map(col): _*)
   }
@@ -2027,11 +2053,7 @@ object TxTable {
     val (fs, root) = fsFor(spark, table)
     val targetDates = snapshotFiles(fs, root).values.map(_.date).toSet.toSeq
       .sorted.filter(d => dates.forall(_.contains(d)))
-    val df = read(spark, table, Some(targetDates))
-    val dims = df.columns.filterNot(measures)
-    val compacted = df.groupBy(dims.map(col): _*)
-      .agg(sum("bytes").as("bytes"), sum("packets").as("packets"),
-        sum("n_obs").as("n_obs"))
+    val compacted = resum(read(spark, table, Some(targetDates)))
     val adds = stage(prep(compacted), fs, root)
     val removes = snapshotFiles(fs, root)
       .collect { case (rel, m) if targetDates.contains(m.date) => rel }.toSeq
@@ -2575,7 +2597,7 @@ object TxTable {
       (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     // cluster on the sort key at the right width — packing also
     // restores the stats envelopes micro-batch writes fragment
-    val sk = NetworkFlowTable.sortKey.filter(df.columns.contains)
+    val sk = sortKey.filter(df.columns.contains)
     val packed = df.repartitionByRange(nFiles,
       ("date" +: sk).distinct.map(col): _*)
     val sorted = if (sk.isEmpty) packed

@@ -2,35 +2,39 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sink.TxTable
 
-/** The Prometheus-exporter analog over the metrics table written by
-  * [[StreamingFlows.startWithMetrics]]. The reference exports cumulative
+/** The Prometheus-exporter analog over the outcomes TxTable that
+  * [[StreamingFlows.start]] commits to. The reference exports cumulative
   * counters scraped over HTTP (/root/reference/cmd/server/server.go:100-117
   * processedFlowsCounter/errorCounter; pkg/inserter/worker.go:51-66);
-  * here each micro-batch owns an idempotent `batch=<id>` dir of
-  * per-outcome counts, and a Prometheus counter is by definition the
+  * here each micro-batch commits its per-(date, outcome) counts once,
+  * keyed by its batch id, and a Prometheus counter is by definition the
   * cumulative sum of those deltas — so "scraping" is one aggregation
-  * over the table. Re-running [[counters]] on a cadence IS the tail
-  * job: per-batch overwrite semantics make the scrape monotone (a
-  * retried batch replaces its own dir, never double-counts).
+  * over the table, tagged with the reference counter family each
+  * outcome feeds ([[StreamingFlows.outcomeFamily]]). Re-running
+  * [[counters]] on a cadence IS the tail job: a replayed batch's commit
+  * is a no-op, so the scrape is monotone and never double-counts.
   */
 object MetricsExporter {
 
   /** Cumulative per-(family,label) counter values across all batches —
     * the exact counter families the reference exposes.
     */
-  def counters(spark: SparkSession, metricsPath: String): DataFrame =
-    spark.read.option("basePath", metricsPath).parquet(metricsPath)
+  def counters(spark: SparkSession, outcomesTable: String): DataFrame =
+    countersByOutcome(spark, outcomesTable)
       .groupBy("family", "label")
-      .agg(sum("n").as("value"))
+      .agg(sum("value").as("value"))
 
   /** Finer grain for reconciliation against the outcome taxonomy
     * (qf_outcomes): cumulative count per raw outcome.
     */
-  def countersByOutcome(spark: SparkSession, metricsPath: String): DataFrame =
-    spark.read.option("basePath", metricsPath).parquet(metricsPath)
-      .groupBy("outcome", "family", "label")
-      .agg(sum("n").as("value"))
+  def countersByOutcome(spark: SparkSession, outcomesTable: String): DataFrame =
+    TxTable.read(spark, outcomesTable)
+      .groupBy("outcome").agg(sum("n").as("value"))
+      .withColumn("fam", StreamingFlows.outcomeFamily)
+      .select(col("outcome"), col("fam.family").as("family"),
+        col("fam.label").as("label"), col("value"))
 
   /** Prometheus text exposition format for a [[counters]] frame:
     * `graft_<family>_total{label="<label>"} <value>` — the scrape
@@ -48,7 +52,7 @@ object MetricsExporter {
     * counters on an HTTP mux; promhttp serves /metrics). JDK built-in
     * HttpServer, zero dependencies; `counters` re-resolves per scrape so
     * the endpoint always reflects the batches written so far (the scrape
-    * IS one aggregation over the metrics table — see the object doc).
+    * IS one aggregation over the outcomes table — see the object doc).
     * `port` 0 binds an ephemeral port; read it back from the returned
     * server's address. Caller owns the lifecycle (`stop(0)`).
     */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.flow.{FlowConfig, FlowPipeline, SyntheticFlows}
+import graft.sink.{GraftStreamSink, TxTable}
 
 /** Structured Streaming surface (SURVEY.md §2.1 S1-S3, §2.6 W1-W4):
   * the reference's 5s-conntrack-dump → gRPC stream → batch-insert chain
@@ -13,12 +14,13 @@ import graft.flow.{FlowConfig, FlowPipeline, SyntheticFlows}
   * Catalyst projections, shared verbatim with the batch path) → windowed
   * summing aggregation → sink.
   *
-  * Production shape: `readStream` with `Trigger.ProcessingTime("5 seconds")`,
-  * watermarked update-mode aggregation, `foreachBatch` idempotent sink
-  * (checkpoint + batchId = the reference's insert_deduplication_token,
-  * worker.go:248). The test/verify path below runs the same plan
-  * synchronously into a memory sink in complete mode so results are
-  * byte-comparable with the batch oracle.
+  * Production shape: [[start]] — `readStream` into a `foreachBatch`
+  * that commits each micro-batch's partial sums and outcome counts to
+  * two TxTables, keyed by the batch id (checkpoint + batchId = the
+  * reference's insert_deduplication_token, worker.go:248). The
+  * watermarked and minute-grain gates run their plans synchronously
+  * into a memory sink so results are byte-comparable with the batch
+  * oracle.
   */
 object StreamingFlows {
   private val nameCounter = new AtomicInteger(0)
@@ -251,53 +253,47 @@ object StreamingFlows {
     * 0 labels against the v1 snapshot, every later batch against the
     * rolled snapshot (`pod_app` suffixed "-v2"). Versioning is keyed on
     * batchId, not a call counter, so batch RETRIES re-resolve the same
-    * snapshot (deterministic under recovery). The per-batch summing
-    * tables are re-aggregated on read ("sums of sums") so a minute
-    * window spanning the cut merges exactly like the oracle's GROUP BY.
+    * snapshot (deterministic under recovery). The flow table holds one
+    * partial-sum commit per batch, re-summed on read so a minute window
+    * spanning the cut merges exactly like the oracle's GROUP BY.
     */
   def dimRefreshRun(spark: SparkSession, dir: String,
       cutUs: Long): DataFrame = {
-    val path = eventsDirSplitAt(spark, dir, cutUs)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType),
-      StructField("ts", TimestampType),
-      StructField("user_id", LongType),
-      StructField("event_type", StringType),
-      StructField("value", DoubleType),
-      StructField("props", StringType)))
-    val src = spark.readStream.schema(schema)
+    val src = spark.readStream.schema(eventsSchema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(path)
-    val flows = SyntheticFlows.flowsFromEvents(
-      src.select(col("event_id"), col("user_id"), col("ts")))
+      .parquet(eventsDirSplitAt(spark, dir, cutUs))
     val podsV1 = SyntheticFlows.pods(spark, dir)
     val nodes = SyntheticFlows.nodes(spark, dir)
     val prefixes = SyntheticFlows.prefixes(spark, dir)
-    val cfg = FlowConfig(lpmViaTrie = true)
-    // fixed per-corpus scratch (same idiom as the tx-gate run dirs):
-    // wiped and rebuilt each run, so repeated bench/verify runs don't
-    // accumulate checkpoint dirs in /tmp
-    val run = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_dimrefresh_${math.abs(dir.hashCode)}")
-    org.apache.commons.io.FileUtils.deleteDirectory(run)
-    val out = s"$run/out"
-    val q = flows.writeStream
-      .option("checkpointLocation", s"$run/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pods =
-          if (batchId == 0) podsV1
-          else podsV1.withColumn("pod_app",
-            concat(col("pod_app"), lit("-v2")))
-        FlowPipeline.run(batch, pods, nodes, prefixes, cfg)
-          .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val merged = spark.read.parquet(out).drop("batch")
-    val measures = Set("bytes", "packets", "n_obs")
-    merged.groupBy(merged.columns.filterNot(measures).map(col): _*)
-      .agg(sum("bytes").as("bytes"), sum("packets").as("packets"),
-        sum("n_obs").as("n_obs"))
+    runToTable(spark, "graft_dimrefresh_", src,
+      batchId => (
+        if (batchId == 0) podsV1
+        else podsV1.withColumn("pod_app", concat(col("pod_app"), lit("-v2"))),
+        nodes, prefixes))
+  }
+
+  /** [[start]] run to completion over an events stream; returns the
+    * flow table re-summed. Each run gets its own scratch dir (two runs
+    * of one gate may overlap), and the result is materialized so the
+    * dir can go before returning: repeated bench/verify runs leave no
+    * tables or checkpoints behind.
+    */
+  private def runToTable(spark: SparkSession, name: String,
+      events: DataFrame,
+      loadDims: Long => (DataFrame, DataFrame, DataFrame)): DataFrame = {
+    val run = java.nio.file.Files.createTempDirectory(name).toFile
+    try {
+      val flows = SyntheticFlows.flowsFromEvents(
+        events.select(col("event_id"), col("user_id"), col("ts")))
+      val q = start(flows, loadDims, FlowConfig(), s"$run/flows",
+        s"$run/outcomes", s"$run/ckpt")
+      try q.processAllAvailable() finally q.stop()
+      val summed = TxTable.resum(TxTable.read(spark, s"$run/flows"))
+        .localCheckpoint()
+      graft.ops.CacheRegistry.checkpointRdd(summed)
+        .foreach(graft.ops.CacheRegistry.trackRdd)
+      summed
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(run)
   }
 
   /** The CSV shape of one flow record on the wire for
@@ -411,50 +407,13 @@ object StreamingFlows {
     * right partition (ClickHouse, lateness bound = 90-day TTL); a
     * streaming engine must bound state, so rows later than `lateness`
     * are dropped here and belong to the batch backfill path instead
-    * (append to NetworkFlowTable + compact).
+    * (`TxTable.append` + `compact`).
     */
   def watermarkedMinuteAgg(events: DataFrame,
       lateness: String = "10 minutes"): DataFrame =
     events.withWatermark("ts", lateness)
       .groupBy(window(col("ts"), "60 seconds").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-
-  /** W8: idempotent foreachBatch sink — the Structured Streaming
-    * checkpoint + batchId play the role of the reference's
-    * `insert_deduplication_token` (worker.go:248): a retried batch
-    * overwrites its own `batch=<id>` directory instead of duplicating
-    * rows. Production target would be a Delta MERGE; plain parquet keeps
-    * the zero-dependency build.
-    *
-    * READ CONTRACT: update-mode batches are cumulative per-key SNAPSHOTS,
-    * not additive deltas — batch N re-emits a key's full running value.
-    * Never union + re-sum the `batch=*` dirs (that double-counts); read
-    * through [[readLatestPerKey]], which keeps only each key's most
-    * recent batch.
-    */
-  def startIdempotentSink(agg: DataFrame, path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    agg.writeStream.outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        df.write.mode("overwrite").parquet(s"$path/batch=$batchId")
-      }
-      .start()
-
-  /** The reader half of [[startIdempotentSink]]'s contract: resolves the
-    * upsert semantics by keeping, per key, the row from the highest
-    * batch id. `batch=<id>` dirs surface as a partition column, so the
-    * scan prunes and the per-key top-1 collapses via WindowGroupLimit.
-    */
-  def readLatestPerKey(spark: SparkSession, path: String,
-      keyCols: Seq[String]): DataFrame = {
-    val df = spark.read.option("basePath", path).parquet(path)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*).orderBy(col("batch").desc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "batch")
-  }
 
   /** W10: uptime-gated source readiness (collector.go:185-223): a
     * freshly-booted conntrack reports zero counters for a while, and
@@ -487,28 +446,6 @@ object StreamingFlows {
         e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
   }
 
-  /** W5/W6: dimension refresh without restarting the query. The
-    * reference swaps its informer caches / cloud-range trie under a
-    * RWMutex on a 10min/24h cadence (watcher.go:55, remote.go:98-126);
-    * in Spark the same effect is `foreachBatch` re-resolving the dim
-    * snapshots per micro-batch — broadcast is per-plan, so each batch
-    * builds and broadcasts the current snapshot.
-    */
-  def startWithRefreshingDims(
-      rawFlows: DataFrame,
-      loadDims: () => (DataFrame, DataFrame, DataFrame),
-      cfg: FlowConfig,
-      path: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rawFlows.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (pods, nodes, prefixes) = loadDims()
-        val summed = FlowPipeline.run(batch, pods, nodes, prefixes, cfg)
-        summed.write.mode("overwrite").parquet(s"$path/batch=$batchId")
-      }
-      .start()
-
   /** Which reference Prometheus counter each outcome feeds
     * (server.go:100-117 processedFlowsCounter/errorCounter arms;
     * remote.go:151-155 intra_cloud_empty_region; the zero/proto/
@@ -529,50 +466,65 @@ object StreamingFlows {
       .otherwise(struct(lit("collector_filtered").as("family"), o.as("label")))
   }
 
-  /** Operational metrics as DATA: alongside the summing-table write,
-    * each micro-batch overwrites its own `batch=<id>` dir in a metrics
-    * table with per-outcome counts tagged by the reference counter
-    * family — the Prometheus-scrape analog for a Spark deployment
-    * (query the table, or tail it with an exporter). Idempotent per
-    * batch like the data sink; counts come from the same routeOutcomes
-    * plan the oracle gates, so metrics and data cannot disagree.
+  /** The streaming flow job (W8, W5/W6, A5): one micro-batch of raw
+    * flows → two commits, both keyed by the batch id:
+    *  - `appendTxn` of [[FlowPipeline.run]]'s partial sums to `table`;
+    *  - `appendTxn` of per-(date, outcome) counts from the same
+    *    [[FlowPipeline.routeOutcomes]] plan the oracle gates to
+    *    `outcomesTable`, so metrics and data cannot disagree
+    *    ([[MetricsExporter]] folds them into Prometheus counters).
+    *
+    * The dims are re-resolved per micro-batch by `loadDims(batchId)` —
+    * broadcast is per-plan, so each batch builds and broadcasts the
+    * current snapshot, the reference's informer resync / range refresh
+    * (watcher.go:55, remote.go:98-126) without a restart. Keying on the
+    * batch id keeps a retried batch on the snapshot it first saw.
+    *
+    * Exactly-once: the writer id derives from the checkpoint, and each
+    * table's (writer, batch id) high-water mark turns a replayed commit
+    * into a no-op. A job that dies between the two commits replays the
+    * batch on restart; the flow commit is skipped, the outcome commit
+    * lands. Both tables hold additive deltas: read them re-summed
+    * ([[TxTable.resum]]) or after `TxTable.compact`.
     */
-  def startWithMetrics(
+  def start(
       rawFlows: DataFrame,
-      loadDims: () => (DataFrame, DataFrame, DataFrame),
+      loadDims: Long => (DataFrame, DataFrame, DataFrame),
       cfg: FlowConfig,
-      path: String,
-      metricsPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+      table: String,
+      outcomesTable: String,
+      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    val writerId = GraftStreamSink.writerIdFor(
+      Map("checkpointLocation" -> checkpoint))
     rawFlows.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (pods, nodes, prefixes) = loadDims()
-        // two actions (data sink + metrics) read the batch: persist so
-        // the second is a cache scan, not a source re-read
+        val spark = batch.sparkSession
+        val (pods, nodes, prefixes) = loadDims(batchId)
+        // two commits read the batch: persist so the second is a cache
+        // scan, not a source re-read
         batch.persist()
         try {
-          FlowPipeline.run(batch, pods, nodes, prefixes, cfg)
-            .write.mode("overwrite").parquet(s"$path/batch=$batchId")
-          FlowPipeline.routeOutcomes(pods, nodes, prefixes, cfg)(batch)
-            .groupBy("outcome").agg(count(lit(1)).as("n"))
-            .withColumn("fam", outcomeFamily)
-            .select(col("outcome"), col("n"),
-              col("fam.family").as("family"), col("fam.label").as("label"))
-            .write.mode("overwrite").parquet(s"$metricsPath/batch=$batchId")
+          TxTable.appendTxn(spark,
+            FlowPipeline.run(batch, pods, nodes, prefixes, cfg),
+            table, writerId, batchId)
+          TxTable.appendTxn(spark,
+            FlowPipeline.routeOutcomes(pods, nodes, prefixes, cfg)(batch)
+              .groupBy(to_date(col("ts")).as("date"), col("outcome"))
+              .agg(count(lit(1)).as("n")),
+            outcomesTable, writerId, batchId)
+          ()
         } finally batch.unpersist()
       }
       .start()
+  }
 
-  /** The full kubenetmon pipeline as a streaming job: stream-static
-    * broadcast joins against the dim snapshots, trie-based LPM (the
-    * range-join + window variant is unsupported on streams), explode
-    * fan-out, summing aggregation.
+  /** The full kubenetmon pipeline as a streaming job ([[start]] over
+    * the landing dir): stream-static broadcast joins against the dim
+    * snapshots, trie-based LPM, explode fan-out, per-batch summing
+    * aggregation committed to the flow table, read back re-summed.
     */
   def flowPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val flows = SyntheticFlows.flowsFromEvents(
-      eventsStream(spark, dir).select(
-        col("event_id"), col("user_id"), col("ts")))
     // dim snapshots are re-resolved per micro-batch AND per bench
     // sample; cache them for the family's lifetime (CacheManager
     // dedups by canonicalized plan, released at the family boundary)
@@ -580,9 +532,8 @@ object StreamingFlows {
     val nodes = graft.ops.CacheRegistry.track(SyntheticFlows.nodes(spark, dir))
     val prefixes = graft.ops.CacheRegistry.track(
       SyntheticFlows.prefixes(spark, dir))
-    val cfg = FlowConfig(lpmViaTrie = true)
-    val summed = FlowPipeline.run(flows, pods, nodes, prefixes, cfg)
-    runToMemory(spark, summed)
+    runToTable(spark, "graft_flowpipe_", eventsStream(spark, dir),
+      _ => (pods, nodes, prefixes))
   }
 
   /** The PRODUCTION streaming shape of the pipeline: same label/classify
@@ -590,9 +541,8 @@ object StreamingFlows {
     * APPEND mode — state is bounded by the lateness horizon and each
     * summing row is emitted exactly once, when its window closes. Rows
     * later than `lateness` belong to the batch backfill path
-    * (NetworkFlowTable append + compact). Returns the un-started
-    * aggregation; run with [[runToMemoryAppend]] or
-    * [[startIdempotentSink]].
+    * (`TxTable.append` + `compact`). Returns the un-started
+    * aggregation; run with [[runToMemoryAppend]].
     */
   def watermarkedFlowPipeline(spark: SparkSession, dir: String,
       lateness: String = "10 minutes",
@@ -604,7 +554,7 @@ object StreamingFlows {
     val nodes = graft.ops.CacheRegistry.track(SyntheticFlows.nodes(spark, dir))
     val prefixes = graft.ops.CacheRegistry.track(
       SyntheticFlows.prefixes(spark, dir))
-    val cfg = FlowConfig(lpmViaTrie = true)
+    val cfg = FlowConfig()
     val labeled = flows
       .transform(FlowPipeline.filterJunk)
       .transform(FlowPipeline.dropUdp(cfg))

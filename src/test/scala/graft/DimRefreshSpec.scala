@@ -1,10 +1,11 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.flow.{FlowConfig, RawFlow}
+import graft.sink.{GraftStreamSink, TxTable}
 import graft.streaming.StreamingFlows
 
 /** W5/W6: a rolled dimension snapshot must be picked up by the next
@@ -14,39 +15,28 @@ class DimRefreshSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  private val POD = 167772165L
-  private val PUB = 16777316L
-  private val NODE = 2886729729L
-
-  private def flow(id: Long): RawFlow =
-    RawFlow(id, new Timestamp(1700000000000L), "node-1", 6,
-      POD, PUB, 1, 2, PUB, NODE, 10L, 11L, 12L, 13L)
+  import FlowSinkFixtures.{NODE, flow}
 
   @volatile private var podApp = "app-v1"
-  private def dims(): (DataFrame, DataFrame, DataFrame) = (
-    Seq(("pod-a", "ns-a", POD, "node-1", podApp, "inst-0"))
-      .toDF("pod_name", "pod_namespace", "pod_ip", "pod_node", "pod_app",
-        "pod_instance"),
-    Seq(("node-1", NODE, "az-1"))
-      .toDF("node_id", "node_internal_ip", "node_zone"),
-    Seq((16777216L, 16779263L, 21, "aws", "region-1", "svc-a"))
-      .toDF("p_start", "p_end", "p_len", "p_cloud", "p_region", "p_service"))
+  private def dims() = FlowSinkFixtures.dims(spark, podApp)
+  private def batchRows(table: String, v: Long) =
+    FlowSinkFixtures.batchRows(spark, table, v)
 
   test("foreachBatch re-resolves dims: batch 2 sees the rolled snapshot") {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[RawFlow]
     val tmp = java.nio.file.Files.createTempDirectory("graft_dimref").toString
-    val q = StreamingFlows.startWithRefreshingDims(
-      ms.toDF(), dims _, FlowConfig(), s"$tmp/out", s"$tmp/ckpt")
+    val q = StreamingFlows.start(ms.toDF(), _ => dims(), FlowConfig(),
+      s"$tmp/out", s"$tmp/outcomes", s"$tmp/ckpt")
     try {
       ms.addData(flow(1))
       q.processAllAvailable()
       podApp = "app-v2" // the informer cache rolls
       ms.addData(flow(2))
       q.processAllAvailable()
-      val b0 = spark.read.parquet(s"$tmp/out/batch=0")
+      val b0 = batchRows(s"$tmp/out", 0)
         .select("local_app").distinct().as[String].collect().toSet
-      val b1 = spark.read.parquet(s"$tmp/out/batch=1")
+      val b1 = batchRows(s"$tmp/out", 1)
         .select("local_app").distinct().as[String].collect().toSet
       assert(b0 == Set("app-v1"))
       assert(b1 == Set("app-v2"), "second batch must see the new snapshot")
@@ -83,9 +73,9 @@ class DimRefreshSpec extends AnyFunSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val ms = MemoryStream[RawFlow]
     val tmp = java.nio.file.Files.createTempDirectory("graft_metrics").toString
-    val q = StreamingFlows.startWithMetrics(
-      ms.toDF(), dims _, FlowConfig(), s"$tmp/out", s"$tmp/metrics",
-      s"$tmp/ckpt")
+    val metrics = s"$tmp/metrics"
+    val q = StreamingFlows.start(ms.toDF(), _ => dims(), FlowConfig(),
+      s"$tmp/out", metrics, s"$tmp/ckpt")
     try {
       // batch 0: one labelable flow + one UDP flow
       ms.addData(flow(1), flow(2).copy(proto = 17))
@@ -93,39 +83,40 @@ class DimRefreshSpec extends AnyFunSuite {
       // batch 1: a node flow (orig src = node internal IP)
       ms.addData(flow(3).copy(orig_src_ip = NODE))
       q.processAllAvailable()
-      val m0 = spark.read.parquet(s"$tmp/metrics/batch=0")
+      val m0 = batchRows(metrics, 0)
+        .withColumn("fam", StreamingFlows.outcomeFamily)
         .collect().map(r => r.getAs[String]("outcome") ->
-          (r.getAs[Long]("n"), r.getAs[String]("family"),
-            r.getAs[String]("label"))).toMap
+          (r.getAs[Long]("n"), r.getAs[Row]("fam").getString(0),
+            r.getAs[Row]("fam").getString(1))).toMap
       assert(m0("labeled") == ((1L, "processed_flows", "enqueued")))
       assert(m0("ignored_udp") == ((1L, "processed_flows", "ignored")))
-      val m1 = spark.read.parquet(s"$tmp/metrics/batch=1")
+      val m1 = batchRows(metrics, 1)
         .collect().map(r => r.getAs[String]("outcome") ->
           r.getAs[Long]("n")).toMap
       assert(m1 == Map("ignored_node_flow" -> 1L),
         "each batch reports exactly its own outcomes")
       // counters and data sink derive from one taxonomy: labeled rows
       // in metrics == fan-out-source rows in the summing table
-      val sunk = spark.read.parquet(s"$tmp/out/batch=0")
+      val sunk = batchRows(s"$tmp/out", 0)
         .agg(org.apache.spark.sql.functions.sum("n_obs")).collect().head.getLong(0)
       assert(sunk == 2 * m0("labeled")._1, "out+in fan-out of each labeled flow")
       // the exporter folds per-batch deltas into cumulative Prometheus
       // counters (server.go:100-117 counter families)
-      val cum = graft.streaming.MetricsExporter.counters(spark, s"$tmp/metrics")
+      val cum = graft.streaming.MetricsExporter.counters(spark, metrics)
         .collect().map(r => (r.getAs[String]("family"),
           r.getAs[String]("label")) -> r.getAs[Long]("value")).toMap
       assert(cum == Map(
         ("processed_flows", "enqueued") -> 1L,
         ("processed_flows", "ignored") -> 2L))
       val text = graft.streaming.MetricsExporter.render(
-        graft.streaming.MetricsExporter.counters(spark, s"$tmp/metrics"))
+        graft.streaming.MetricsExporter.counters(spark, metrics))
       assert(text.split("\n").toSeq == Seq(
         """graft_processed_flows_total{label="enqueued"} 1""",
         """graft_processed_flows_total{label="ignored"} 2"""))
       // ...and the same payload over a REAL HTTP scrape (server.go's
       // /metrics surface): fresh counters per request, text format
       val srv = graft.streaming.MetricsExporter.serve(
-        () => graft.streaming.MetricsExporter.counters(spark, s"$tmp/metrics"))
+        () => graft.streaming.MetricsExporter.counters(spark, metrics))
       try {
         val port = srv.getAddress.getPort
         val conn = new java.net.URL(s"http://127.0.0.1:$port/metrics")
@@ -155,13 +146,13 @@ class DimRefreshSpec extends AnyFunSuite {
     import graft.flow.{FlowPipeline, SyntheticFlows}
     val tmp = java.nio.file.Files.createTempDirectory("graft_mexp").toString
     val dir = sf
-    val cfg = FlowConfig(lpmViaTrie = true)
+    val cfg = FlowConfig()
     val stream = SyntheticFlows.flowsFromEvents(
       StreamingFlows.eventsStream(spark, dir)
         .select(col("event_id"), col("user_id"), col("ts")))
     def loadDims() = (SyntheticFlows.pods(spark, dir),
       SyntheticFlows.nodes(spark, dir), SyntheticFlows.prefixes(spark, dir))
-    val q = StreamingFlows.startWithMetrics(stream, loadDims _, cfg,
+    val q = StreamingFlows.start(stream, _ => loadDims(), cfg,
       s"$tmp/out", s"$tmp/metrics", s"$tmp/ckpt")
     try q.processAllAvailable() finally q.stop()
     val got = graft.streaming.MetricsExporter
@@ -176,5 +167,62 @@ class DimRefreshSpec extends AnyFunSuite {
         r.getAs[Long]("count")).toMap
     assert(got == want,
       "cumulative streamed counters must equal the batch taxonomy")
+  }
+
+  test("a job that dies between the flow and the outcome commit replays " +
+    "the batch: its flows land once and the counters stay exact") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.Encoders
+    import graft.flow.FlowPipeline
+    val tmp = Files.createTempDirectory("graft_crash2").toString
+    val (in, flows, outcomes, ckpt) =
+      (s"$tmp/in", s"$tmp/flows", s"$tmp/outcomes", s"$tmp/ckpt")
+    def addFile(name: String, rs: Seq[RawFlow]): Unit =
+      rs.toDF().coalesce(1).write.parquet(s"$in/$name")
+    def run() = StreamingFlows.start(
+      spark.readStream.schema(Encoders.product[RawFlow].schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$in/*"),
+      _ => dims(), FlowConfig(), flows, outcomes, ckpt)
+    val f0 = Seq(flow(1), flow(2).copy(proto = 17))
+    val f1 = Seq(flow(3), flow(4).copy(orig_src_ip = NODE))
+    addFile("f0", f0)
+    val q1 = run()
+    try {
+      q1.processAllAvailable()
+      // batch 1's outcome commit cannot land: a plain file squats on the
+      // outcome table's path, so the job dies right after the flow commit
+      Files.move(Paths.get(outcomes), Paths.get(s"$tmp/aside"))
+      Files.createFile(Paths.get(outcomes))
+      addFile("f1", f1)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q1.processAllAvailable())
+    } finally q1.stop()
+    assert(TxTable.currentVersion(spark, flows) == 1L,
+      "batch 1's flow commit landed before the crash")
+    assert(TxTable.currentVersion(spark, s"$tmp/aside") == 0L)
+    Files.delete(Paths.get(outcomes))
+    Files.move(Paths.get(s"$tmp/aside"), Paths.get(outcomes))
+    // restart over the same checkpoint: batch 1 replays
+    val q2 = run()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(TxTable.currentVersion(spark, flows) == 1L,
+      "the replayed flow commit must not land again")
+    assert(TxTable.currentVersion(spark, outcomes) == 1L,
+      "the replayed outcome commit lands")
+    val wid = GraftStreamSink.writerIdFor(Map("checkpointLocation" -> ckpt))
+    assert(TxTable.appendTxn(spark, TxTable.read(spark, flows), flows,
+      wid, 1L) == -1L, "batch 1 is under the writer's mark")
+    val all = (f0 ++ f1).toDF()
+    val (p, n, px) = dims()
+    val want = FlowPipeline.run(all, p, n, px)
+    assert(FlowSinkFixtures.rows(FlowSinkFixtures.summed(spark, flows), want) ==
+      FlowSinkFixtures.rows(want, want), "batch 1's flows counted once")
+    val got = graft.streaming.MetricsExporter.countersByOutcome(spark, outcomes)
+      .collect().map(r => r.getAs[String]("outcome") -> r.getAs[Long]("value"))
+      .toMap
+    val expected = FlowPipeline.routeOutcomes(p, n, px, FlowConfig())(all)
+      .groupBy("outcome").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == expected)
   }
 }

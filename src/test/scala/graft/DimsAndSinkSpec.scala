@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dims.CloudRanges
-import graft.flow.SyntheticFlows
+import graft.flow.{FlowConfig, FlowPipeline, RawFlow, SyntheticFlows}
+import graft.sink.{GraftStreamSink, TxTable}
 import graft.streaming.StreamingFlows
 
 class DimsAndSinkSpec extends AnyFunSuite {
@@ -155,105 +157,96 @@ class DimsAndSinkSpec extends AnyFunSuite {
     assert(got(0).isNullAt(got(0).fieldIndex("service_name")))
   }
 
-  test("W8: idempotent foreachBatch sink writes per-batch dirs; A5 counts") {
+  /** A raw-flow file source over `in`, one file per micro-batch. */
+  private def flowFiles(in: String) =
+    spark.readStream.schema(Encoders.product[RawFlow].schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$in/*")
+
+  private def addFlows(in: String, name: String, rows: Seq[RawFlow]): Unit =
+    rows.toDF().coalesce(1).write.parquet(s"$in/$name")
+
+  /** Flows counted by each of the first `versions` outcome commits. */
+  private def batchTotals(outcomes: String, versions: Int): Seq[Long] =
+    (0 until versions).map(v => FlowSinkFixtures.batchRows(spark, outcomes, v)
+      .agg(sum("n")).collect().head.getLong(0))
+
+  test("W8: idempotent foreachBatch sink commits once per micro-batch; " +
+    "A5 counts") {
     val listener = new StreamingFlows.RecordCountListener
     spark.streams.addListener(listener)
     try {
       val tmp = java.nio.file.Files.createTempDirectory("graft_w8").toString
-      val agg = StreamingFlows.eventsStream(spark, sf)
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-      val q = StreamingFlows.startIdempotentSink(
-        agg, s"$tmp/out", s"$tmp/ckpt")
+      val (out, ckpt) = (s"$tmp/out", s"$tmp/ckpt")
+      val dims = (SyntheticFlows.pods(spark, sf), SyntheticFlows.nodes(spark, sf),
+        SyntheticFlows.prefixes(spark, sf))
+      val flows = SyntheticFlows.flowsFromEvents(StreamingFlows
+        .eventsStream(spark, sf).select(col("event_id"), col("user_id"), col("ts")))
+      val q = StreamingFlows.start(flows, _ => dims, FlowConfig(), out,
+        s"$tmp/outcomes", ckpt)
       try q.processAllAvailable() finally q.stop()
-      // the landing dir arrives as one snapshot file per micro-batch;
-      // update-mode batches are cumulative per-key snapshots, so the
-      // reader contract (latest batch per key) reconstructs the totals
-      val written = StreamingFlows.readLatestPerKey(
-        spark, s"$tmp/out", Seq("event_type"))
-      val batch = Tables.events(spark, sf)
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-      assert(written.orderBy("event_type").collect()
-        .sameElements(batch.orderBy("event_type").collect()))
+      // the landing dir arrives as one snapshot file per micro-batch,
+      // and each batch is one marked append of its partial sums
+      assert(TxTable.history(spark, out)
+        .filter(col("operation") === "append").count() ==
+        StreamingFlows.LandingFiles)
+      // additive deltas: re-summed, the commits equal the batch pipeline
+      val (p, n, px) = dims
+      val batch = FlowPipeline.run(SyntheticFlows.flows(spark, sf), p, n, px)
+      assert(FlowSinkFixtures.rows(FlowSinkFixtures.summed(spark, out), batch) ==
+        FlowSinkFixtures.rows(batch, batch))
+      // a replayed batch is swallowed by the writer's mark
+      val wid = GraftStreamSink.writerIdFor(Map("checkpointLocation" -> ckpt))
+      assert(TxTable.appendTxn(spark, batch, out, wid, 0L) == -1L)
       // A5: every input record accounted for
       assert(listener.rows.get() == Tables.events(spark, sf).count())
     } finally spark.streams.removeListener(listener)
   }
 
   test("W8: checkpoint recovery — restarted query resumes, no reprocessing") {
+    import FlowSinkFixtures.flow
     val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val in = s"$tmp/in"
-    def addFile(name: String, rows: Seq[(Long, String)]): Unit =
-      rows.toDF("v", "k").write.parquet(s"$in/$name")
-    addFile("f1", Seq((1L, "a"), (2L, "a"), (3L, "b")))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.StringType)))
-    def agg = spark.readStream.schema(schema).parquet(s"$in/*")
-      .groupBy("k").agg(count(lit(1)).as("n"))
-    val q1 = StreamingFlows.startIdempotentSink(agg, s"$tmp/out", s"$tmp/ck")
+    val (in, out, outcomes) = (s"$tmp/in", s"$tmp/out", s"$tmp/outcomes")
+    def run() = StreamingFlows.start(flowFiles(in),
+      _ => FlowSinkFixtures.dims(spark), FlowConfig(), out, outcomes,
+      s"$tmp/ck")
+    addFlows(in, "f1", Seq(flow(1), flow(2)))
+    val q1 = run()
     try q1.processAllAvailable() finally q1.stop()
-    addFile("f2", Seq((4L, "a")))
+    addFlows(in, "f2", Seq(flow(3)))
     // a NEW query over the same checkpoint picks up where the first left off
-    val q2 = StreamingFlows.startIdempotentSink(agg, s"$tmp/out", s"$tmp/ck")
+    val q2 = run()
     try q2.processAllAvailable() finally q2.stop()
-    val b0 = spark.read.parquet(s"$tmp/out/batch=0")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val b1 = spark.read.parquet(s"$tmp/out/batch=1")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(b0 == Map("a" -> 2L, "b" -> 1L))
-    // update mode after recovery: only 'a' changed, state carried over
-    assert(b1 == Map("a" -> 3L))
-    // READ CONTRACT: batches are cumulative per-key snapshots. A naive
-    // union + re-sum would double-count 'a' (2 + 3); the latest-batch-
-    // per-key reader resolves the upsert correctly.
-    val naive = spark.read.option("basePath", s"$tmp/out")
-      .parquet(s"$tmp/out")
-      .groupBy("k").agg(sum("n").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(naive("a") == 5L, "demonstrates why union-readers are wrong")
-    val latest = StreamingFlows.readLatestPerKey(spark, s"$tmp/out", Seq("k"))
-      .collect().map(r => r.getAs[String]("k") -> r.getAs[Long]("n")).toMap
-    assert(latest == Map("a" -> 3L, "b" -> 1L))
+    assert(TxTable.currentVersion(spark, out) == 1L, "one commit per batch")
+    assert(batchTotals(outcomes, 2) == Seq(2L, 1L),
+      "batch 1 saw only f2: f1 was not reprocessed")
+    // the three flows share one key per direction: n_obs sums across
+    // the two commits
+    assert(FlowSinkFixtures.summed(spark, out).select("n_obs").as[Long]
+      .collect().toSeq == Seq(3L, 3L))
   }
 
   test("W2: multi-file arrival — each drop becomes its own micro-batch") {
+    import FlowSinkFixtures.flow
     val tmp = java.nio.file.Files.createTempDirectory("graft_arrival").toString
-    val in = s"$tmp/in"
-    def addFile(name: String, rows: Seq[(Long, String)]): Unit =
-      rows.toDF("v", "k").coalesce(1).write.parquet(s"$in/$name")
-    addFile("f1", Seq((1L, "a"), (2L, "b")))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.StringType)))
+    val (in, out, outcomes) = (s"$tmp/in", s"$tmp/out", s"$tmp/outcomes")
+    val drops = Seq(Seq(flow(1), flow(2)), Seq(flow(3).copy(proto = 17)),
+      Seq(flow(4, remote = FlowSinkFixtures.PUB2)))
     // 5s-dump cadence analog: one conntrack snapshot file per trigger
-    val agg = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$in/*")
-      .groupBy("k").agg(count(lit(1)).as("n"))
-    val q = StreamingFlows.startIdempotentSink(agg, s"$tmp/out", s"$tmp/ck")
-    try {
-      q.processAllAvailable()
-      addFile("f2", Seq((3L, "a")))
-      q.processAllAvailable()
-      addFile("f3", Seq((4L, "c")))
+    val q = StreamingFlows.start(flowFiles(in),
+      _ => FlowSinkFixtures.dims(spark), FlowConfig(), out, outcomes,
+      s"$tmp/ck")
+    try drops.zipWithIndex.foreach { case (d, i) =>
+      addFlows(in, s"f$i", d)
       q.processAllAvailable()
     } finally q.stop()
-    val batches = new java.io.File(s"$tmp/out").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).sorted
-    // one micro-batch per file (a trailing empty finalizer batch may follow)
-    assert(batches.length >= 3, s"3 files -> >=3 micro-batches: ${batches.toSeq}")
-    val b0 = spark.read.parquet(s"$tmp/out/batch=0")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val b1 = spark.read.parquet(s"$tmp/out/batch=1")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(b0 == Map("a" -> 1L, "b" -> 1L), "batch 0 saw only the first file")
-    assert(b1 == Map("a" -> 2L), "batch 1 emitted only the key f2 changed")
-    val latest = StreamingFlows.readLatestPerKey(spark, s"$tmp/out", Seq("k"))
-      .collect().map(r => r.getAs[String]("k") -> r.getAs[Long]("n")).toMap
-    assert(latest == Map("a" -> 2L, "b" -> 1L, "c" -> 1L),
+    assert(TxTable.currentVersion(spark, outcomes) == 2L,
+      "3 files -> 3 micro-batches")
+    assert(batchTotals(outcomes, 3) == Seq(2L, 1L, 1L),
+      "each batch counted exactly its own file")
+    val (p, n, px) = FlowSinkFixtures.dims(spark)
+    val want = FlowPipeline.run(drops.flatten.toDF(), p, n, px)
+    assert(FlowSinkFixtures.rows(FlowSinkFixtures.summed(spark, out), want) ==
+      FlowSinkFixtures.rows(want, want),
       "incremental processing accumulates across arrivals")
   }
 

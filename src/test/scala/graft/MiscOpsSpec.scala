@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.flow.{FlowConfig, FlowPipeline, Ipv4Trie, SyntheticFlows}
+import graft.flow.{FlowPipeline, Ipv4Trie, SyntheticFlows}
 import graft.functions.TopKTalkers
 import graft.multimodal.MediaOps
-import graft.sink.NetworkFlowTable
+import graft.sink.TxTable
 
 class MiscOpsSpec extends AnyFunSuite {
   import TestSpark._
@@ -20,16 +20,35 @@ class MiscOpsSpec extends AnyFunSuite {
     assert(trie.lookup(33554432L) == -1)  // 2.0.0.0 -> miss
   }
 
-  test("LPM via trie == LPM via range join on the synthetic corpus") {
-    val cfgRange = FlowConfig(lpmViaTrie = false)
-    val cfgTrie = FlowConfig(lpmViaTrie = true)
-    def run(cfg: FlowConfig) = {
-      val summed = FlowPipeline.run(
-        SyntheticFlows.flows(spark, sf), SyntheticFlows.pods(spark, sf),
-        SyntheticFlows.nodes(spark, sf), SyntheticFlows.prefixes(spark, sf), cfg)
-      summed.orderBy(FlowPipeline.dimensionKey.map(col): _*).collect().toSeq
-    }
-    assert(run(cfgRange) == run(cfgTrie))
+  test("LPM keeps every observation of a recurring flow_id, each with " +
+    "its own prefix") {
+    import spark.implicits._
+    // one connection id seen in two dumps, its reply source moved from
+    // a region-1 prefix to a region-2 one: a per-flow_id top-1 would
+    // keep only one of the two observations
+    val (pod, node) = (167772165L, 2886729729L)
+    val (pubA, pubB) = (16777316L, 33554437L) // 1.0.0.100, 2.0.0.5
+    val pods = Seq(("pod-a", "ns-a", pod, "node-1", "app", "inst-0"))
+      .toDF("pod_name", "pod_namespace", "pod_ip", "pod_node", "pod_app",
+        "pod_instance")
+    val nodes = Seq(("node-1", node, "az-1"))
+      .toDF("node_id", "node_internal_ip", "node_zone")
+    val prefixes = Seq(
+      (16777216L, 16779263L, 21, "aws", "region-1", "svc-a"),
+      (33554432L, 33619967L, 16, "aws", "region-2", "svc-b"))
+      .toDF("p_start", "p_end", "p_len", "p_cloud", "p_region", "p_service")
+    def obs(tsMs: Long, remote: Long) = graft.flow.RawFlow(7L,
+      new java.sql.Timestamp(tsMs), "node-1", 6, pod, remote, 1, 2,
+      remote, node, 10L, 11L, 12L, 13L)
+    val flows = Seq(obs(1700000000000L, pubA), obs(1700000120000L, pubB)).toDF()
+    val got = FlowPipeline.run(flows, pods, nodes, prefixes)
+      .filter(col("direction") === "out")
+      .select("remote_ip", "remote_region", "remote_service",
+        "connection_class", "n_obs")
+      .as[(Long, String, String, String, Long)].collect().toSet
+    assert(got == Set(
+      (pubA, "region-1", "svc-a", "INTRA_REGION", 1L),
+      (pubB, "region-2", "svc-b", "INTER_REGION", 1L)))
   }
 
   test("sink: partitioned write, sorted clustering, TTL partition drop") {
@@ -37,26 +56,22 @@ class MiscOpsSpec extends AnyFunSuite {
       SyntheticFlows.flows(spark, sf), SyntheticFlows.pods(spark, sf),
       SyntheticFlows.nodes(spark, sf), SyntheticFlows.prefixes(spark, sf))
     val path = java.nio.file.Files
-      .createTempDirectory("graft_sink_spec").toString
-    NetworkFlowTable.write(summed, path)
-    val dates = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("date=")).map(_.getName).sorted
-    assert(dates.nonEmpty, "partitioned by date")
-    val back = NetworkFlowTable.read(spark, path)
+      .createTempDirectory("graft_sink_spec").toString + "/t"
+    TxTable.append(spark, summed, path)
+    val dates = TxTable.liveFiles(spark, path).values.map(_._1)
+      .toSeq.distinct.sorted
+    assert(dates.length > 1, "partitioned by date")
+    val back = TxTable.read(spark, path)
     assert(back.count() == summed.count())
-    // a stray subdir (crashed-write leftover) must not survive the drop
-    val stray = new java.io.File(
-      s"$path/${dates.head}/_temporary/task").toPath
-    java.nio.file.Files.createDirectories(stray)
-    // TTL: drop everything before the last date
-    val lastDate = dates.last.stripPrefix("date=")
-    val dropped = NetworkFlowTable.retentionDelete(spark, path,
-      java.time.LocalDate.parse(lastDate))
-    assert(dropped.size == dates.length - 1)
-    assert(!new java.io.File(s"$path/${dates.head}").exists(),
-      "expired partition fully removed despite nested subdirs")
-    assert(NetworkFlowTable.read(spark, path)
-      .select("date").distinct().count() == 1)
+    // clustered: no file spans two dates
+    val perFile = back.withColumn("f", input_file_name())
+      .groupBy("f").agg(countDistinct("date").as("nd"))
+    assert(perFile.filter(col("nd") > 1).isEmpty, "one date per file")
+    // TTL: drop everything before the last date, metadata-only
+    val dropped = TxTable.retention(spark, path,
+      java.time.LocalDate.parse(dates.last))
+    assert(dropped == dates.init)
+    assert(TxTable.read(spark, path).select("date").distinct().count() == 1)
   }
 
   test("typed surface: summing table rows bind to Dataset[NetworkFlowRow]") {
@@ -79,14 +94,13 @@ class MiscOpsSpec extends AnyFunSuite {
       SyntheticFlows.nodes(spark, sf), SyntheticFlows.prefixes(spark, sf))
     val path = java.nio.file.Files
       .createTempDirectory("graft_compact_spec").toString + "/t"
-    NetworkFlowTable.write(summed, path)
-    NetworkFlowTable.write(summed, path,
-      org.apache.spark.sql.SaveMode.Append)
+    TxTable.append(spark, summed, path)
+    TxTable.append(spark, summed, path)
     val n = summed.count()
     val bytes = summed.agg(sum("bytes")).collect().head.getLong(0)
-    assert(NetworkFlowTable.read(spark, path).count() == 2 * n)
-    NetworkFlowTable.compact(spark, path)
-    val after = NetworkFlowTable.read(spark, path)
+    assert(TxTable.read(spark, path).count() == 2 * n)
+    TxTable.compact(spark, path)
+    val after = TxTable.read(spark, path)
     assert(after.count() == n, "duplicate keys collapsed")
     assert(after.agg(sum("bytes")).collect().head.getLong(0) == 2 * bytes,
       "sums preserved (doubled input)")
@@ -94,56 +108,15 @@ class MiscOpsSpec extends AnyFunSuite {
     // other partitions keep their duplicates (they were not rewritten)
     val perDate = after.groupBy("date").count()
       .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    NetworkFlowTable.write(summed, path, org.apache.spark.sql.SaveMode.Append)
-    val dates = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("date="))
-      .map(_.getName.stripPrefix("date=")).sorted
+    TxTable.append(spark, summed, path)
+    val dates = perDate.keys.toSeq.sorted
     assert(dates.length > 1, "test needs multiple date partitions")
-    NetworkFlowTable.compact(spark, path, Some(Seq(dates.head)))
-    val byDate = NetworkFlowTable.read(spark, path).groupBy("date").count()
+    TxTable.compact(spark, path, Some(Seq(dates.head)))
+    val byDate = TxTable.read(spark, path).groupBy("date").count()
       .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
     assert(byDate(dates.head) == perDate(dates.head), "scoped date collapsed")
     assert(dates.tail.forall(d => byDate(d) == 2 * perDate(d)),
       "unscoped dates left untouched")
-  }
-
-  test("compaction crash windows roll forward without data loss") {
-    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-    val summed = FlowPipeline.run(
-      SyntheticFlows.flows(spark, sf), SyntheticFlows.pods(spark, sf),
-      SyntheticFlows.nodes(spark, sf), SyntheticFlows.prefixes(spark, sf))
-    val path = Files.createTempDirectory("graft_crash_spec").toString + "/t"
-    NetworkFlowTable.write(summed, path)
-    val n = summed.count()
-    val dates = new java.io.File(path).listFiles()
-      .filter(_.getName.startsWith("date=")).map(_.getName).sorted
-    assert(dates.length >= 2)
-    def cpTree(src: Path, dst: Path): Unit = {
-      Files.walk(src).forEach { s =>
-        val d = dst.resolve(src.relativize(s))
-        if (Files.isDirectory(s)) Files.createDirectories(d)
-        else Files.copy(s, d, StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    val d0 = dates(0).stripPrefix("date=")
-    val d1 = dates(1).stripPrefix("date=")
-    // crash BETWEEN the renames: live gone, _old_ + complete _compacting_
-    cpTree(Paths.get(path, s"date=$d0"), Paths.get(path, s"_compacting_$d0"))
-    Files.move(Paths.get(path, s"date=$d0"), Paths.get(path, s"_old_$d0"))
-    // crash BEFORE the aside rename: live intact, stale _compacting_
-    cpTree(Paths.get(path, s"date=$d1"), Paths.get(path, s"_compacting_$d1"))
-    NetworkFlowTable.recoverMaintenance(spark, path)
-    val names = new java.io.File(path).listFiles().map(_.getName).toSet
-    assert(!names.exists(_.startsWith("_old_")), "aside dirs cleaned")
-    assert(!names.exists(_.startsWith("_compacting_")), "staging cleaned")
-    assert(names.contains(s"date=$d0") && names.contains(s"date=$d1"))
-    assert(NetworkFlowTable.read(spark, path).count() == n,
-      "no rows lost across either crash window")
-    // crash mid-cleanup: swap committed, only _old_ left behind
-    cpTree(Paths.get(path, s"date=$d0"), Paths.get(path, s"_old_$d0"))
-    NetworkFlowTable.recoverMaintenance(spark, path)
-    assert(!new java.io.File(path, s"_old_$d0").exists())
-    assert(NetworkFlowTable.read(spark, path).count() == n)
   }
 
   test("F8 ambiguity: >1 pod per IP becomes an error outcome row") {

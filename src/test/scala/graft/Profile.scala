@@ -40,20 +40,13 @@ object Profile {
       .transform(FlowPipeline.resolveDirection(p, n))
       .transform(FlowPipeline.dropUnlabeled)
     t("labeled")(labeled.count())
-    // trie is the default — the range variant must be asked for explicitly
-    val classified = labeled.transform(
-      FlowPipeline.classify(px, cfg.copy(lpmViaTrie = false)))
-    t("classified(range)")(classified.count())
-    val classifiedT = labeled.transform(
-      FlowPipeline.classify(px, cfg.copy(lpmViaTrie = true)))
-    t("classified(trie)")(classifiedT.count())
-    t("fanned(range)")(FlowPipeline.fanOut(classified).count())
-    val summedR = FlowPipeline.summarize(FlowPipeline.fanOut(classified))
-    t("summed(range)")(summedR.count())
-    val summedT = FlowPipeline.summarize(FlowPipeline.fanOut(classifiedT))
-    t("summed(trie)")(summedT.count())
+    val classified = labeled.transform(FlowPipeline.classify(px, cfg))
+    t("classified")(classified.count())
+    t("fanned")(FlowPipeline.fanOut(classified).count())
+    val summed = FlowPipeline.summarize(FlowPipeline.fanOut(classified))
+    t("summed")(summed.count())
     if (args.contains("--explain")) {
-      println(summedR.queryExecution.executedPlan.toString.take(8000))
+      println(summed.queryExecution.executedPlan.toString.take(8000))
     }
     spark.stop()
   }

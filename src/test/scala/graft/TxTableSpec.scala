@@ -1,11 +1,10 @@
 package graft
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.flow.{FlowPipeline, SyntheticFlows}
-import graft.sink.{BloomStore, NetworkFlowTable, TxTable}
+import graft.sink.{BloomStore, TxTable}
 
 /** The object-store commit-log variant of the summing table (S6/W7 on
   * stores without atomic rename): immutable data files + one atomic log
@@ -25,21 +24,21 @@ class TxTableSpec extends AnyFunSuite {
       val bytes = s.agg(sum("bytes")).collect().head.getLong(0)
       val path = java.nio.file.Files
         .createTempDirectory("graft_tx").toString + "/t"
-      assert(NetworkFlowTable.writeTx(spark, s, path) == 0L)
+      assert(TxTable.append(spark, s, path) == 0L)
       val back = TxTable.read(spark, path)
       assert(back.count() == n)
       assert(back.columns.toSet == s.columns.toSet,
         "date column re-attached from log metadata")
       assert(back.schema("date").dataType.typeName == "date")
       // append = one more commit, both file sets live
-      assert(NetworkFlowTable.writeTx(spark, s, path, SaveMode.Append) == 1L)
+      assert(TxTable.append(spark, s, path) == 1L)
       assert(TxTable.read(spark, path).count() == 2 * n)
       // a crashed writer's staged-but-never-committed files are invisible
       s.limit(5).write.partitionBy("date").parquet(s"$path/d-orphan000")
       assert(TxTable.read(spark, path).count() == 2 * n,
         "unreferenced data files must not surface")
       // compaction: one commit swaps duplicates for the re-summed set
-      NetworkFlowTable.compactTx(spark, path)
+      TxTable.compact(spark, path)
       val compacted = TxTable.read(spark, path)
       assert(compacted.count() == n, "duplicate keys collapsed")
       assert(compacted.agg(sum("bytes")).collect().head.getLong(0) == 2 * bytes,
@@ -69,7 +68,7 @@ class TxTableSpec extends AnyFunSuite {
       assert(dates.length >= 2, "test needs multiple date partitions")
       val before = TxTable.vacuum(spark, path, 0L) // clean slate
       assert(before.isEmpty)
-      val dropped = NetworkFlowTable.retentionTx(spark, path,
+      val dropped = TxTable.retention(spark, path,
         java.time.LocalDate.parse(dates.last))
       assert(dropped == dates.init)
       assert(TxTable.read(spark, path)
