@@ -52,36 +52,28 @@ object Bench {
     java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 
+  /** Advisory shuffle partition size of the local bench and oracle
+    * sessions. With `parallelismFirst=false` (set by [[Graft.session]])
+    * it governs how far AQE coalesces small shuffles. 4 MB won the
+    * full-suite A/B against stock AQE and 2 MB did not beat it
+    * (OPTIMIZATION_r17.md Fix 5).
+    */
+  private val AdvisoryPartitionSize = "4m"
+
+  /** The session the bench times, the oracle dump (Verify) checks and
+    * the profiling tools inspect: [[Graft.session]] on `local[cpus]`
+    * with the local advisory size and no UI.
+    */
+  def session(cpus: Int, appName: String): SparkSession =
+    Graft.session(s"local[$cpus]", appName, cpus, Map(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        AdvisoryPartitionSize,
+      "spark.ui.enabled" -> "false"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.hadoop.fs.file.impl", sys.env.getOrElse(
-        "SPARK_GRAFT_LOCAL_FS", // A/B seam; default = no chmod fork
-        "graft.ops.FastLocalFileSystem"))
-      // the FileContext twin: streaming checkpoints/WAL/state stores
-      // resolve fs.AbstractFileSystem.*, not fs.* (same A/B seam)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_AFS", "graft.ops.FastLocalFs"))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // SIZE-adaptive shuffle coalescing (guide §2): with the default
-      // parallelismFirst=true AQE keeps ~defaultParallelism partitions
-      // however small the data, so every tiny stage pays per-task
-      // plan-deserialization × cores (measured ~130ms/task on the
-      // write gates). false = the advisory target governs — few tasks
-      // for small shuffles, thousands for 100 TB ones (Spark's own
-      // cluster recommendation). Advisory is parameterized: local
-      // default keeps mid-size shuffles parallel at bench SFs; raise
-      // to 64-256m on real clusters.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "4") + "m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session(cpus.toInt, "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     // the timed action must evaluate EVERY output column — `.count()`

@@ -115,13 +115,8 @@ object Tables {
 
   def documents(s: SparkSession, d: String): DataFrame =
     loadCanonical(s, d, "documents")
-  def embeddings(s: SparkSession, d: String): DataFrame = {
-    // every similarity-search consumer of this table folds quantized
-    // vectors with aggregate(zip_with(...)) HOFs — arm the native
-    // rewrite (idempotent) so those folds run codegen'd
-    graft.functions.RewriteVectorFolds.ensureInstalled(s)
+  def embeddings(s: SparkSession, d: String): DataFrame =
     loadCanonical(s, d, "embeddings")
-  }
 
   /** Register every table as a temp view for the SQL surface, routing
     * through the schema-normalizing loaders (`events` additionally

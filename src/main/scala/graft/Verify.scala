@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,22 +8,8 @@ object Verify {
     // optional extra args: restrict to named queries (local iteration)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.hadoop.fs.file.impl",
-        "graft.ops.FastLocalFileSystem") // no per-file chmod fork
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.ops.FastLocalFs") // FileContext twin (checkpoints/WAL)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // size-adaptive AQE coalescing, same settings as Bench (the
-      // oracle must cover the configuration the bench runs under)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "4") + "m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the configuration the bench times: the oracle must cover it
+    val spark = Bench.session(cpus.toInt, "graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

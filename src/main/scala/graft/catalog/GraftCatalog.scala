@@ -60,17 +60,19 @@ import graft.sink.{GraftMicroBatchStream, GraftParquetReaderFactory,
   * syntax (`INSERT INTO t (date, k, v)`) to be order-independent.
   *
   * Two read paths, chosen by what the session has:
-  *  - With `spark.sql.extensions=graft.functions.GraftExtensions`, an
-  *    analyzer rule ([[GraftCatalogRelations]]) swaps the v2 relation
-  *    for the SAME planner-owned `HadoopFsRelation` the path API
-  *    reads through — native vectorized parquet scan, log-driven
-  *    pruning, whole-stage codegen. This is the recommended posture.
-  *  - Without extensions, reads fall back to the public `V1Scan`
-  *    bridge: column pruning and filter pushdown still negotiate at
-  *    the v2 `ScanBuilder`, but rows materialize through an
-  *    `RDD[Row]` (no vectorization) — correct everywhere, slower on
+  *  - With `spark.sql.extensions=graft.functions.GraftExtensions`
+  *    (every [[graft.Graft.session]]), an analyzer rule
+  *    ([[GraftCatalogRelations]]) swaps the v2 relation for the SAME
+  *    planner-owned `HadoopFsRelation` the path API reads through —
+  *    native vectorized parquet scan, log-driven pruning, whole-stage
+  *    codegen. This is the recommended posture.
+  *  - A session built without the extensions falls back to the public
+  *    `V1Scan` bridge: column pruning and filter pushdown still
+  *    negotiate at the v2 `ScanBuilder`, but rows materialize through
+  *    an `RDD[Row]` (no vectorization) — correct everywhere, slower on
   *    wide scans (same trade measured for the v2 streaming reader,
-  *    SCALE.md "v1-vs-DSv2").
+  *    SCALE.md "v1-vs-DSv2"). GraftCatalogSpec pins its rows against
+  *    the swapped read.
   *
   * Streaming reads (`spark.readStream.table("gcat.db.t")`) reuse
   * [[graft.sink.GraftMicroBatchStream]] — the `format("graft-v2")`
@@ -816,15 +818,6 @@ object GraftCatalogRelations
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp(swap(targets(plan)))
-
-  /** The SAME swap applied to an ALREADY-analyzed plan (tests/gates in
-    * a session built without extensions): `resolveOperatorsUp` no-ops
-    * on plans the analyzer has marked done, so this route goes through
-    * plain `transformUp` — legal outside the analyzer — with the
-    * identical matching logic.
-    */
-  def applyPostAnalysis(plan: LogicalPlan): LogicalPlan =
-    plan.transformUp(swap(targets(plan)))
 }
 
 class GraftCatalogWriteBuilder(path: String, info: LogicalWriteInfo)

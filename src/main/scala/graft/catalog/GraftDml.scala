@@ -41,12 +41,6 @@ object GraftDmlRewrite extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsUp(pf)
 
-  /** Post-analysis application for sessions built without extensions
-    * (tests/gates) — same matching, plain transformUp.
-    */
-  def applyPostAnalysis(plan: LogicalPlan): LogicalPlan =
-    plan.transformUp(pf)
-
   private def graftTable(plan: LogicalPlan): Option[GraftCatalogTable] =
     plan.collectFirst {
       case r: DataSourceV2Relation

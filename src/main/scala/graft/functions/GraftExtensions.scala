@@ -31,7 +31,9 @@ object RewriteIpPredicates extends Rule[LogicalPlan] {
     }
 }
 
-/** SparkSessionExtensions entry point:
+/** SparkSessionExtensions entry point, and the one install path of the
+  * engine's rules. [[graft.Graft.session]] applies it; a session built
+  * elsewhere takes
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
@@ -199,16 +198,9 @@ case class ArraySelfDotLong(child: Expression) extends UnaryExpression {
   * user-provided batch (post constant-folding, so the `CAST(0 AS
   * BIGINT)` seed is already `Literal(0L)`); only fires when the
   * arrays are integral and the finish lambda is the identity, and
-  * replaces nothing otherwise. Installed idempotently per session via
-  * [[RewriteVectorFolds.ensureInstalled]] (and session-wide through
-  * [[GraftExtensions]]).
+  * replaces nothing otherwise. Installed by [[GraftExtensions]].
   */
 object RewriteVectorFolds extends Rule[LogicalPlan] {
-
-  def ensureInstalled(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 
   private def isVar(e: Expression, v: NamedLambdaVariable): Boolean =
     e match {

@@ -51,9 +51,8 @@ import graft.sink.MaterializedView.{AvgState, CountState, MaxState,
   * untouched. At 100 TB the payoff is the ClickHouse one: dashboard
   * aggregates read O(|groups|) MV bytes instead of the fact table.
   *
-  * Installed per-session via `spark.experimental.extraOptimizations`
-  * (works on an already-built session) by [[Projections.register]], or
-  * session-wide through `graft.functions.GraftExtensions`.
+  * The rewrite rule is installed by `graft.functions.GraftExtensions`
+  * (every [[graft.Graft.session]] carries it).
   */
 object Projections {
   final case class Reg(baseTable: String, mvTable: String, mv: MvDef)
@@ -68,16 +67,11 @@ object Projections {
   }
 
   /** Declare `mvTable` (maintained by [[MaterializedView.refresh]]) as
-    * a projection of `baseTable` and arm the rewrite rule in this
-    * session. Idempotent.
+    * a projection of `baseTable`. Idempotent.
     */
   def register(spark: SparkSession, baseTable: String, mvTable: String,
-      mv: MvDef): Unit = {
+      mv: MvDef): Unit =
     regs.put(canon(spark, baseTable), Reg(baseTable, mvTable, mv))
-    if (!spark.experimental.extraOptimizations.contains(ProjectionRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ProjectionRewrite
-  }
 
   def deregister(spark: SparkSession, baseTable: String): Unit =
     regs.remove(canon(spark, baseTable))

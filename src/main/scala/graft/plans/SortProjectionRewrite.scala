@@ -59,17 +59,14 @@ object SortProjections {
   }
 
   /** Declare `projTable` (maintained by [[SortProjection.refresh]]) as
-    * a sort-order projection of `baseTable` clustered on `keys`, and
-    * arm the rewrite rule in this session. Idempotent.
+    * a sort-order projection of `baseTable` clustered on `keys`.
+    * Idempotent; the rewrite rule comes from
+    * `graft.functions.GraftExtensions`.
     */
   def register(spark: SparkSession, baseTable: String, projTable: String,
       keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "a sort projection needs at least one key")
     regs.put(canon(spark, baseTable), Reg(baseTable, projTable, keys))
-    if (!spark.experimental.extraOptimizations
-        .contains(SortProjectionRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SortProjectionRewrite
   }
 
   def deregister(spark: SparkSession, baseTable: String): Unit =

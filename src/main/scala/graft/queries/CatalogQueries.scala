@@ -1,10 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
-
-import graft.catalog.GraftCatalogRelations
 
 /** Driver gates for the SQL catalog ([[graft.catalog.GraftCatalog]]):
   * plain SQL owns the whole table lifecycle — CREATE NAMESPACE / CREATE
@@ -18,12 +16,13 @@ import graft.catalog.GraftCatalogRelations
   * DDL/DML, not library calls); this module proves the same posture on
   * the Spark engine.
   *
-  * Both read postures are pinned: every final SELECT runs through the
-  * default V1Scan row bridge (the Verify session has no extensions),
-  * and the lifecycle gate ADDITIONALLY re-plans the same query through
-  * [[GraftCatalogRelations]] — the analyzer rule the extensions install
-  * — and requires (a) the rule actually swapped in the vectorized
-  * `HadoopFsRelation` and (b) the swapped plan hashes identically.
+  * Every gate runs in a [[graft.Graft.session]], so its SQL reads
+  * plan through the extensions' relation swap
+  * ([[graft.catalog.GraftCatalogRelations]]: the vectorized
+  * `HadoopFsRelation`) and its UPDATE / MERGE statements through
+  * [[graft.catalog.GraftDmlRewrite]]; the lifecycle gate requires the
+  * swap to have fired. The `V1Scan` row bridge that a session without
+  * the extensions reads through is pinned by GraftCatalogSpec.
   */
 object CatalogQueries {
 
@@ -58,33 +57,17 @@ object CatalogQueries {
     s.sql(s"CREATE NAMESPACE gcat.$ns")
   }
 
-  /** Run an UPDATE / MERGE statement through [[GraftDmlRewrite]] the
-    * way an extensions-enabled session would — the gate session has no
-    * extensions, so the rule applies post-analysis (same matching).
-    */
-  private def runDml(s: SparkSession, sql: String): Unit = {
-    val analyzed = s.sessionState.analyzer.execute(
-      s.sessionState.sqlParser.parsePlan(sql))
-    val rewritten = graft.catalog.GraftDmlRewrite.applyPostAnalysis(analyzed)
-    require(rewritten.isInstanceOf[
-      org.apache.spark.sql.execution.command.LeafRunnableCommand],
-      s"DML rewrite must fire for: $sql")
-    GraftSqlBridge.ofRows(s, rewritten).collect()
-    ()
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // The SQL LIFECYCLE gate: create → positional insert → by-name
     // insert → DELETE WHERE → ALTER TABLE ADD COLUMNS → SET
     // TBLPROPERTIES → insert into the evolved schema → read back in
-    // THREE arms: the final state via the V1Scan bridge ('final'),
-    // the SAME query re-planned through the extensions' relation-swap
-    // rule ('fast' — must produce the vectorized HadoopFsRelation and
-    // identical rows), and time travel to the pre-delete state
-    // ('asof2'). Any mis-ordered positional insert, lost half of the
-    // ALTER, delete over-reach, or old-file read of the new column
-    // not surfacing NULL moves a hash.
+    // THREE arms: the final state ('final'), the SAME query again
+    // ('fast' — its plan must hold the vectorized HadoopFsRelation the
+    // extensions' relation swap puts in), and time travel to the
+    // pre-delete state ('asof2'). Any mis-ordered positional insert,
+    // lost half of the ALTER, delete over-reach, or old-file read of
+    // the new column not surfacing NULL moves a hash.
     "qcat_lifecycle" -> ((s, d) => {
       freshWarehouse(s, "cat_life", d)
       resetNamespace(s, "life")
@@ -121,16 +104,11 @@ object CatalogQueries {
         " sum(cents) AS cents, sum(weight) AS w FROM gcat.life.flows" +
         " GROUP BY event_type"
       val fin = s.sql(s"SELECT 'final' AS phase, * FROM ($finalSel)")
-      // the extensions POSTURE: apply the analyzer rule the extensions
-      // would install and require the vectorized relation actually
-      // replaced the v2 one
-      val swapped = GraftCatalogRelations.applyPostAnalysis(
-        s.sql(s"SELECT 'fast' AS phase, * FROM ($finalSel)")
-          .queryExecution.analyzed)
-      require(swapped.collectFirst { case l: LogicalRelation => l }.isDefined,
+      val fast = s.sql(s"SELECT 'fast' AS phase, * FROM ($finalSel)")
+      require(fast.queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l }.isDefined,
         "GraftCatalogRelations must swap the catalog scan for the " +
           "vectorized HadoopFsRelation")
-      val fast = GraftSqlBridge.ofRows(s, swapped)
       val asof = s.sql("SELECT 'asof2' AS phase, event_type," +
         " count(*) AS n, sum(cents) AS cents, CAST(NULL AS DOUBLE) AS w" +
         " FROM gcat.life.flows VERSION AS OF 2 GROUP BY event_type")
@@ -257,9 +235,8 @@ object CatalogQueries {
 
     // SQL UPDATE via the DML rewrite (ClickHouse's ALTER TABLE UPDATE
     // mutation): one copy-on-write commit transforms exactly the
-    // matching rows; the expression references another column. The
-    // Verify session has no extensions, so the gate applies the SAME
-    // rule the extensions register, post-analysis.
+    // matching rows; the expression references another column
+    // (planned by the extensions' GraftDmlRewrite).
     "qcat_update" -> ((s, d) => {
       freshWarehouse(s, "cat_upd", d)
       resetNamespace(s, "upd")
@@ -267,7 +244,7 @@ object CatalogQueries {
       s.sql("CREATE TABLE gcat.upd.t AS SELECT date, event_type, cents" +
         " FROM qcat_uev")
       val path = s.conf.get("spark.sql.catalog.gcat.warehouse") + "/upd/t"
-      runDml(s, "UPDATE gcat.upd.t SET cents = cents * 3 + 1" +
+      s.sql("UPDATE gcat.upd.t SET cents = cents * 3 + 1" +
         " WHERE event_type = 'view'")
       require(graft.sink.TxTable.currentVersion(s, path) == 1L,
         "UPDATE must be ONE commit after the CTAS")
@@ -289,7 +266,7 @@ object CatalogQueries {
         .withColumn("cents", col("cents") * 2)
         .createOrReplaceTempView("qcat_msrc")
       val path = s.conf.get("spark.sql.catalog.gcat.warehouse") + "/mrg/t"
-      runDml(s, "MERGE INTO gcat.mrg.t t USING qcat_msrc s" +
+      s.sql("MERGE INTO gcat.mrg.t t USING qcat_msrc s" +
         " ON t.date = s.date AND t.event_id = s.event_id" +
         " WHEN MATCHED THEN UPDATE SET *" +
         " WHEN NOT MATCHED THEN INSERT *")

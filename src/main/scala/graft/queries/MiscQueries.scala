@@ -37,58 +37,58 @@ object MiscQueries {
       |  FROM media
       |)""".stripMargin
 
-  /** Build the exactly-once streamed tx table ONCE per corpus and reuse
-    * it across invocations — the gate's timed cost is then the
-    * steady-state read path (TxFileIndex scan + aggregate), which is
-    * what a long-running production stream pays per query; the
-    * checkpoint-recovery / zombie-writer replay assertions still
-    * execute on every fresh corpus (and in TxTableSpec on every test
-    * run). The cache key carries the source's (size, mtime)
-    * fingerprint, so regenerated testdata rebuilds instead of serving
-    * stale sums (the same discipline as the streaming landing dir,
-    * StreamingFlows.eventsDir), and the `_DONE` marker is written only
-    * after the stream completes — a torn build is swept and rebuilt.
+  // corpus fingerprint -> streamed tx table built by this process
+  private val txStreamTables = scala.collection.mutable.Map.empty[String, String]
+
+  /** Build the exactly-once streamed tx table ONCE per corpus per
+    * process and reuse it across invocations — the gate's timed cost is
+    * then the steady-state read path (TxFileIndex scan + aggregate),
+    * which is what a long-running production stream pays per query;
+    * the checkpoint-recovery / zombie-writer replay assertions still
+    * execute on every first build (and in TxTableSpec on every test
+    * run). The key carries the source's (size, mtime) fingerprint, so
+    * regenerated testdata rebuilds instead of serving stale sums. Each
+    * build gets its own temp dir, removed when the JVM exits: processes
+    * sharing a temp root never write one stream log, and a failed build
+    * is simply not cached.
     */
   private def txStreamSink(s: SparkSession, d: String): String =
     synchronized {
       val src = java.nio.file.Paths.get(d, "events.parquet")
-      val fp = s"${java.nio.file.Files.size(src)}_" +
+      val key = s"$d|${java.nio.file.Files.size(src)}_" +
         s"${java.nio.file.Files.getLastModifiedTime(src).toMillis}"
-      val prefix = s"graft_txsink_${math.abs(d.hashCode)}"
-      val base = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"), s"${prefix}_$fp")
-      val table = s"$base/t"
-      if (java.nio.file.Files.exists(base.resolve("_DONE"))) return table
-      // sweep this corpus's stale/torn generations
-      Option(base.getParent.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(prefix))
-        .foreach(f => try org.apache.commons.io.FileUtils.deleteDirectory(f)
-          catch { case _: java.io.IOException => () })
-      val pods = SyntheticFlows.pods(s, d)
-      val nodes = SyntheticFlows.nodes(s, d)
-      val prefixes = SyntheticFlows.prefixes(s, d)
-      val cfg = FlowConfig()
-      val flows = SyntheticFlows.flowsFromEvents(
-        StreamingFlows.eventsStream(s, d).select(
-          col("event_id"), col("user_id"), col("ts")))
-      val q = flows.writeStream
-        .option("checkpointLocation", s"$base/cp")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val summed = FlowPipeline.run(batch, pods, nodes, prefixes, cfg)
-          summed.persist()
-          try {
-            require(TxTable.appendTxn(s, summed, table, "graft-stream", id) >= 0,
-              s"batch $id must land")
-            require(TxTable.appendTxn(s, summed, table, "graft-stream", id) == -1L,
-              s"replayed batch $id must be deduplicated")
-          } finally summed.unpersist()
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      java.nio.file.Files.createFile(base.resolve("_DONE"))
-      table
+      txStreamTables.getOrElseUpdate(key, buildTxStreamSink(s, d))
     }
+
+  private def buildTxStreamSink(s: SparkSession, d: String): String = {
+    val base = java.nio.file.Files.createTempDirectory("graft_txsink_")
+    sys.addShutdownHook(
+      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile))
+    val table = s"$base/t"
+    val pods = SyntheticFlows.pods(s, d)
+    val nodes = SyntheticFlows.nodes(s, d)
+    val prefixes = SyntheticFlows.prefixes(s, d)
+    val cfg = FlowConfig()
+    val flows = SyntheticFlows.flowsFromEvents(
+      StreamingFlows.eventsStream(s, d).select(
+        col("event_id"), col("user_id"), col("ts")))
+    val q = flows.writeStream
+      .option("checkpointLocation", s"$base/cp")
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        val summed = FlowPipeline.run(batch, pods, nodes, prefixes, cfg)
+        summed.persist()
+        try {
+          require(TxTable.appendTxn(s, summed, table, "graft-stream", id) >= 0,
+            s"batch $id must land")
+          require(TxTable.appendTxn(s, summed, table, "graft-stream", id) == -1L,
+            s"replayed batch $id must be deduplicated")
+        } finally summed.unpersist()
+        ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    table
+  }
 
   /** The qtx_* gates mutate a freshly-appended copy of the summed base
     * table every run; the APPEND is identical across gates and runs, so
@@ -1898,15 +1898,21 @@ object MiscQueries {
       val (f, p, n, px) = (SyntheticFlows.flows(s, d), SyntheticFlows.pods(s, d),
         SyntheticFlows.nodes(s, d), SyntheticFlows.prefixes(s, d))
       val summed = FlowPipeline.run(f, p, n, px, FlowConfig())
-      val path = sys.props("java.io.tmpdir") +
-        s"/graft_sink_${math.abs(d.hashCode)}"
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-      TxTable.append(s, summed, path)
-      TxTable.read(s, path)
-        .groupBy("direction")
-        .agg(sum("bytes").as("bytes"), sum("packets").as("packets"),
-          count(lit(1)).as("n_rows"))
-        .orderBy("direction")
+      // each run its own table dir; the result is materialized so the
+      // dir can go before returning
+      val run = java.nio.file.Files.createTempDirectory("graft_sink_").toFile
+      try {
+        TxTable.append(s, summed, s"$run/t")
+        val out = TxTable.read(s, s"$run/t")
+          .groupBy("direction")
+          .agg(sum("bytes").as("bytes"), sum("packets").as("packets"),
+            count(lit(1)).as("n_rows"))
+          .orderBy("direction")
+          .localCheckpoint()
+        graft.ops.CacheRegistry.checkpointRdd(out)
+          .foreach(graft.ops.CacheRegistry.trackRdd)
+        out
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(run)
     })
   )
 

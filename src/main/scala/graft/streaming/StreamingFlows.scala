@@ -158,40 +158,42 @@ object StreamingFlows {
     */
   def sourceProbeRun(spark: SparkSession, dir: String): DataFrame = {
     val readyDir = eventsDir(spark, dir, files = 1) // full corpus, 1 file
-    val run = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_probe_${math.abs(dir.hashCode)}")
-    org.apache.commons.io.FileUtils.deleteDirectory(run)
-    val landing = new java.io.File(run, "landing")
-    require(landing.mkdirs(), s"cannot stage $landing")
-    def probe() = spark.read.schema(eventsSchema)
-      .parquet(landing.toString)
-    // arm 1: an empty source must TIME OUT, loudly and promptly
-    val timedOut =
-      try { awaitSourceReady(probe, timeoutMs = 400, pollMs = 50); false }
-      catch { case _: IllegalArgumentException => true }
-    require(timedOut, "probe over an empty landing dir must time out")
-    // arm 2: the agent boots and the first snapshot lands mid-poll
-    val src = new java.io.File(readyDir, "snapshot_000.parquet")
-    require(src.isFile, s"missing staged snapshot $src")
-    val agent = new Thread(() => {
-      Thread.sleep(250)
-      java.nio.file.Files.copy(src.toPath,
-        new java.io.File(landing, src.getName).toPath)
-      ()
-    })
-    agent.setDaemon(true)
-    agent.start()
-    awaitSourceReady(probe, timeoutMs = 30000, pollMs = 50)
-    agent.join()
-    // only a ready source starts the stream
-    val st = spark.readStream.schema(eventsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(landing.toString)
-    val agg = st
-      .groupBy(date_trunc("minute", col("ts")).as("minute_start"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(round(col("value") * 100, 0).cast("long")).as("value_cents"))
-    runToMemory(spark, agg)
+    // each run its own landing dir; the memory sink holds the result,
+    // so the dir goes before returning
+    val run = java.nio.file.Files.createTempDirectory("graft_probe_").toFile
+    try {
+      val landing = new java.io.File(run, "landing")
+      require(landing.mkdirs(), s"cannot stage $landing")
+      def probe() = spark.read.schema(eventsSchema)
+        .parquet(landing.toString)
+      // arm 1: an empty source must TIME OUT, loudly and promptly
+      val timedOut =
+        try { awaitSourceReady(probe, timeoutMs = 400, pollMs = 50); false }
+        catch { case _: IllegalArgumentException => true }
+      require(timedOut, "probe over an empty landing dir must time out")
+      // arm 2: the agent boots and the first snapshot lands mid-poll
+      val src = new java.io.File(readyDir, "snapshot_000.parquet")
+      require(src.isFile, s"missing staged snapshot $src")
+      val agent = new Thread(() => {
+        Thread.sleep(250)
+        java.nio.file.Files.copy(src.toPath,
+          new java.io.File(landing, src.getName).toPath)
+        ()
+      })
+      agent.setDaemon(true)
+      agent.start()
+      awaitSourceReady(probe, timeoutMs = 30000, pollMs = 50)
+      agent.join()
+      // only a ready source starts the stream
+      val st = spark.readStream.schema(eventsSchema)
+        .option("maxFilesPerTrigger", "1").parquet(landing.toString)
+      val agg = st
+        .groupBy(date_trunc("minute", col("ts")).as("minute_start"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(round(col("value") * 100, 0).cast("long")).as("value_cents"))
+      runToMemory(spark, agg)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(run)
   }
 
   /** A landing dir split at an EXPLICIT event-time cut (unlike

@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.flow.{FlowConfig, FlowPipeline, SyntheticFlows}
@@ -72,21 +72,12 @@ object ClusterBench {
       .getAbsolutePath
     require(sys.env.contains("SPARK_HOME") || !master.startsWith("local-cluster"),
       "local-cluster needs SPARK_HOME so workers can fork executor JVMs")
-    val spark = SparkSession.builder()
-      .config("spark.hadoop.fs.file.impl",
-        "graft.ops.FastLocalFileSystem") // no per-file chmod fork
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.ops.FastLocalFs") // FileContext twin (checkpoints/WAL)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Graft.session(master, "graft-cluster-bench", 32, Map(
+      "spark.ui.enabled" -> "false",
       // the forked executor JVMs need the graft classes (custom
       // Catalyst expressions deserialize there) and the JDK17 opens
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.executor.extraJavaOptions", Jdk17Opens.asJavaOptions)
-      .getOrCreate()
+      "spark.executor.extraClassPath" -> classesDir,
+      "spark.executor.extraJavaOptions" -> Jdk17Opens.asJavaOptions))
     spark.sparkContext.setLogLevel("WARN")
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)

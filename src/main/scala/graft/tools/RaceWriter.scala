@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sink.TxTable
@@ -31,16 +30,8 @@ object RaceWriter {
     sys.env.get("GRAFT_LOGSTORE")
       .flatMap(graft.sink.ObjectStoreLogStore.parse)
       .foreach(TxTable.registerLogStore("file", _))
-    val spark = SparkSession.builder()
-      .config("spark.hadoop.fs.file.impl",
-        "graft.ops.FastLocalFileSystem") // no per-file chmod fork
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.ops.FastLocalFs") // FileContext twin (checkpoints/WAL)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session("local[4]", "graft-race-writer", 4,
+      Map("spark.ui.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -3,7 +3,7 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -64,19 +64,8 @@ object ScaleBench {
     // per-task state flat (the 300× append sizing experiment)
     val shufParts =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .config("spark.hadoop.fs.file.impl",
-        "graft.ops.FastLocalFileSystem") // no per-file chmod fork
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.ops.FastLocalFs") // FileContext twin (checkpoints/WAL)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory",
-        sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
+    val spark = graft.Graft.session(s"local[$cpus]", "graft-scale-bench",
+      shufParts.toInt, Map("spark.ui.enabled" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)

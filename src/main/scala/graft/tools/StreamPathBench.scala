@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sink.TxTable
@@ -33,17 +33,8 @@ object StreamPathBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val factor = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .config("spark.hadoop.fs.file.impl",
-        "graft.ops.FastLocalFileSystem") // no per-file chmod fork
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.ops.FastLocalFs") // FileContext twin (checkpoints/WAL)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-stream-path-bench")
-      .getOrCreate()
+    val spark = graft.Graft.session(s"local[$cpus]",
+      "graft-stream-path-bench", cpus.toInt, Map("spark.ui.enabled" -> "false"))
     spark.sparkContext.setLogLevel("WARN")
 
     val scratch = java.nio.file.Files

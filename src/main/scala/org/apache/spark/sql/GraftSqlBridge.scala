@@ -12,11 +12,9 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** A DataFrame over an already-analyzed logical plan — what a test
-    * or gate needs to exercise an analyzer rule (e.g.
-    * [[graft.catalog.GraftCatalogRelations]]) in a session that was
-    * built WITHOUT `spark.sql.extensions`: apply the rule to
-    * `df.queryExecution.analyzed` and re-root the result.
+  /** A DataFrame over an already-analyzed logical plan (e.g. the
+    * MERGE source that [[graft.catalog.GraftDmlRewrite]] hands to the
+    * tx-table primitives).
     */
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.catalog.{GraftCatalog, GraftCatalogRelations}
+import graft.catalog.GraftCatalog
 import graft.sink.{TxFileIndex, TxTable}
 
 /** Catalog statistics: the commit log's per-file `#rows` footer stats
@@ -25,14 +24,6 @@ class CatalogStatsSpec extends AnyFunSuite {
     spark.sql("DROP NAMESPACE IF EXISTS gstat.st CASCADE")
     spark.sql("CREATE NAMESPACE gstat.st")
   }
-
-  /** The extensions posture, driven post-analysis (the shared spec
-    * session carries no extensions — same seam every catalog spec uses).
-    */
-  private def swapped(sql: String): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
-      GraftCatalogRelations.applyPostAnalysis(
-        spark.sql(sql).queryExecution.analyzed))
 
   private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
     val saved = pairs.map { case (k, _) =>
@@ -55,16 +46,16 @@ class CatalogStatsSpec extends AnyFunSuite {
     spark.sql("INSERT INTO gstat.st.t SELECT id, id, DATE'2024-01-02'" +
       " FROM range(1000, 1500)")
     withConf("spark.sql.cbo.enabled" -> "true") {
-      assert(swapped("SELECT * FROM gstat.st.t")
+      assert(spark.sql("SELECT * FROM gstat.st.t")
         .queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(1500)))
       spark.sql("DELETE FROM gstat.st.t WHERE v < 100")
       // merge-on-read: same files, DV cardinality subtracts in metadata
-      assert(swapped("SELECT * FROM gstat.st.t")
+      assert(spark.sql("SELECT * FROM gstat.st.t")
         .queryExecution.optimizedPlan.stats.rowCount.contains(BigInt(1400)))
     }
     // cbo off -> plain sizeInBytes posture, no rowCount (today's default)
     withConf("spark.sql.cbo.enabled" -> "false") {
-      assert(swapped("SELECT * FROM gstat.st.t")
+      assert(spark.sql("SELECT * FROM gstat.st.t")
         .queryExecution.optimizedPlan.stats.rowCount.isEmpty)
     }
   }
@@ -109,7 +100,7 @@ class CatalogStatsSpec extends AnyFunSuite {
     // over-count), never a lowball below the per-file truth
     assert(ndv.exists(_ >= 50L), s"ndv upper bound, got $ndv")
     withConf("spark.sql.cbo.enabled" -> "true") {
-      val agg = swapped(
+      val agg = spark.sql(
         "SELECT local_pod, count(*) AS n FROM gstat.st.flows" +
           " GROUP BY local_pod")
       val st = agg.queryExecution.optimizedPlan.stats
@@ -140,13 +131,13 @@ class CatalogStatsSpec extends AnyFunSuite {
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> (256 * 1024).toString) {
       withConf("spark.sql.cbo.enabled" -> "false") {
-        val p = swapped(q).queryExecution.executedPlan.toString
+        val p = spark.sql(q).queryExecution.executedPlan.toString
         assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
           "size-only stats keep the aggregate scan-sized -> sort-merge\n" +
             p.take(2000))
       }
       withConf("spark.sql.cbo.enabled" -> "true") {
-        val p = swapped(q).queryExecution.executedPlan.toString
+        val p = spark.sql(q).queryExecution.executedPlan.toString
         assert(p.contains("BroadcastHashJoin"),
           "NDV-sized aggregate output must broadcast\n" + p.take(2000))
       }
@@ -210,7 +201,7 @@ class CatalogStatsSpec extends AnyFunSuite {
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (64 * 1024).toString) {
-      val p0 = swapped(q).queryExecution.executedPlan.toString
+      val p0 = spark.sql(q).queryExecution.executedPlan.toString
       assert(p0.contains("SortMergeJoin") && !p0.contains("BroadcastHashJoin"),
         "without column stats the filter keeps its scan-sized estimate\n" +
           p0.take(2000))
@@ -230,7 +221,7 @@ class CatalogStatsSpec extends AnyFunSuite {
       val st = spark.sql("CALL gstat.sys.stats(table => 'st.vals')")
         .collect().map(r => r.getString(0) -> r).toMap
       assert(st("v").getString(3) == "0" && st("v").getString(4) == "199999")
-      val p1 = swapped(q).queryExecution.executedPlan.toString
+      val p1 = spark.sql(q).queryExecution.executedPlan.toString
       assert(p1.contains("BroadcastHashJoin"),
         "min/max selectivity must shrink the filtered side under the " +
           "broadcast threshold\n" + p1.take(2000))
@@ -269,7 +260,7 @@ class CatalogStatsSpec extends AnyFunSuite {
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> (256 * 1024).toString) {
-      val p1 = swapped(q).queryExecution.executedPlan.toString
+      val p1 = spark.sql(q).queryExecution.executedPlan.toString
       assert(p1.contains("BroadcastHashJoin"),
         "histogram must shrink the skewed filter under the threshold\n" +
           p1.take(2000))
@@ -277,7 +268,7 @@ class CatalogStatsSpec extends AnyFunSuite {
       // — uniform density reads `v >= 1` as ~every row -> sort-merge
       TxTable.setTableProperties(spark, loc,
         remove = Seq(TxTable.HistPropPrefix + "v"))
-      val p0 = swapped(q).queryExecution.executedPlan.toString
+      val p0 = spark.sql(q).queryExecution.executedPlan.toString
       assert(p0.contains("SortMergeJoin") && !p0.contains("BroadcastHashJoin"),
         "without the histogram, min/max alone must keep the scan-sized " +
           "estimate\n" + p0.take(2000))
@@ -306,13 +297,13 @@ class CatalogStatsSpec extends AnyFunSuite {
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> (256 * 1024).toString) {
       withConf("spark.sql.cbo.enabled" -> "false") {
-        val p = swapped(q).queryExecution.executedPlan.toString
+        val p = spark.sql(q).queryExecution.executedPlan.toString
         assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
           "size-only stats must sort-merge (both sides over threshold)\n" +
             p.take(2000))
       }
       withConf("spark.sql.cbo.enabled" -> "true") {
-        val p = swapped(q).queryExecution.executedPlan.toString
+        val p = spark.sql(q).queryExecution.executedPlan.toString
         assert(p.contains("BroadcastHashJoin"),
           "exact rowCount must flip the fat side to broadcast\n" +
             p.take(2000))

@@ -13,23 +13,21 @@ class ExtensionsSpec extends AnyFunSuite {
   import TestSpark._
 
   test("rule rewrites ip_is_private into pushable range predicates") {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RewriteIpPredicates
-    try {
-      val li = Tables.lineitem(spark, sf)
-      val df = li.filter(ip_is_private(col("l_orderkey")))
-        .select("l_orderkey")
+    val li = Tables.lineitem(spark, sf)
+    def plan() = {
+      val df = li.filter(ip_is_private(col("l_orderkey"))).select("l_orderkey")
       df.collect()
-      val plan = df.queryExecution.executedPlan.toString
-      // black box gone, ranges pushed into the scan
-      assert(!plan.contains("ip_is_private"), plan.take(1500))
-      assert(plan.contains("PushedFilters: [") &&
-        plan.contains("GreaterThanOrEqual(l_orderkey"), plan.take(1500))
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == RewriteIpPredicates)
+      df.queryExecution.executedPlan.toString
     }
+    // the session's extensions install the rule: black box gone,
+    // ranges pushed into the scan
+    val rewritten = plan()
+    assert(!rewritten.contains("ip_is_private"), rewritten.take(1500))
+    assert(rewritten.contains("PushedFilters: [") &&
+      rewritten.contains("GreaterThanOrEqual(l_orderkey"), rewritten.take(1500))
+    // disarmed, the opaque expression stays in the plan
+    val opaque = withoutRules(RewriteIpPredicates)(plan())
+    assert(opaque.contains("ip_is_private"), opaque.take(1500))
   }
 
   test("rewrite preserves semantics against the unrewritten expression") {
@@ -38,18 +36,9 @@ class ExtensionsSpec extends AnyFunSuite {
       16777216L, 0L, 4294967295L)
     import spark.implicits._
     val df = ips.toDF("ip")
-    val plain = df.select(col("ip"), ip_is_private(col("ip")).as("p"))
+    def eval() = df.select(col("ip"), ip_is_private(col("ip")).as("p"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RewriteIpPredicates
-    try {
-      val rewritten = df.select(col("ip"), ip_is_private(col("ip")).as("p"))
-        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      assert(rewritten == plain)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations
-          .filterNot(_ == RewriteIpPredicates)
-    }
+    val plain = withoutRules(RewriteIpPredicates)(eval())
+    assert(eval() == plain)
   }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField}
-import org.apache.spark.sql.GraftSqlBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.{GraftCatalog, GraftCatalogRelations}
@@ -13,7 +12,8 @@ import graft.sink.TxTable
   * warehouse paths, the commit log IS the table state, and every DDL /
   * DML statement lands as tx-table commits. Covers the doc-comment
   * lifecycle in BOTH read postures (the extensions' relation-swap rule
-  * and the V1Scan fallback the shared no-extensions session uses), the
+  * the shared session plans through, and the V1Scan fallback a session
+  * without the extensions reads through, driven at the scan), the
   * combined ALTER single-commit contract, create-race safety, and
   * path-API-writer / SQL-reader agreement.
   */
@@ -51,12 +51,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       "property-gated SQL DELETE must be merge-on-read: files untouched")
     assert(spark.sql("SELECT count(*) FROM gcat.dv.t").head.getLong(0)
       == 90)
-    // the shared spec session carries no extensions — drive the DML
-    // rewrite rule directly, as the UPDATE/MERGE test does
-    val updPlan = graft.catalog.GraftDmlRewrite.applyPostAnalysis(
-      spark.sessionState.analyzer.execute(spark.sessionState.sqlParser
-        .parsePlan("UPDATE gcat.dv.t SET v = v + 1000 WHERE v >= 90")))
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, updPlan).collect()
+    spark.sql("UPDATE gcat.dv.t SET v = v + 1000 WHERE v >= 90")
     assert(before.keySet.subsetOf(live().keySet),
       "property-gated SQL UPDATE keeps the original file identities")
     assert(spark.sql(
@@ -66,10 +61,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       ((10L until 90L) ++ (90L until 100L).map(_ + 1000L)).sum)
     // a NON-TRANSLATABLE predicate (modulo) — refused by the DSv2
     // SupportsDelete path — runs through the DML rewrite instead
-    val delPlan = graft.catalog.GraftDmlRewrite.applyPostAnalysis(
-      spark.sessionState.analyzer.execute(spark.sessionState.sqlParser
-        .parsePlan("DELETE FROM gcat.dv.t WHERE v % 10 = 5")))
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, delPlan).collect()
+    spark.sql("DELETE FROM gcat.dv.t WHERE v % 10 = 5")
     // survivors: {10..89} minus its eight x5 values, {1090..1099}
     // minus 1095 — nine rows gone
     assert(spark.sql("SELECT count(*) FROM gcat.dv.t").head.getLong(0)
@@ -127,6 +119,36 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
+  /** The `V1Scan` a session WITHOUT the extensions would read through:
+    * negotiated at the table's v2 ScanBuilder, then bridged by
+    * `toV1TableScan` — the shared session's own SQL never reaches it.
+    */
+  private def fallbackScan(ns: String, table: String,
+      pushed: Array[org.apache.spark.sql.sources.Filter],
+      columns: Seq[String]): graft.catalog.GraftCatalogScan = {
+    import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead}
+    import org.apache.spark.sql.connector.read.{SupportsPushDownFilters,
+      SupportsPushDownRequiredColumns}
+    import org.apache.spark.sql.types.StructType
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val cat = spark.sessionState.catalogManager.catalog("gcat")
+      .asInstanceOf[GraftCatalog]
+    val sb = cat.loadTable(Identifier.of(Array(ns), table))
+      .asInstanceOf[SupportsRead]
+      .newScanBuilder(CaseInsensitiveStringMap.empty())
+    val rest = sb.asInstanceOf[SupportsPushDownFilters].pushFilters(pushed)
+    assert(rest.isEmpty, "every filter must be accepted as pushed")
+    sb.asInstanceOf[SupportsPushDownRequiredColumns]
+      .pruneColumns(StructType(spark.table(s"gcat.$ns.$table").schema
+        .filter(f => columns.contains(f.name))))
+    sb.build().asInstanceOf[graft.catalog.GraftCatalogScan]
+  }
+
+  private def fallbackRows(scan: graft.catalog.GraftCatalogScan) =
+    scan.toV1TableScan[org.apache.spark.sql.sources.BaseRelation
+      with org.apache.spark.sql.sources.TableScan](spark.sqlContext)
+      .buildScan().collect().toSeq
+
   test("both read postures agree and the fast path is the vectorized " +
     "relation") {
     freshNs("posture")
@@ -134,26 +156,34 @@ class GraftCatalogSpec extends AnyFunSuite {
     spark.sql("INSERT INTO gcat.posture.t VALUES" +
       " ('a', 1, DATE'2024-01-01'), ('b', 2, DATE'2024-01-02')," +
       " ('a', 3, DATE'2024-01-02')")
-    val q = "SELECT k, sum(v) AS v FROM gcat.posture.t GROUP BY k"
-    val v1 = spark.sql(q)
-    // fallback posture: the physical plan goes through the V1Scan bridge
-    val v1Plan = v1.queryExecution.executedPlan.toString
-    assert(v1Plan.contains("GraftCatalogV1Relation"), v1Plan.take(800))
-    val swapped = GraftCatalogRelations.applyPostAnalysis(
-      v1.queryExecution.analyzed)
-    assert(swapped.collectFirst { case l: LogicalRelation => l }.isDefined,
+    // the session's extensions swap in the vectorized HadoopFsRelation
+    val fast = spark.sql("SELECT k, v, date FROM gcat.posture.t")
+    assert(fast.queryExecution.analyzed
+      .collectFirst { case l: LogicalRelation => l }.isDefined,
       "the extensions rule must swap in the HadoopFsRelation")
-    val fast = GraftSqlBridge.ofRows(spark, swapped)
     val fastPlan = fast.queryExecution.executedPlan.toString
     assert(fastPlan.contains("FileScan parquet"), fastPlan.take(800))
-    assert(fast.orderBy("k").collect().toSeq ==
-      v1.orderBy("k").collect().toSeq)
+    assert(!fastPlan.contains("GraftCatalogV1Relation"), fastPlan.take(800))
+    // the V1Scan fallback returns the same rows
+    val v1 = fallbackRows(fallbackScan("posture", "t", Array.empty,
+      Seq("k", "v", "date")))
+    def key(r: org.apache.spark.sql.Row) = (r.getAs[String]("k"),
+      r.getAs[Long]("v"), r.getAs[java.sql.Date]("date").toString)
+    assert(v1.size == 3)
+    assert(v1.map(key).sorted == fast.collect().toSeq.map(key).sorted)
     // write targets keep their v2 relation (the rule must NOT swap a
     // DELETE's target out from under the row-level contract)
-    val del = spark.sessionState.sqlParser.parsePlan(
-      "DELETE FROM gcat.posture.t WHERE k = 'zzz'")
-    val analyzedDel = spark.sessionState.analyzer.execute(del)
-    val swappedDel = GraftCatalogRelations.applyPostAnalysis(analyzedDel)
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.logical.DeleteFromTable
+    import org.apache.spark.sql.connector.catalog.Identifier
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val cat = spark.sessionState.catalogManager.catalog("gcat")
+      .asInstanceOf[GraftCatalog]
+    val ident = Identifier.of(Array("posture"), "t")
+    val target = DataSourceV2Relation.create(cat.loadTable(ident),
+      Some(cat), Some(ident))
+    val swappedDel = GraftCatalogRelations(
+      DeleteFromTable(target, Literal(false)))
     assert(swappedDel.collectFirst { case l: LogicalRelation => l }.isEmpty,
       "command targets stay v2")
   }
@@ -164,38 +194,18 @@ class GraftCatalogSpec extends AnyFunSuite {
       " pad STRING)")
     spark.sql("INSERT INTO gcat.prune.t SELECT concat('k', id)," +
       " id, repeat('x', 10), DATE'2024-01-01' FROM range(100)")
-    val df = spark.sql(
-      "SELECT v FROM gcat.prune.t WHERE k = 'k7' AND v > 5")
-    val scan = df.queryExecution.executedPlan.toString
-    assert(scan.contains("GraftCatalogV1Relation"), scan.take(800))
-    // `pad` must not reach the scan (column pruning negotiated at the
-    // v2 ScanBuilder even on the fallback path)
-    assert(!scan.contains("pad"), scan.take(800))
-    assert(df.collect().map(_.getLong(0)).toSeq == Seq(7L))
-    // the pushdown CONTRACT, checked at the v2 ScanBuilder directly
-    // (the V1 bridge applies pushed filters inside buildScan, so the
-    // physical plan string doesn't carry them)
-    import org.apache.spark.sql.connector.catalog.Identifier
-    import org.apache.spark.sql.connector.read.{SupportsPushDownFilters,
-      SupportsPushDownRequiredColumns}
+    // the pushdown CONTRACT at the v2 ScanBuilder: both filters are
+    // accepted, `pad` is pruned out of the read schema, and the V1
+    // bridge applies the pushed filters inside buildScan
     import org.apache.spark.sql.sources.{EqualTo, GreaterThan}
-    import org.apache.spark.sql.types.StructType
-    import org.apache.spark.sql.util.CaseInsensitiveStringMap
-    val cat = spark.sessionState.catalogManager.catalog("gcat")
-      .asInstanceOf[GraftCatalog]
-    val sb = cat.loadTable(Identifier.of(Array("prune"), "t"))
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(CaseInsensitiveStringMap.empty())
-    val rest = sb.asInstanceOf[SupportsPushDownFilters]
-      .pushFilters(Array(EqualTo("k", "k7"), GreaterThan("v", 5L)))
-    assert(rest.isEmpty, "both filters must be accepted as pushed")
-    sb.asInstanceOf[SupportsPushDownRequiredColumns]
-      .pruneColumns(StructType(spark.table("gcat.prune.t").schema
-        .filter(_.name == "v")))
-    val builtScan = sb.build()
-    assert(builtScan.readSchema().fieldNames.toSeq == Seq("v"))
-    assert(builtScan.description().contains("EqualTo(k,k7)"),
-      builtScan.description())
+    val scan = fallbackScan("prune", "t",
+      Array(EqualTo("k", "k7"), GreaterThan("v", 5L)), Seq("v"))
+    assert(scan.readSchema().fieldNames.toSeq == Seq("v"))
+    assert(scan.description().contains("EqualTo(k,k7)"), scan.description())
+    assert(fallbackRows(scan).map(_.getLong(0)) == Seq(7L))
+    // the same query through the session's swapped relation agrees
+    assert(spark.sql("SELECT v FROM gcat.prune.t WHERE k = 'k7' AND v > 5")
+      .collect().map(_.getLong(0)).toSeq == Seq(7L))
   }
 
   test("one ALTER statement carrying ADD COLUMNS + SET TBLPROPERTIES " +
@@ -352,7 +362,6 @@ class GraftCatalogSpec extends AnyFunSuite {
 
   test("SQL UPDATE and upsert-MERGE rewrite to the atomic tx " +
       "commands; unsupported shapes stay unrewritten") {
-    import graft.catalog.GraftDmlRewrite
     freshNs("dml")
     val path = sys.props("java.io.tmpdir") + "/graft_gcat_warehouse/dml/t"
     spark.sql("CREATE TABLE gcat.dml.t (date DATE, k STRING, v BIGINT)")
@@ -361,18 +370,18 @@ class GraftCatalogSpec extends AnyFunSuite {
       " ('c', 3, DATE'2024-01-02')")
     def analyze(sql: String) = spark.sessionState.analyzer.execute(
       spark.sessionState.sqlParser.parsePlan(sql))
-    def runDml(sql: String): Unit = {
-      val rewritten = GraftDmlRewrite.applyPostAnalysis(analyze(sql))
+    // the session's analyzer carries GraftDmlRewrite
+    def dml(sql: String): Unit = {
+      val rewritten = analyze(sql)
       assert(rewritten.isInstanceOf[
         org.apache.spark.sql.execution.command.LeafRunnableCommand],
         s"rule must rewrite:\n$rewritten")
-      org.apache.spark.sql.GraftSqlBridge.ofRows(spark, rewritten)
-        .collect()
+      spark.sql(sql)
       ()
     }
     // UPDATE: one commit, expression may reference other columns
     val v0 = TxTable.currentVersion(spark, path)
-    runDml("UPDATE gcat.dml.t SET v = v + 10 WHERE k <> 'c'")
+    dml("UPDATE gcat.dml.t SET v = v + 10 WHERE k <> 'c'")
     assert(TxTable.currentVersion(spark, path) == v0 + 1,
       "UPDATE is ONE commit")
     assert(spark.sql("SELECT sum(v) FROM gcat.dml.t").head.getLong(0)
@@ -384,7 +393,7 @@ class GraftCatalogSpec extends AnyFunSuite {
       .select(col("k"), col("v"), to_date(col("ds")).as("date"))
       .createOrReplaceTempView("gcat_dml_src")
     val v1 = TxTable.currentVersion(spark, path)
-    runDml("MERGE INTO gcat.dml.t t USING gcat_dml_src s" +
+    dml("MERGE INTO gcat.dml.t t USING gcat_dml_src s" +
       " ON t.k = s.k WHEN MATCHED THEN UPDATE SET *" +
       " WHEN NOT MATCHED THEN INSERT *")
     assert(TxTable.currentVersion(spark, path) == v1 + 1,
@@ -394,21 +403,21 @@ class GraftCatalogSpec extends AnyFunSuite {
     assert(got == Seq(("a", 11L), ("b", 100L), ("c", 3L), ("d", 4L)))
     // shapes the primitives can't honor are LEFT for Spark's error:
     // a conditional matched action...
-    val cond = GraftDmlRewrite.applyPostAnalysis(analyze(
+    val cond = analyze(
       "MERGE INTO gcat.dml.t t USING gcat_dml_src s ON t.k = s.k" +
         " WHEN MATCHED AND s.v > 0 THEN UPDATE SET *" +
-        " WHEN NOT MATCHED THEN INSERT *"))
+        " WHEN NOT MATCHED THEN INSERT *")
     assert(cond.isInstanceOf[
       org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable])
     // ...a DELETE action...
-    val del = GraftDmlRewrite.applyPostAnalysis(analyze(
+    val del = analyze(
       "MERGE INTO gcat.dml.t t USING gcat_dml_src s ON t.k = s.k" +
-        " WHEN MATCHED THEN DELETE"))
+        " WHEN MATCHED THEN DELETE")
     assert(del.isInstanceOf[
       org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable])
     // ...and an UPDATE of the partition column
-    val dateUpd = GraftDmlRewrite.applyPostAnalysis(analyze(
-      "UPDATE gcat.dml.t SET date = DATE'2024-02-01' WHERE k = 'a'"))
+    val dateUpd = analyze(
+      "UPDATE gcat.dml.t SET date = DATE'2024-02-01' WHERE k = 'a'")
     assert(dateUpd.isInstanceOf[
       org.apache.spark.sql.catalyst.plans.logical.UpdateTable])
   }

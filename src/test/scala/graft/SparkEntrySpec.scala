@@ -4,19 +4,27 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-      .config("spark.hadoop.fs.file.impl",
-        "graft.ops.FastLocalFileSystem") // no per-file chmod fork
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "graft.ops.FastLocalFs") // FileContext twin (checkpoints/WAL)
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The session every suite shares: the library's own
+    * [[Graft.session]], so the tests run the configuration the
+    * benchmarks time (SessionConfigSpec pins it).
+    */
+  lazy val spark: SparkSession = Graft.session("local[4]", "graft-test", 4,
+    Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with extension-injected optimizer rules disarmed
+    * through `spark.sql.optimizer.excludedRules` (restored after) — the
+    * "without the rule" arm of a with/without comparison.
+    */
+  def withoutRules[A](rules: org.apache.spark.sql.catalyst.rules.Rule[_]*)(
+      body: => A): A = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (prev.toSeq ++ rules.map(_.ruleName)).mkString(","))
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 class SparkEntrySpec extends AnyFunSuite {

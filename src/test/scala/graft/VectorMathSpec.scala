@@ -34,7 +34,6 @@ class VectorMathSpec extends AnyFunSuite {
     .toDF("id", "a", "b")
 
   test("rewrite fires and the plan carries the native expressions") {
-    RewriteVectorFolds.ensureInstalled(spark)
     // non-literal source: a literal frame constant-folds to a
     // LocalRelation before any optimizer rule can be observed
     val d = spark.range(3).select(col("id"),
@@ -50,15 +49,11 @@ class VectorMathSpec extends AnyFunSuite {
   }
 
   test("values and null semantics equal the HOF fold, row for row") {
-    RewriteVectorFolds.ensureInstalled(spark)
     // HOF reference values, computed with the rewrite disarmed
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      prev.filterNot(_ == RewriteVectorFolds)
-    val want =
-      try df.select(col("id"), expr(dot), expr(l2), expr(self))
+    val want = withoutRules(RewriteVectorFolds) {
+      df.select(col("id"), expr(dot), expr(l2), expr(self))
         .orderBy("id").collect()
-      finally spark.experimental.extraOptimizations = prev
+    }
     val got = df.select(col("id"), expr(dot), expr(l2), expr(self))
       .orderBy("id").collect()
     assert(want.map(_.toString).toSeq == got.map(_.toString).toSeq)
@@ -76,7 +71,6 @@ class VectorMathSpec extends AnyFunSuite {
   }
 
   test("mixed int/long arrays (sequence weights) rewrite and agree") {
-    RewriteVectorFolds.ensureInstalled(spark)
     val d = spark.range(1).select(
       array(col("id") + 7, col("id") + 8, col("id") + 9).as("a"),
       expr("sequence(1, 3)").as("w"))
