@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a session wired for this engine (UTC, AQE,
   * size-adaptive shuffle coalescing, zstd, the in-process local
-  * filesystem, [[functions.GraftExtensions]]) with the custom scalar
-  * functions registered for both the Column API and SQL.
+  * filesystem, [[functions.GraftExtensions]], which brings the rules
+  * and the SQL functions, the ClickHouse pack included).
   *
   * {{{
   * val spark = Graft.session()
-  * Graft.registerTables(spark, "/data/lake")
+  * Tables.registerAll(spark, "/data/lake")
   * spark.sql("SELECT format_readable_size(sum(bytes)) FROM network_flows")
   * }}}
   *
@@ -50,22 +50,7 @@ object Graft {
       // zstd-decompressed batches; AQE handles shuffle-side sizing/skew
       .config("spark.sql.files.maxPartitionBytes", "256m")
       .config("spark.sql.parquet.compression.codec", "zstd")
-    val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
+    conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
-    functions.ipfns.register(spark)
-    sql.Compat.registerClickHouseFunctions(spark)
-    dims.Dictionaries.registerSql(spark)
-    spark
-  }
-
-  /** Register every testdata table plus the library's SQL functions
-    * (engine-native names AND the ClickHouse dialect pack, so a
-    * reference user's dashboards parse unchanged).
-    */
-  def registerTables(spark: SparkSession, dir: String): Unit = {
-    functions.ipfns.register(spark)
-    sql.Compat.registerClickHouseFunctions(spark)
-    dims.Dictionaries.registerSql(spark)
-    Tables.registerAll(spark, dir)
   }
 }

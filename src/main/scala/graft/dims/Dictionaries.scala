@@ -5,6 +5,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal,
   UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
@@ -230,9 +231,13 @@ object Dictionaries {
 
   /** SQL spelling: `dictGet('dict', 'attr', key)` — dict and attr must
     * be string literals (they select the map at PLAN time, which is
-    * the whole point).
+    * the whole point). `dictGet`, `dictGetOrDefault` and `dictHas` as
+    * (name, builder) pairs, injected into every session by
+    * `graft.functions.GraftExtensions`; the builders resolve the
+    * dictionary when a query is analyzed, so a dictionary registered
+    * later is visible to every session.
     */
-  def registerSql(spark: SparkSession): Unit = {
+  val sqlFunctions: Seq[(String, FunctionBuilder)] = {
     def lit(e: Expression, what: String): String = e match {
       case Literal(u: UTF8String, StringType) => u.toString
       case other => throw new IllegalArgumentException(
@@ -249,17 +254,16 @@ object Dictionaries {
         DictGetRange(d, a, e(2), e(3), m, dt)
       } else DictGet(d, a, probe(d, e(2)), m, dt)
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dictGet", get(_), "scala_udf")
-    // dictGetOrDefault = the NULL-on-miss lookup coalesced with the
-    // caller's default; dictHas probes ANY attribute map's key set
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dictGetOrDefault", { e =>
+    def f(name: String)(b: FunctionBuilder) = name -> b
+    Seq(
+      f("dictGet")(get),
+      // dictGetOrDefault = the NULL-on-miss lookup coalesced with the
+      // caller's default; dictHas probes ANY attribute map's key set
+      f("dictGetOrDefault") { e =>
         org.apache.spark.sql.catalyst.expressions.Coalesce(Seq(
           get(e.dropRight(1)), e.last))
-      }, "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dictHas", { e =>
+      },
+      f("dictHas") { e =>
         val d = lit(e(0), "dictionary name")
         val dict = regs.getOrElse(d, throw new IllegalArgumentException(
           s"no dictionary '$d' registered"))
@@ -267,7 +271,7 @@ object Dictionaries {
           DictGet(d, "__has", probe(d, e(1)), dict.hasMap,
             org.apache.spark.sql.types.BooleanType),
           Literal(false)))
-      }, "scala_udf")
+      })
   }
 }
 

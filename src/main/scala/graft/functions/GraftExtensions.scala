@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -32,10 +33,18 @@ object RewriteIpPredicates extends Rule[LogicalPlan] {
 }
 
 /** SparkSessionExtensions entry point, and the one install path of the
-  * engine's rules. [[graft.Graft.session]] applies it; a session built
-  * elsewhere takes
+  * engine's rules and SQL functions. [[graft.Graft.session]] applies
+  * it; a session built elsewhere takes
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
+  *
+  * It installs four optimizer rules, two resolution rules, one AQE
+  * query-stage preparation rule ([[graft.plans.SingleSplitStages]]) and
+  * the SQL functions: the engine's own ([[ipfns.sqlFunctions]]), the
+  * ClickHouse pack ([[graft.sql.Compat.clickHouseFunctions]]) and the
+  * dictionary lookups ([[graft.dims.Dictionaries.sqlFunctions]]).
+  * Injected functions are part of the session state, so a
+  * `newSession()` child has them as well, with no per-call registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -59,5 +68,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL UPDATE / upsert-MERGE on catalog tables → the tx-table
     // copy-on-write primitives (see graft.catalog.GraftDmlRewrite)
     e.injectResolutionRule(_ => graft.catalog.GraftDmlRewrite)
+    // one-job queries: drop the exchanges a single-split tx scan does
+    // not need, after AQE's EnsureRequirements on every (re-)plan
+    e.injectQueryStagePrepRule(_ => graft.plans.SingleSplitStages)
+    // in registration order: a later name replaces an earlier one
+    (ipfns.sqlFunctions ++ graft.sql.Compat.clickHouseFunctions ++
+      graft.dims.Dictionaries.sqlFunctions).foreach { case (name, b) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), b))
+    }
   }
 }

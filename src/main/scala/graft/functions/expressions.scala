@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.GraftSqlBridge.{column, expression}
@@ -140,24 +141,22 @@ object ipfns {
   def has_token(c: Column, tok: Column): Column =
     column(HasToken(expression(c), expression(tok)))
 
-  /** Register all as SQL functions on a session. Inputs are cast
-    * explicitly (private[sql] AbstractDataType blocks ExpectsInputTypes
-    * from outside Spark, so SQL literals like `1536.0` would otherwise
+  /** All as SQL functions, (name, builder) pairs injected into every
+    * session by [[GraftExtensions]]. Inputs are cast explicitly
+    * (private[sql] AbstractDataType blocks ExpectsInputTypes from
+    * outside Spark, so SQL literals like `1536.0` would otherwise
     * arrive as Decimal).
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+  val sqlFunctions: Seq[(String, FunctionBuilder)] = {
     import org.apache.spark.sql.catalyst.expressions.Cast
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("long_to_ip",
-      e => LongToIp(Cast(e.head, LongType)), "scala_udf")
-    reg.createOrReplaceTempFunction("ip_to_long",
-      e => IpToLong(Cast(e.head, StringType)), "scala_udf")
-    reg.createOrReplaceTempFunction("ip_is_private",
-      e => IpIsPrivate(Cast(e.head, LongType)), "scala_udf")
-    reg.createOrReplaceTempFunction("format_readable_size",
-      e => FormatReadableSize(Cast(e.head, DoubleType)), "scala_udf")
-    reg.createOrReplaceTempFunction("has_token",
-      e => HasToken(Cast(e.head, StringType), Cast(e(1), StringType)),
-      "scala_udf")
+    def f(name: String)(b: FunctionBuilder) = name -> b
+    Seq(
+      f("long_to_ip")(e => LongToIp(Cast(e.head, LongType))),
+      f("ip_to_long")(e => IpToLong(Cast(e.head, StringType))),
+      f("ip_is_private")(e => IpIsPrivate(Cast(e.head, LongType))),
+      f("format_readable_size")(e =>
+        FormatReadableSize(Cast(e.head, DoubleType))),
+      f("has_token")(e =>
+        HasToken(Cast(e.head, StringType), Cast(e(1), StringType))))
   }
 }

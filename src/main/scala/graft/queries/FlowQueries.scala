@@ -275,7 +275,6 @@ object FlowQueries {
     "q_compat_sql" -> ((s, d) => {
       val (f, p, n, px) = stages(s, d)
       val summed = FlowPipeline.run(f, p, n, px, cfg)
-      graft.sql.Compat.registerClickHouseFunctions(s)
       graft.sql.Compat.compatView(summed)
         .createOrReplaceTempView("network_flows_compat")
       s.sql("""
@@ -301,7 +300,6 @@ object FlowQueries {
     "q_compat_funcs" -> ((s, d) => {
       val (f, p, n, px) = stages(s, d)
       val summed = FlowPipeline.run(f, p, n, px, cfg)
-      graft.sql.Compat.registerClickHouseFunctions(s)
       graft.sql.Compat.compatView(summed)
         .createOrReplaceTempView("network_flows_compat")
       s.sql("""
@@ -326,7 +324,6 @@ object FlowQueries {
     // arrayJoin = explode, dateDiff: approximate or unit-semantics
     // functions stay spec-checked in CompatSpec, not hash-oracled.)
     "q_compat_funcs2" -> ((s, d) => {
-      graft.sql.Compat.registerClickHouseFunctions(s)
       graft.Tables.events(s, d).createOrReplaceTempView("events_compat")
       s.sql("""
         SELECT event_type,
@@ -361,7 +358,6 @@ object FlowQueries {
     "qf_dictget" -> ((s, d) => {
       graft.dims.Dictionaries.register(s, "pods",
         SyntheticFlows.pods(s, d), "pod_ip")
-      graft.dims.Dictionaries.registerSql(s)
       graft.Tables.customer(s, d)
         .select((lit(167772160L) + col("c_custkey") * 2).as("ip"))
         .createOrReplaceTempView("dict_probes")
@@ -385,7 +381,6 @@ object FlowQueries {
           "CAST(n_nationkey * 10 + 9 AS BIGINT) AS e",
           "CAST(n_nationkey * 100 AS BIGINT) AS price"),
         "k", "s", "e")
-      graft.dims.Dictionaries.registerSql(s)
       graft.Tables.customer(s, d).selectExpr("c_custkey",
         "CAST(c_custkey % 5 AS BIGINT) AS k",
         "CAST(c_custkey % 260 AS BIGINT) AS x")
@@ -406,7 +401,6 @@ object FlowQueries {
       graft.dims.Dictionaries.registerIpTrie(s, "ranges",
         SyntheticFlows.prefixes(s, d)
           .select("p_start", "p_len", "p_cloud", "p_region", "p_service"))
-      graft.dims.Dictionaries.registerSql(s)
       graft.Tables.customer(s, d)
         .select((lit(16777216L) + col("c_custkey") * 512 +
           when(col("c_custkey") % 5 === 0, 2000000000L).otherwise(0L))

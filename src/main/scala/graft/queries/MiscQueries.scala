@@ -135,9 +135,12 @@ object MiscQueries {
       build(s"$base/t")
       java.nio.file.Files.createFile(base.resolve("_DONE"))
     }
-    val run = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_txrun_${runTag}_${math.abs(d.hashCode)}")
-    org.apache.commons.io.FileUtils.deleteDirectory(run)
+    // each call its own copy, removed when the JVM exits: the caller's
+    // lazy DataFrame reads it after the lock is gone, so a concurrent
+    // call of the same gate must never delete or rewrite it
+    val run = java.nio.file.Files.createTempDirectory(
+      s"graft_txrun_${runTag}_").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(run))
     org.apache.commons.io.FileUtils.copyDirectory(
       base.resolve("t").toFile, new java.io.File(run, "t"))
     s"$run/t"
@@ -1704,7 +1707,6 @@ object MiscQueries {
         s"graft_qsagg_${math.abs(d.hashCode)}")
       org.apache.commons.io.FileUtils.deleteDirectory(run)
       val table = s"$run/t"
-      graft.sql.Compat.registerClickHouseFunctions(s)
       val q = StreamingFlows.eventsStream(s, d)
         .writeStream.option("checkpointLocation", s"$run/ckpt")
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
@@ -1854,7 +1856,6 @@ object MiscQueries {
         s"graft_aggmt_${math.abs(d.hashCode)}")
       org.apache.commons.io.FileUtils.deleteDirectory(run)
       val table = s"$run/t"
-      graft.sql.Compat.registerClickHouseFunctions(s)
       graft.Tables.events(s, d).select(
         to_date(col("ts")).as("date"), col("event_type"), col("user_id"),
         round(col("value") * 100, 0).cast("long").as("cents"))

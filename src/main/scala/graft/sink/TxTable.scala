@@ -2142,7 +2142,7 @@ object TxTable {
     * MERGEABLE partial-aggregate STATES (what the CH `-State`
     * combinators produce — see the `sumState`/`avgState`/
     * `uniqExactState`/`uniqState` registrations in
-    * [[graft.sql.Compat.registerClickHouseFunctions]]); this merge
+    * [[graft.sql.Compat.clickHouseFunctions]]); this merge
     * collapses equal-key rows by re-merging their states and swaps the
     * re-written dates in atomically, so a query-time `-Merge` read
     * touches one row per key however many inserts produced it.

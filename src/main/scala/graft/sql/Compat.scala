@@ -1,6 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Cast, CurrentDate, If,
   Literal, TruncTimestamp}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, CountIf,
@@ -19,17 +20,23 @@ import graft.functions.ipfns.long_to_ip
   *    IPv4 columns rendered dotted-quad. The one divergence:
   *    `connectionFlags` is the JSON-serialized map (Spark cannot group
   *    by MapType), noted here rather than hidden.
-  *  - [[registerClickHouseFunctions]] adds the ClickHouse builtins those
-  *    queries use: `formatReadableSize` and `today()`.
+  *  - [[clickHouseFunctions]] is the pack of ClickHouse builtins those
+  *    queries use (`formatReadableSize`, `today()`, `sumIf`, the
+  *    `toStartOf*` family and several hundred more), injected into every
+  *    session by `graft.functions.GraftExtensions`.
+  *  - [[chSql]] runs literal ClickHouse-dialect SQL: [[translateCh]]'s
+  *    syntax shim, then Spark's parser.
   */
 object Compat {
 
-  def registerClickHouseFunctions(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def f(name: String)(
-        b: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
-      reg.createOrReplaceTempFunction(name, b, "scala_udf")
+  /** The ClickHouse function pack as (name, builder) pairs, in
+    * registration order: a later entry replaces an earlier one of the
+    * same (case-insensitive) name. `GraftExtensions` injects the pack
+    * into every session, so `newSession()` children carry it too.
+    */
+  lazy val clickHouseFunctions: Seq[(String, FunctionBuilder)] = {
+    val pack = Seq.newBuilder[(String, FunctionBuilder)]
+    def f(name: String)(b: FunctionBuilder): Unit = pack += name -> b
     f("formatReadableSize")(e => FormatReadableSize(Cast(e.head, DoubleType),
       name = "formatReadableSize"))
     f("today")(_ => CurrentDate())
@@ -1464,7 +1471,6 @@ object Compat {
     // uniq is approximate by contract, so serving it exactly is
     // within contract). Unsupported aggregate names refuse loudly.
     locally {
-      import org.apache.spark.sql.catalyst.FunctionIdentifier
       import org.apache.spark.sql.catalyst.expressions.{ElementAt, Size}
       import org.apache.spark.sql.types.{LongType, StringType}
       val delegated = Map("sum" -> "arraySum", "min" -> "arrayMin",
@@ -1483,9 +1489,9 @@ object Compat {
           case "any"     => ElementAt(arr, Literal(1))
           case "anyLast" => ElementAt(arr, Literal(-1))
           case n if delegated.contains(n) =>
-            reg.lookupFunctionBuilder(FunctionIdentifier(delegated(n)))
+            clickHouseFunctions.findLast(_._1.equalsIgnoreCase(delegated(n)))
               .getOrElse(throw new IllegalStateException(
-                s"delegate ${delegated(n)} not registered"))(Seq(arr))
+                s"delegate ${delegated(n)} not in the pack"))._2(Seq(arr))
           case other => throw new IllegalArgumentException(
             s"arrayReduce('$other') is not supported; supported: " +
               (delegated.keys.toSeq ++ Seq("count", "any", "anyLast"))
@@ -3429,6 +3435,7 @@ object Compat {
           "size(filter(__l, __x6 -> NOT (__x6 > 0)))) END",
         "__s" -> e.head, "__l" -> e(1)))
     }
+    pack.result()
   }
 
   /** ClickHouse SYNTAX shim: the dialect differences that are not a
@@ -4659,8 +4666,6 @@ object Compat {
     sb.toString
   }
 
-  /** Run literal ClickHouse-dialect SQL: register the function pack,
-    * apply the syntax shim, hand the result to Spark's parser. */
   /** CH `ORDER BY <col> WITH FILL [FROM a] [TO b] [STEP s]` — gap
     * filling over an integral or date axis. The fill axis is
     * synthesized as a `sequence(...)` and LEFT-joined to the query,
@@ -4737,12 +4742,13 @@ object Compat {
     filled.orderBy(col(c))
   }
 
-  def chSql(spark: SparkSession, sql: String): DataFrame = {
-    registerClickHouseFunctions(spark)
+  /** Run literal ClickHouse-dialect SQL: apply the syntax shim and hand
+    * the result to Spark's parser. The function pack comes with the
+    * session ([[clickHouseFunctions]]). */
+  def chSql(spark: SparkSession, sql: String): DataFrame =
     applyWithFill(spark,
       rewriteFinal(spark, rewriteMergeFn(spark,
         rewriteAsof(spark, translateCh(sql)))))
-  }
 
   /** summing-table rows -> the reference's column names and shapes. */
   def compatView(summed: DataFrame): DataFrame =
@@ -4785,11 +4791,10 @@ object Compat {
 
   /** Register the compat view as `default.network_flows_0` (a real
     * catalog table so the db-qualified name in the reference's queries
-    * resolves) and wire the functions. Returns the table name.
+    * resolves). Returns the table name.
     */
   def publish(spark: SparkSession, summed: DataFrame,
       table: String = "default.network_flows_0"): String = {
-    registerClickHouseFunctions(spark)
     compatView(summed).write.mode("overwrite").saveAsTable(table)
     table
   }

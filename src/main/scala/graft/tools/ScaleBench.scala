@@ -911,7 +911,6 @@ object ScaleBench {
         // never raw rows — so wall time should grow with the linear
         // rollup aggregation while the window stage stays flat as the
         // raw side scales.
-        graft.sql.Compat.registerClickHouseFunctions(spark)
         val ev = scaledEvents(factor)
         val n = ev.count()
         ev.createOrReplaceTempView("sb_decayed_ev")
@@ -940,7 +939,6 @@ object ScaleBench {
         // events. State rows are O(distinct keys) however large the
         // ingest, so the state-read latency should stay ~FLAT as the
         // raw side grows linearly.
-        graft.sql.Compat.registerClickHouseFunctions(spark)
         val ev = (if (factor == 1) baseEvents
           else (0 until factor).map(i => baseEvents.select(
             (col("event_id") + lit(i * 10000000L)).as("event_id"),
@@ -984,7 +982,6 @@ object ScaleBench {
         // the rank windows, the ECDF windows, and the final
         // aggregates. Under measurement: shuffle bytes linear in
         // rows, per-row cost ~flat across factors.
-        graft.sql.Compat.registerClickHouseFunctions(spark)
         val ev = scaledEvents(factor)
         val n = ev.count()
         ev.createOrReplaceTempView("scale_np_src")
@@ -1009,7 +1006,6 @@ object ScaleBench {
         // per partition cross the exchange however many rows feed the
         // fit. Under measurement: shuffle bytes ~FLAT across factors
         // (only per-partition states move), wall linear in the scan.
-        graft.sql.Compat.registerClickHouseFunctions(spark)
         val ev = scaledEvents(factor)
         val n = ev.count()
         ev.createOrReplaceTempView("scale_ml_src")

@@ -24,7 +24,6 @@ class AggregatingSpec extends AnyFunSuite {
   test("state merge invariant: inserts x background merge x coarser " +
       "grouping all recover the exact aggregate; unknown kinds and " +
       "undeclared columns refuse") {
-    Compat.registerClickHouseFunctions(spark)
     val rows = for {
       day <- 1 to 3; u <- 1 to 20
     } yield (java.sql.Date.valueOf(f"2024-06-0$day"),
@@ -89,7 +88,6 @@ class AggregatingSpec extends AnyFunSuite {
       sys.props("java.io.tmpdir") + "/graft_gcat_warehouse")
     spark.sql("DROP NAMESPACE IF EXISTS gcat.aggmt CASCADE")
     spark.sql("CREATE NAMESPACE gcat.aggmt")
-    Compat.registerClickHouseFunctions(spark)
     (for { day <- 1 to 2; u <- 1 to 16 } yield
       (java.sql.Date.valueOf(f"2024-06-0$day"),
         if (u % 2 == 0) "x" else "y", u.toLong, (day * 10 + u).toLong))
@@ -129,7 +127,6 @@ class AggregatingSpec extends AnyFunSuite {
 
   test("sketch states: uniqState HLL binaries union across inserts and " +
       "merges; the estimate lands within the 5-sigma bound") {
-    Compat.registerClickHouseFunctions(spark)
     (1L to 5000L).map(i => (java.sql.Date.valueOf("2024-06-01"),
       s"g${i % 2}", i)).toDF("date", "g", "uid")
       .createOrReplaceTempView("hll_src")

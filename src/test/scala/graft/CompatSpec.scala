@@ -62,7 +62,6 @@ class CompatSpec extends AnyFunSuite {
 
   test("dialect pack: argMax/argMin/uniq/toStartOfMinute behave like " +
       "their ClickHouse counterparts") {
-    Compat.registerClickHouseFunctions(spark)
     Seq((1L, "a", 10L, "2024-03-01 10:02:31"),
       (2L, "b", 30L, "2024-03-01 10:02:59"),
       (3L, "c", 20L, "2024-03-01 10:03:01"))
@@ -108,7 +107,6 @@ class CompatSpec extends AnyFunSuite {
 
   test("round-6 dialect widening: quantile family, arrayJoin, dateDiff, " +
       "string/array/cast spellings behave like ClickHouse") {
-    Compat.registerClickHouseFunctions(spark)
     Seq((1L, "alpha", 10.0, "2024-03-01 10:00:00"),
       (2L, "beta", 20.0, "2024-03-02 11:30:00"),
       (3L, "gamma", 30.0, "2024-03-04 10:00:01"),
@@ -483,7 +481,6 @@ class CompatSpec extends AnyFunSuite {
   }
 
   test("round-12: numbers() table function and fixed-width time buckets") {
-    Compat.registerClickHouseFunctions(spark)
     val n = Compat.chSql(spark,
       "SELECT sum(number) AS s, count() AS c FROM numbers(10)")
       .collect().head

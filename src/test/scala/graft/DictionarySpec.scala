@@ -16,7 +16,6 @@ class DictionarySpec extends AnyFunSuite {
     val dim = Seq((10L, "a", 1), (20L, "b", 2), (30L, null, 3))
       .toDF("k", "name", "rank")
     Dictionaries.register(spark, "spec_dim", dim, "k")
-    Dictionaries.registerSql(spark)
     val probes = Seq(10L, 20L, 30L, 99L).toDF("k")
     // Column API
     val got = probes.select(col("k"),
@@ -129,7 +128,6 @@ class DictionarySpec extends AnyFunSuite {
       .toDF("k", "s", "e", "price")
     Dictionaries.registerRangeHashed(spark, "spec_prices", prices,
       "k", "s", "e")
-    Dictionaries.registerSql(spark)
     def price(k: Long, x: Long): Option[Long] = {
       val r = spark.sql(
         s"SELECT dictGet('spec_prices', 'price', ${k}L, ${x}L) AS p")

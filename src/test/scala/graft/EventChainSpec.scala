@@ -17,7 +17,6 @@ class EventChainSpec extends AnyFunSuite {
   private def ts(s: Long) = new java.sql.Timestamp(s * 1000L)
 
   private def funnel(rows: Seq[(Long, String)], window: Long): Int = {
-    Compat.registerClickHouseFunctions(spark)
     rows.map { case (t, e) => (ts(t), e) }.toDF("t", "e")
       .createOrReplaceTempView("ec_src")
     Compat.chSql(spark, s"""
@@ -45,7 +44,6 @@ class EventChainSpec extends AnyFunSuite {
 
   test("windowFunnel: one event satisfying several steps advances the " +
       "chain through them (CH iterates every matched level per event)") {
-    Compat.registerClickHouseFunctions(spark)
     Seq((ts(10L), "a", true, true, false), (ts(20L), "x", false, false, true))
       .toDF("t", "e", "c1", "c2", "c3").createOrReplaceTempView("ec_multi")
     val lvl = Compat.chSql(spark,
@@ -55,7 +53,6 @@ class EventChainSpec extends AnyFunSuite {
   }
 
   test("sequenceMatch: gaps, adjacency, time bounds, refusals") {
-    Compat.registerClickHouseFunctions(spark)
     // x matches no condition -> ignored (CH: undescribed events are
     // invisible), so a and b ARE adjacent among described events
     Seq((ts(10L), "a"), (ts(20L), "x"), (ts(30L), "b"))
@@ -98,7 +95,6 @@ class EventChainSpec extends AnyFunSuite {
   }
 
   test("sequenceCount (greedy non-overlapping) and uniqUpTo") {
-    Compat.registerClickHouseFunctions(spark)
     // a b a b a  -> two complete (a then b) chains, trailing a unused
     Seq((10L, "a"), (20L, "b"), (30L, "a"), (40L, "b"), (50L, "a"))
       .map { case (t, e) => (ts(t), e) }.toDF("t", "e")
@@ -124,7 +120,6 @@ class EventChainSpec extends AnyFunSuite {
   }
 
   test("retention: [c1, c1&&c2, c1&&c3] per group") {
-    Compat.registerClickHouseFunctions(spark)
     Seq(("u1", "signup"), ("u1", "click"), ("u2", "click"), ("u3", "signup"))
       .toDF("u", "e").createOrReplaceTempView("rt_src")
     val got = Compat.chSql(spark, """
@@ -138,7 +133,6 @@ class EventChainSpec extends AnyFunSuite {
   test("topK: exact under the cap with deterministic tie order; a " +
       "heavy hitter survives cap-exceeding cardinality; long output " +
       "type round-trips") {
-    Compat.registerClickHouseFunctions(spark)
     Seq("a", "a", "a", "b", "b", "c").map(Tuple1(_)).toDF("e")
       .createOrReplaceTempView("tk_small")
     val top = Compat.chSql(spark,
@@ -166,7 +160,6 @@ class EventChainSpec extends AnyFunSuite {
 
   test("the aggregate is partial-aggregation shaped (no collect-all " +
       "plan node; ObjectHashAggregate carries the buffer)") {
-    Compat.registerClickHouseFunctions(spark)
     (1 to 100).map(i => (ts(i.toLong), s"u${i % 5}",
       if (i % 3 == 0) "a" else "b")).toDF("t", "u", "e")
       .createOrReplaceTempView("ec_plan")

@@ -71,7 +71,6 @@ class FunctionsSpec extends AnyFunSuite {
       .collect()
     assert(bad.isEmpty, bad.mkString(";"))
     // SQL registration + null propagation
-    graft.functions.ipfns.register(spark)
     val r = spark.sql(
       "SELECT has_token('a b', 'b') AS y, has_token('a b', '') AS e, " +
         "has_token(CAST(NULL AS STRING), 'b') AS nl").collect().head
@@ -79,7 +78,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("expressions are codegen'd (no fallback) and SQL-registered") {
-    graft.functions.ipfns.register(spark)
     // constant-foldable: the optimizer must be able to eval these eagerly
     val folded = spark.sql(
       "SELECT format_readable_size(1536.0) AS s, long_to_ip(16909060) AS ip")

@@ -20,7 +20,6 @@ class JsonCompatSpec extends AnyFunSuite {
       .replace("\n", "")
 
   private def one(expr: String): Any = {
-    Compat.registerClickHouseFunctions(spark)
     Seq(doc).toDF("j").createOrReplaceTempView("js_t")
     Compat.chSql(spark, s"SELECT $expr AS v FROM js_t").collect().head.get(0)
   }
@@ -80,7 +79,6 @@ class JsonCompatSpec extends AnyFunSuite {
   }
 
   test("invalid JSON reads as missing; alias spellings agree") {
-    Compat.registerClickHouseFunctions(spark)
     Seq("not json at all").toDF("j").createOrReplaceTempView("js_bad")
     val r = Compat.chSql(spark,
       """SELECT JSONExtractString(j, 's') AS a, JSONExtractInt(j, 'n') AS b,

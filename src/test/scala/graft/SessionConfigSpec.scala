@@ -4,12 +4,11 @@ import java.net.URI
 
 import org.apache.hadoop.fs.{AbstractFileSystem, Path}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftExtensions
-import graft.plans.{Projections, SortProjections}
+import graft.plans.{Projections, SingleSplitStages, SortProjections}
 import graft.sink.MaterializedView.MvDef
 
 /** The shared test session is a [[Graft.session]]: the configuration
@@ -27,7 +26,7 @@ class SessionConfigSpec extends AnyFunSuite {
     val ext = new SparkSessionExtensions
     new GraftExtensions()(ext)
     ext.getClass.getMethod(build, classOf[SparkSession]).invoke(ext, spark)
-      .asInstanceOf[Seq[Rule[LogicalPlan]]].map(_.ruleName)
+      .asInstanceOf[Seq[Rule[_]]].map(_.ruleName)
   }
 
   test("every GraftExtensions rule is in the session's optimizer and " +
@@ -41,6 +40,27 @@ class SessionConfigSpec extends AnyFunSuite {
       .extendedResolutionRules.map(_.ruleName)
     optimizer.foreach(r => assert(inOptimizer.contains(r), inOptimizer))
     resolution.foreach(r => assert(inAnalyzer.contains(r), inAnalyzer))
+  }
+
+  test("every GraftExtensions query-stage preparation rule is in the " +
+      "session's AQE rules") {
+    val stagePrep = injected("buildQueryStagePrepRules")
+    assert(stagePrep == Seq(SingleSplitStages.ruleName))
+    val inStagePrep = spark.sessionState.adaptiveRulesHolder
+      .queryStagePrepRules.map(_.ruleName)
+    stagePrep.foreach(r => assert(inStagePrep.contains(r), inStagePrep))
+  }
+
+  test("a newSession() child resolves the ClickHouse pack, the engine's " +
+      "functions and the dictionary lookups with no register call") {
+    val child = spark.newSession()
+    val r = child.sql("SELECT formatReadableSize(1024) AS s, " +
+      "CAST(toStartOfHour(TIMESTAMP '2024-06-01 10:42:07') AS STRING) AS h, " +
+      "long_to_ip(16909060) AS ip").collect().head
+    assert(r.getString(0) == "1.00 KiB")
+    assert(r.getString(1) == "2024-06-01 10:00:00")
+    assert(r.getString(2) == "1.2.3.4")
+    assert(child.catalog.functionExists("dictGet"))
   }
 
   test("the local filesystem on both Hadoop APIs is the in-process one") {
