@@ -39,8 +39,9 @@ object RewriteIpPredicates extends Rule[LogicalPlan] {
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`.
   *
   * It installs four optimizer rules, two resolution rules, one AQE
-  * query-stage preparation rule ([[graft.plans.SingleSplitStages]]) and
-  * the SQL functions: the engine's own ([[ipfns.sqlFunctions]]), the
+  * query-stage preparation rule ([[graft.plans.SingleSplitStages]]),
+  * the session's ClickHouse table registry ([[graft.sql.Compat.ChTables]])
+  * and the SQL functions: the engine's own ([[ipfns.sqlFunctions]]), the
   * ClickHouse pack ([[graft.sql.Compat.clickHouseFunctions]]) and the
   * dictionary lookups ([[graft.dims.Dictionaries.sqlFunctions]]).
   * Injected functions are part of the session state, so a
@@ -71,6 +72,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // one-job queries: drop the exchanges a single-split tx scan does
     // not need, after AQE's EnsureRequirements on every (re-)plan
     e.injectQueryStagePrepRule(_ => graft.plans.SingleSplitStages)
+    // the session's ClickHouse SAMPLE keys and FINAL views, one holder
+    // per session state (see graft.sql.Compat.ChTables)
+    e.injectCheckRule(_ => new graft.sql.Compat.ChTables)
     // in registration order: a later name replaces an earlier one
     (ipfns.sqlFunctions ++ graft.sql.Compat.clickHouseFunctions ++
       graft.dims.Dictionaries.sqlFunctions).foreach { case (name, b) =>

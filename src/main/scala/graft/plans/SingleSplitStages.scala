@@ -4,7 +4,9 @@ import org.apache.spark.sql.catalyst.expressions.{DynamicPruningExpression,
   PlanExpression}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarToRowExec, ExpandExec,
-  FileSourceScanExec, FilterExec, ProjectExec, SortExec, SparkPlan}
+  FileSourceScanExec, FilterExec, PartitionedFileUtil, ProjectExec,
+  SortExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
   ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS,
@@ -39,11 +41,11 @@ import graft.sink.TxFileIndex
   *
   * Installed by `graft.functions.GraftExtensions` as an AQE query-stage
   * preparation rule, so it runs after AQE's `EnsureRequirements` on the
-  * initial plan and on every re-plan. The splits are counted on a copy
-  * of the scan: a scan's `inputRDD` also posts its file-listing metrics
-  * (files read, their size, listing time), and an action resets every
-  * metric of the plan before it runs, so planning the scan's own RDD
-  * here would leave those metrics at zero.
+  * initial plan and on every re-plan. The splits are the scan's file
+  * index listing (for a [[TxFileIndex]], an in-memory prune of its
+  * snapshot) packed as the scan packs its read RDD, which is not built.
+  * The scan's own `selectedPartitions` would also set its listing
+  * metrics, which the action then resets to zero before it runs.
   */
 object SingleSplitStages extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan =
@@ -61,11 +63,23 @@ object SingleSplitStages extends Rule[SparkPlan] {
           case _: PlanExpression[_] | _: DynamicPruningExpression => true
           case _ => false
         }) &&
-        s.copy().inputRDD.partitions.length == 1
+        splits(s) == 1
     case _: ProjectExec | _: FilterExec | _: ColumnarToRowExec |
         _: HashAggregateExec | _: ObjectHashAggregateExec |
         _: SortAggregateExec | _: SortExec | _: ExpandExec | _: WindowExec =>
       oneSplit(p.children.head)
     case _ => false
+  }
+
+  private def splits(s: FileSourceScanExec): Int = {
+    val spark = s.relation.sparkSession
+    val dirs = s.relation.location.listFiles(s.partitionFilters, s.dataFilters)
+    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+    val files = dirs.flatMap { dir =>
+      dir.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+        s.relation.fileFormat.isSplitable(spark, s.relation.options,
+          f.getPath), maxSplit, dir.values))
+    }.sortBy(-_.length)
+    FilePartition.getFilePartitions(spark, files, maxSplit).length
   }
 }

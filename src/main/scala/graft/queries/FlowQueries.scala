@@ -493,7 +493,7 @@ object FlowQueries {
     // TABLESAMPLE would be per-scan random and un-oracle-able)
     "q_compat_sample" -> ((s, d) => {
       graft.Tables.documents(s, d).createOrReplaceTempView("ch_docs_s")
-      graft.sql.Compat.registerSamplingKey("ch_docs_s", "doc_id")
+      graft.sql.Compat.registerSamplingKey(s, "ch_docs_s", "doc_id")
       graft.sql.Compat.chSql(s, """
         SELECT lang, count() AS n, min(doc_id) AS lo, max(doc_id) AS hi
         FROM ch_docs_s SAMPLE 0.25
@@ -511,7 +511,7 @@ object FlowQueries {
         col("event_id").as("ver"), col("event_type"),
         round(col("value") * 100, 0).cast("long").as("cents"))
       ev.createOrReplaceTempView("ch_user_state")
-      graft.sql.Compat.registerReplacing("ch_user_state",
+      graft.sql.Compat.registerReplacing(s, "ch_user_state",
         Seq("user_id"), "ver")
       graft.sql.Compat.chSql(s, """
         SELECT date, user_id, event_type, cents

@@ -1,9 +1,12 @@
 package graft.sql
 
+import java.util.regex.Pattern
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Cast, CurrentDate, If,
   Literal, TruncTimestamp}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, CountIf,
   HyperLogLogPlusPlus, MaxBy, MinBy, Sum}
 import org.apache.spark.sql.functions._
@@ -883,7 +886,7 @@ object Compat {
           s"splitByChar separator must be a string literal, got $other")
       }
       capSubstrings(
-        StringSplit(e(1), Literal(java.util.regex.Pattern.quote(sep)),
+        StringSplit(e(1), Literal(Pattern.quote(sep)),
           Literal(-1)), e, 2)
     }
     // -State / -Merge combinators (the AggregatingMergeTree surface):
@@ -1087,8 +1090,6 @@ object Compat {
             Multiply(VSub(x, y), VSub(x, y))))))
         f("L1Distance")(e =>
           fold(zip(e(0), e(1), (x, y) => Abs(VSub(x, y)))))
-        f("LinfDistance")(e => ArrayMax(
-          zip(e(0), e(1), (x, y) => Abs(VSub(x, y)))))
         f("cosineDistance")(e => VSub(Literal(1.0),
           Divide(dot(e(0), e(1)),
             Multiply(Sqrt(l2sq(e(0))), Sqrt(l2sq(e(1)))))))
@@ -1880,8 +1881,8 @@ object Compat {
     locally {
       import org.apache.spark.sql.catalyst.expressions.{Base64, BitwiseAnd,
         BitwiseNot, BitwiseOr, BitwiseXor, DateAdd, Expression, RLike,
-        RegExpExtract, ShiftLeft, ShiftRight, StringReplace, TimestampAdd,
-        TimestampDiff, UnBase64}
+        RegExpExtract, ShiftLeft, ShiftRight, StringReplace, TimestampDiff,
+        UnBase64}
       import org.apache.spark.sql.types.{BinaryType, StringType}
       import org.apache.spark.unsafe.types.UTF8String
       f("replaceAll")(e => StringReplace(e(0), e(1), e(2)))
@@ -1896,28 +1897,16 @@ object Compat {
       f("extract") { e =>
         val grp = e(1) match {
           case Literal(u: UTF8String, StringType) =>
-            if (java.util.regex.Pattern.compile(u.toString)
+            if (Pattern.compile(u.toString)
               .matcher("").groupCount() > 0) 1 else 0
           case other => throw new IllegalArgumentException(
             s"extract needs a literal pattern, got $other")
         }
         RegExpExtract(e(0), e(1), Literal(grp))
       }
-      def addT(u: String)(e: Seq[Expression]): Expression =
-        TimestampAdd(u, e(1), Cast(e(0), TimestampType))
-      def subT(u: String)(e: Seq[Expression]): Expression =
-        TimestampAdd(u,
-          org.apache.spark.sql.catalyst.expressions.UnaryMinus(e(1)),
-          Cast(e(0), TimestampType))
-      Seq("Years" -> "YEAR", "Months" -> "MONTH", "Weeks" -> "WEEK",
-        "Days" -> "DAY", "Hours" -> "HOUR", "Minutes" -> "MINUTE",
-        "Seconds" -> "SECOND").foreach { case (n, u) =>
-        f(s"add$n")(addT(u))
-        f(s"subtract$n")(subT(u))
-      }
-      // dateDiff with CH's QUOTED unit ('day') is handled in
-      // translateCh0's token pass — Spark's parser owns dateDiff and
-      // demands an unquoted unit keyword, so the registry never sees it
+      // dateDiff with CH's QUOTED unit ('day') is rewritten by
+      // rewriteDateDiff — Spark's parser owns dateDiff and demands an
+      // unquoted unit keyword, so the registry never sees it
       f("toDateTime")(e => Cast(e.head, TimestampType))
       f("yesterday")(_ => DateAdd(CurrentDate(), Literal(-1)))
       f("bitAnd")(e => BitwiseAnd(e(0), e(1)))
@@ -1969,7 +1958,7 @@ object Compat {
       f("splitByString") { e =>
         val sep = e.head match {
           case Literal(u: UTF8String, StringType) =>
-            java.util.regex.Pattern.quote(u.toString)
+            Pattern.quote(u.toString)
           case other => throw new IllegalArgumentException(
             s"splitByString needs a literal separator, got $other")
         }
@@ -1979,7 +1968,7 @@ object Compat {
       f("extractAll") { e =>
         val grp = e(1) match {
           case Literal(u: UTF8String, StringType) =>
-            if (java.util.regex.Pattern.compile(u.toString)
+            if (Pattern.compile(u.toString)
               .matcher("").groupCount() > 0) 1 else 0
           case other => throw new IllegalArgumentException(
             s"extractAll needs a literal pattern, got $other")
@@ -2903,7 +2892,7 @@ object Compat {
           case other => throw new IllegalArgumentException(
             s"extractGroups needs a literal pattern, got $other")
         }
-        val n = java.util.regex.Pattern.compile(pat)
+        val n = Pattern.compile(pat)
           .matcher("").groupCount()
         require(n >= 1, "extractGroups needs at least one group")
         org.apache.spark.sql.catalyst.expressions.CreateArray(
@@ -3347,7 +3336,7 @@ object Compat {
           case other => throw new IllegalArgumentException(
             "extractAllGroups* needs a literal pattern, got " + other)
         }
-        val n = java.util.regex.Pattern.compile(re).matcher("").groupCount()
+        val n = Pattern.compile(re).matcher("").groupCount()
         require(n >= 1, "extractAllGroups*: the pattern has no groups")
         (n, (1 to n).map(g =>
           org.apache.spark.sql.catalyst.expressions
@@ -3444,7 +3433,7 @@ object Compat {
     *
     *  - parametric aggregate calls `name(params)(args)` flatten to the
     *    registered `name(params, args)` form (`quantile(0.5)(x)` →
-    *    `quantile(0.5, x)`), with a paren- and string-aware scan — a
+    *    `quantile(0.5, x)`), over [[ChLexer]]'s code tokens — a
     *    regex would mangle nested calls and quoted parens;
     *  - bare `count()` becomes `count(*)`;
     *  - a trailing `FORMAT <name>` clause (output formatting — the
@@ -3453,7 +3442,9 @@ object Compat {
     * Deliberately NOT a SQL parser: everything else in the CH dialect
     * either already parses (Spark accepts the shared SQL core) or is a
     * registered function. Unknown parametric names pass through
-    * untouched and fail analysis with a clear message.
+    * untouched and fail analysis with a clear message. Every pass reads
+    * the query through [[ChLexer]], so none rewrites inside a string
+    * literal, a quoted name or a comment.
     */
   private val parametricNames = Set("quantile", "quantiles",
     "quantileexact", "quantileexactweighted", "quantiletiming",
@@ -3483,52 +3474,29 @@ object Compat {
     * wrongly.
     */
   private def mergePrewhere(sql: String): String = {
-    final case class Tok(word: String, start: Int, end: Int)
-    val toks = scala.collection.mutable.ArrayBuffer.empty[Tok]
-    var depth = 0
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        i += 1
-        var open = true
-        while (i < n && open) {
-          if (sql.charAt(i) == '\'') {
-            if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 1 else open = false
-          }
-          i += 1
-        }
-      } else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if ((c.isLetter || c == '_') &&
-          (i == 0 || !(sql.charAt(i - 1).isLetterOrDigit ||
-            sql.charAt(i - 1) == '_'))) {
-        val s0 = i
-        while (i < n && (sql.charAt(i).isLetterOrDigit ||
-          sql.charAt(i) == '_')) i += 1
-        if (depth == 0) toks += Tok(sql.substring(s0, i), s0, i)
-      } else i += 1
-    }
+    val lx = ChLexer(sql)
+    val words = lx.code.filter(t => t.kind == ChLexer.Word && t.depth == 0)
+    def kw(t: ChLexer.Token) = lx.text(t).toUpperCase(java.util.Locale.ROOT)
     val clauseKw = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
       "UNION", "SETTINGS", "WINDOW", "QUALIFY")
-    val pres = toks.filter(_.word.equalsIgnoreCase("PREWHERE"))
-    if (pres.size != 1) return sql
-    val p = pres.head
-    val after = toks.filter(_.start > p.start)
-    val next = after.find(t => clauseKw(t.word.toUpperCase))
-    val clauseEnd = next.map(_.start).getOrElse(n)
-    val pClause = sql.substring(p.end, clauseEnd).trim
-    next match {
-      case Some(w) if w.word.equalsIgnoreCase("WHERE") =>
-        val wEnd = toks.filter(_.start > w.start)
-          .find(t => clauseKw(t.word.toUpperCase)).map(_.start).getOrElse(n)
-        val wClause = sql.substring(w.end, wEnd).trim
-        sql.substring(0, p.start) +
-          s"WHERE ($pClause) AND ($wClause) " + sql.substring(wEnd)
-      case _ =>
-        sql.substring(0, p.start) + s"WHERE $pClause " +
-          sql.substring(clauseEnd)
+    def clauseAfter(t: ChLexer.Token) =
+      words.find(w => w.start > t.start && clauseKw(kw(w)))
+    words.filter(kw(_) == "PREWHERE") match {
+      case Seq(p) =>
+        val next = clauseAfter(p)
+        val clauseEnd = next.fold(sql.length)(_.start)
+        val pClause = lx.slice(p.end, clauseEnd)
+        next match {
+          case Some(w) if kw(w) == "WHERE" =>
+            val wEnd = clauseAfter(w).fold(sql.length)(_.start)
+            sql.substring(0, p.start) +
+              s"WHERE ($pClause) AND (${lx.slice(w.end, wEnd)}) " +
+              sql.substring(wEnd)
+          case _ =>
+            sql.substring(0, p.start) + s"WHERE $pClause " +
+              sql.substring(clauseEnd)
+        }
+      case _ => sql
     }
   }
 
@@ -3539,49 +3507,9 @@ object Compat {
     * a join/membership keyword, so a column actually named `global`
     * survives.
     */
-  private def stripGlobal(sql: String): String = {
-    val follow = Set("IN", "NOT", "JOIN", "ANY", "ALL", "LEFT", "RIGHT",
-      "INNER", "FULL", "CROSS", "SEMI", "ANTI")
-    val out = new StringBuilder(sql.length)
-    var i = 0
-    val n = sql.length
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        out.append(c); i += 1
-        var open = true
-        while (i < n && open) {
-          out.append(sql.charAt(i))
-          if (sql.charAt(i) == '\'') {
-            if (i + 1 < n && sql.charAt(i + 1) == '\'') {
-              out.append('\''); i += 1
-            } else open = false
-          }
-          i += 1
-        }
-      } else if ((c.isLetter || c == '_') &&
-          (i == 0 || !(sql.charAt(i - 1).isLetterOrDigit ||
-            sql.charAt(i - 1) == '_'))) {
-        val s0 = i
-        while (i < n && (sql.charAt(i).isLetterOrDigit ||
-          sql.charAt(i) == '_')) i += 1
-        val w = sql.substring(s0, i)
-        val isGlobal = w.equalsIgnoreCase("GLOBAL") && {
-          var j = i
-          while (j < n && sql.charAt(j).isWhitespace) j += 1
-          val k0 = j
-          while (j < n && (sql.charAt(j).isLetterOrDigit ||
-            sql.charAt(j) == '_')) j += 1
-          j > k0 && follow(sql.substring(k0, j).toUpperCase)
-        }
-        if (isGlobal) {
-          // swallow one following whitespace run with it
-          while (i < n && sql.charAt(i).isWhitespace) i += 1
-        } else out.append(w)
-      } else { out.append(c); i += 1 }
-    }
-    out.toString
-  }
+  private def stripGlobal(sql: String): String =
+    ChLexer.replaceAll(sql, "(?i)\\bGLOBAL\\s+(?=(?:IN|NOT|JOIN|ANY|ALL|" +
+      "LEFT|RIGHT|INNER|FULL|CROSS|SEMI|ANTI)\\b)", "")
 
   /** `GROUP BY ... WITH TOTALS` → `GROUP BY GROUPING SETS ((...), ())`:
     * the per-group rows plus ONE all-groups totals row, ClickHouse's
@@ -3593,18 +3521,16 @@ object Compat {
     // the captured key list must not span ANOTHER `GROUP BY` — a lazy
     // `(.+?)` would anchor on the FIRST GROUP BY in the statement and
     // swallow a subquery/CTE boundary when the WITH TOTALS belongs to an
-    // outer (later) GROUP BY, emitting invalid SQL
+    // outer (later) GROUP BY, emitting invalid SQL. ClickHouse's other
+    // grouping modifiers map onto Spark's own ROLLUP/CUBE (same subtotal
+    // semantics; NULL keys on subtotal rows — the same documented
+    // deviation as TOTALS)
     val keys = "((?:(?!\\bGROUP\\s+BY\\b).)+?)"
-    sql
-      .replaceAll(s"(?is)GROUP\\s+BY\\s+$keys\\s+WITH\\s+TOTALS",
-        "GROUP BY GROUPING SETS (($1), ())")
-      // ClickHouse's other grouping modifiers map onto Spark's own
-      // ROLLUP/CUBE (same subtotal semantics; NULL keys on subtotal
-      // rows — the same documented deviation as TOTALS)
-      .replaceAll(s"(?is)GROUP\\s+BY\\s+$keys\\s+WITH\\s+ROLLUP",
-        "GROUP BY ROLLUP ($1)")
-      .replaceAll(s"(?is)GROUP\\s+BY\\s+$keys\\s+WITH\\s+CUBE",
-        "GROUP BY CUBE ($1)")
+    Seq("TOTALS" -> "GROUPING SETS (($1), ())", "ROLLUP" -> "ROLLUP ($1)",
+      "CUBE" -> "CUBE ($1)").foldLeft(sql) { case (acc, (mod, to)) =>
+      ChLexer.replaceAll(acc,
+        s"(?is)GROUP\\s+BY\\s+$keys\\s+WITH\\s+$mod", s"GROUP BY $to")
+    }
   }
 
   /** CH `[LEFT] ARRAY JOIN <expr> AS <alias>` (the row-multiplying
@@ -3618,11 +3544,11 @@ object Compat {
     */
   private def rewriteArrayJoin(sql: String): String = {
     val expr = "((?:(?!\\bAS\\b).)+?)"
-    sql
-      .replaceAll(s"(?is)\\bLEFT\\s+ARRAY\\s+JOIN\\s+$expr\\s+AS\\s+(\\w+)",
-        "LATERAL VIEW OUTER explode($1) __aj AS $2")
-      .replaceAll(s"(?is)\\bARRAY\\s+JOIN\\s+$expr\\s+AS\\s+(\\w+)",
-        "LATERAL VIEW explode($1) __aj AS $2")
+    Seq("\\bLEFT\\s+" -> "OUTER ", "\\b" -> "").foldLeft(sql) {
+      case (acc, (left, outer)) => ChLexer.replaceAll(acc,
+        s"(?is)${left}ARRAY\\s+JOIN\\s+$expr\\s+AS\\s+(\\w+)",
+        s"LATERAL VIEW ${outer}explode($$1) __aj AS $$2")
+    }
   }
 
   /** CH `ORDER BY <ord> LIMIT <n> BY <cols> [LIMIT <m>]` — the
@@ -3637,39 +3563,58 @@ object Compat {
     * fails loudly in Spark's parser.
     */
   private def rewriteLimitBy(sql: String): String = {
-    val m = java.util.regex.Pattern.compile(
-      "(?is)^(.*?)\\bORDER\\s+BY\\s+(.+?)\\s+LIMIT\\s+(\\d+)\\s+BY\\s+" +
-        "(.+?)\\s*(LIMIT\\s+\\d+\\s*)?;?\\s*$").matcher(sql)
-    if (!m.matches()) return sql
-    val (head, ord, n, cols) =
-      (m.group(1).trim, m.group(2).trim, m.group(3), m.group(4).trim)
-    val tailLimit = Option(m.group(5)).map(" " + _.trim).getOrElse("")
-    // depth-0 check: the ORDER BY we anchored on must not live inside
-    // a subquery (unbalanced parens in `head` would mean it does)
-    val depth = head.foldLeft(0) {
-      case (d, '(') => d + 1
-      case (d, ')') => d - 1
-      case (d, _)   => d
-    }
-    if (depth != 0) return sql
+    val lx = ChLexer(sql)
+    val m = limitBy.matcher(lx.mask)
+    // the ORDER BY we anchored on must not live inside a subquery
+    if (!m.matches() ||
+        !lx.code.exists(t => t.start == m.end(1) && t.depth == 0)) return sql
+    val Seq(head, ord, n, cols) = (1 to 4).map(lx.group(m, _))
+    val tailLimit = Option(lx.group(m, 5)).map(" " + _).getOrElse("")
     s"SELECT * EXCEPT(__lb) FROM (SELECT *, ROW_NUMBER() OVER " +
       s"(PARTITION BY $cols ORDER BY $ord) AS __lb FROM ($head) __lbq) " +
       s"WHERE __lb <= $n ORDER BY $ord$tailLimit"
   }
+  private val limitBy = Pattern.compile(
+    "(?is)^(.*?)\\bORDER\\s+BY\\s+(.+?)\\s+LIMIT\\s+(\\d+)\\s+BY\\s+" +
+      "(.+?)\\s*(LIMIT\\s+\\d+\\s*)?;?\\s*$")
 
-  /** Sampling keys for CH `SAMPLE k`: table/view name (as written in
-    * the query) → the key expression whose md5 prefix decides
-    * membership. CH resolves the key from the table DDL's `SAMPLE BY`;
-    * Spark-side the view owner registers it once. The predicate is
-    * DETERMINISTIC in the key — the same rows sample on every engine
-    * and every run (CH's repeatable-sampling contract), unlike
-    * `TABLESAMPLE`'s per-scan randomness.
+  /** A session's ClickHouse table metadata that query text cannot
+    * carry, by lowercased table/view name: the `SAMPLE` key whose md5
+    * prefix decides membership (CH reads it from the DDL's `SAMPLE BY`;
+    * the predicate is DETERMINISTIC in the key, CH's repeatable-sampling
+    * contract, unlike `TABLESAMPLE`), and the (keys, version column) of
+    * a view that `FROM <t> FINAL` reads as a ReplacingMergeTree. The
+    * session owns it: `GraftExtensions` injects one per session state as
+    * a check rule that checks nothing, so a `newSession()` child starts
+    * empty.
     */
-  private val samplingKeys =
-    new scala.collection.concurrent.TrieMap[String, String]
+  final class ChTables extends (LogicalPlan => Unit) {
+    val samplingKeys = new scala.collection.concurrent.TrieMap[String, String]
+    val replacing =
+      new scala.collection.concurrent.TrieMap[String, (Seq[String], String)]
+    def apply(plan: LogicalPlan): Unit = ()
+  }
 
-  def registerSamplingKey(table: String, keyExpr: String): Unit =
-    samplingKeys.put(table.toLowerCase, keyExpr)
+  private def chTables(spark: SparkSession): ChTables =
+    spark.sessionState.analyzer.extendedCheckRules
+      .collectFirst { case t: ChTables => t }
+      .getOrElse(throw new IllegalStateException("the session was built " +
+        "without graft.functions.GraftExtensions (use graft.Graft.session)"))
+
+  def registerSamplingKey(spark: SparkSession, table: String,
+      keyExpr: String): Unit =
+    chTables(spark).samplingKeys.put(table.toLowerCase, keyExpr)
+
+  /** Register `view` for CH `FROM <view> FINAL`: [[chSql]] materializes
+    * `<view>__final` as a temp view through the SAME collapse as the
+    * engine's background merge ([[graft.sink.TxTable.latestPerKey]] —
+    * version-led struct MAX per (date, keys), deterministic payload
+    * tie-break), so `SELECT ... FINAL` before a merge ≡ the same SELECT
+    * after it.
+    */
+  def registerReplacing(spark: SparkSession, view: String, keys: Seq[String],
+      versionCol: String): Unit =
+    chTables(spark).replacing.put(view.toLowerCase, (keys, versionCol))
 
   /** CH `FROM <t> SAMPLE <k>` (0 < k < 1) → a deterministic md5-prefix
     * range predicate on the registered sampling key: the first 4 hex
@@ -3679,40 +3624,23 @@ object Compat {
     * oracle replays it verbatim). Tables with no registered key pass
     * through and fail loudly in the parser.
     */
-  private def rewriteSample(sql: String): String = {
-    val p = java.util.regex.Pattern.compile(
-      "(?is)\\b(FROM|,)\\s+([A-Za-z_][\\w.]*)\\s+SAMPLE\\s+(0?\\.\\d+)")
-    val m = p.matcher(sql)
-    val sb = new java.lang.StringBuilder
-    while (m.find()) {
-      val (kw, table, frac) = (m.group(1), m.group(2), m.group(3).toDouble)
-      samplingKeys.get(table.toLowerCase) match {
+  private def rewriteSample(spark: SparkSession, sql: String): String = {
+    val keys = chTables(spark).samplingKeys
+    val lx = ChLexer(sql)
+    lx.replaceAll(samplePattern) { m =>
+      val (kw, table) = (lx.group(m, 1), lx.group(m, 2))
+      val frac = lx.group(m, 3).toDouble
+      keys.get(table.toLowerCase) match {
         case Some(key) if frac > 0 && frac < 1 =>
           val thr = f"${math.round(frac * 65536).toInt}%04x"
-          m.appendReplacement(sb, java.util.regex.Matcher.quoteReplacement(
-            s"$kw (SELECT * FROM $table WHERE " +
-              s"substring(md5(cast($key AS STRING)), 1, 4) < '$thr') $table"))
-        case _ => m.appendReplacement(sb,
-          java.util.regex.Matcher.quoteReplacement(m.group(0)))
+          s"$kw (SELECT * FROM $table WHERE " +
+            s"substring(md5(cast($key AS STRING)), 1, 4) < '$thr') $table"
+        case _ => sql.substring(m.start, m.end)
       }
     }
-    m.appendTail(sb)
-    sb.toString
   }
-
-  /** Replacing-view registry for CH `FROM <t> FINAL`: view name →
-    * (keys, version column). [[chSql]] materializes `<t>__final` as a
-    * temp view through the SAME collapse as the engine's background
-    * merge ([[graft.sink.TxTable.latestPerKey]] — version-led struct
-    * MAX per (date, keys), deterministic payload tie-break), so
-    * `SELECT ... FINAL` before a merge ≡ the same SELECT after it.
-    */
-  private val replacingViews =
-    new scala.collection.concurrent.TrieMap[String, (Seq[String], String)]
-
-  def registerReplacing(view: String, keys: Seq[String],
-      versionCol: String): Unit =
-    replacingViews.put(view.toLowerCase, (keys, versionCol))
+  private val samplePattern = Pattern.compile(
+    "(?is)\\b(FROM|,)\\s+([A-Za-z_][\\w.]*)\\s+SAMPLE\\s+(0?\\.\\d+)")
 
   /** CH `FROM merge('<dir>', '<name regex>')` — the multi-table union
     * read. Each occurrence materializes a temp view through
@@ -3721,22 +3649,16 @@ object Compat {
     * call text is replaced by the view name.
     */
   private def rewriteMergeFn(spark: SparkSession, sql: String): String = {
-    val p = java.util.regex.Pattern.compile(
-      "(?is)\\bmerge\\s*\\(\\s*'([^']+)'\\s*,\\s*'([^']+)'\\s*\\)")
-    val m = p.matcher(sql)
-    val sb = new java.lang.StringBuilder
+    val lx = ChLexer(sql)
     var n = 0
-    while (m.find()) {
-      val (dir, re) = (m.group(1), m.group(2))
+    lx.replaceAll(Pattern.compile(
+        "(?is)\\bmerge\\s*\\(\\s*'([^']+)'\\s*,\\s*'([^']+)'\\s*\\)")) { m =>
+      val (dir, re) = (lx.group(m, 1), lx.group(m, 2))
       val view = s"__merge_${math.abs((dir + re).hashCode)}_$n"
       n += 1
-      graft.sink.TxTable.readMerge(spark, dir, re)
-        .createOrReplaceTempView(view)
-      m.appendReplacement(sb,
-        java.util.regex.Matcher.quoteReplacement(view))
+      graft.sink.TxTable.readMerge(spark, dir, re).createOrReplaceTempView(view)
+      view
     }
-    m.appendTail(sb)
-    sb.toString
   }
 
   /** CH `ASOF [LEFT] JOIN` → the engine's single-shuffle union-window
@@ -3760,18 +3682,18 @@ object Compat {
     * unmatched right columns with NULL, not CH's type defaults.
     */
   private def rewriteAsof(spark: SparkSession, sql: String): String = {
-    val p = java.util.regex.Pattern.compile(
+    val p = Pattern.compile(
       "(?is)\\bFROM\\s+([A-Za-z_][\\w.]*)\\s+(?:AS\\s+)?([A-Za-z_]\\w*)\\s+" +
         "ASOF\\s+(LEFT\\s+|INNER\\s+)?JOIN\\s+" +
         "([A-Za-z_][\\w.]*)\\s+(?:AS\\s+)?([A-Za-z_]\\w*)\\s+ON\\s+(.+?)" +
         "(\\bWHERE\\b|\\bGROUP\\b|\\bHAVING\\b|\\bORDER\\b|\\bLIMIT\\b|$)")
-    val m = p.matcher(sql)
+    val lx = ChLexer(sql)
+    val m = p.matcher(lx.mask)
     if (!m.find()) return sql
-    val (aTbl, aAl) = (m.group(1), m.group(2))
-    val left = Option(m.group(3)).exists(_.trim.equalsIgnoreCase("LEFT"))
-    val (bTbl, bAl) = (m.group(4), m.group(5))
-    val conds = m.group(6).trim.split("(?i)\\bAND\\b").map(_.trim)
-    val cond = java.util.regex.Pattern.compile(
+    val Seq(aTbl, aAl, leftKw, bTbl, bAl, on) = (1 to 6).map(lx.group(m, _))
+    val left = Option(leftKw).exists(_.equalsIgnoreCase("LEFT"))
+    val conds = on.split("(?i)\\bAND\\b").map(_.trim)
+    val cond = Pattern.compile(
       s"(?i)^([A-Za-z_]\\w*)\\.([A-Za-z_]\\w*)\\s*(>=|<=|=|>|<)\\s*" +
         s"([A-Za-z_]\\w*)\\.([A-Za-z_]\\w*)$$")
     // classify: equality keys as (aCol, bCol); ONE inequality,
@@ -3832,65 +3754,33 @@ object Compat {
     // over the same tables)
     val view = s"__asof_${asofSeq.incrementAndGet()}"
     out.createOrReplaceTempView(view)
-    val spliced = new java.lang.StringBuilder(sql)
-      .replace(m.start, m.end - m.group(7).length, s" FROM $view ")
-      .toString
+    val spliced = sql.substring(0, m.start) + s" FROM $view " +
+      sql.substring(m.start(7))
     // alias-qualified references elsewhere in the query → the union
     // frame's column names (both sides rewrite, so an unqualified
     // right-side reference fails loudly instead of silently resolving);
-    // the rewrite is token-aware — string literals and longer
-    // identifiers that merely START with the alias are left intact
-    rewriteAliasRefs(spliced, Seq(aAl -> "__l_", bAl -> "__r_"))
+    // string literals and longer identifiers that merely START with
+    // the alias are left intact
+    Seq(aAl -> "__l_", bAl -> "__r_").foldLeft(spliced) {
+      case (acc, (alias, repl)) => ChLexer.replaceAll(acc,
+        s"(?i)\\b${Pattern.quote(alias)}\\.", repl)
+    }
   }
 
   private val asofSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Replace `alias.` with `repl` only where `alias` stands as a whole
-    * identifier outside single-quoted string literals. */
-  private def rewriteAliasRefs(sql: String,
-      repls: Seq[(String, String)]): String = {
-    val sb = new StringBuilder(sql.length)
-    var i = 0; val n = sql.length
-    def identCh(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'') {
-        sb.append(c); i += 1
-        var open = true
-        while (i < n && open) {
-          sb.append(sql.charAt(i))
-          if (sql.charAt(i) == '\'') {
-            if (i + 1 < n && sql.charAt(i + 1) == '\'') {
-              sb.append('\''); i += 1
-            } else open = false
-          }
-          i += 1
-        }
-      } else if (identCh(c) && (i == 0 || !identCh(sql.charAt(i - 1)))) {
-        var j = i
-        while (j < n && identCh(sql.charAt(j))) j += 1
-        val word = sql.substring(i, j)
-        repls.find { case (a, _) =>
-          word.equalsIgnoreCase(a) && j < n && sql.charAt(j) == '.' } match {
-          case Some((_, r)) => sb.append(r); i = j + 1
-          case None => sb.append(word); i = j
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   private def rewriteFinal(spark: SparkSession, sql: String): String =
-    replacingViews.foldLeft(sql) { case (acc, (view, (keys, ver))) =>
-      val p = java.util.regex.Pattern.compile(
-        s"(?i)\\b${java.util.regex.Pattern.quote(view)}\\s+FINAL\\b")
-      if (!p.matcher(acc).find()) acc
-      else {
-        val fv = s"${view.replace('.', '_')}__final"
-        graft.sink.TxTable.latestPerKey(spark.table(view), keys, ver)
-          .createOrReplaceTempView(fv)
-        p.matcher(acc).replaceAll(fv)
-      }
+    chTables(spark).replacing.foldLeft(sql) {
+      case (acc, (view, (keys, ver))) =>
+        val lx = ChLexer(acc)
+        val p = Pattern.compile(s"(?i)\\b${Pattern.quote(view)}\\s+FINAL\\b")
+        if (!p.matcher(lx.mask).find()) acc
+        else {
+          val fv = s"${view.replace('.', '_')}__final"
+          graft.sink.TxTable.latestPerKey(spark.table(view), keys, ver)
+            .createOrReplaceTempView(fv)
+          lx.replaceAll(p)(_ => fv)
+        }
     }
 
   def translateCh(sql: String): String = {
@@ -3898,18 +3788,19 @@ object Compat {
     // rewriteDecayed for provably time-ordered windows); a bare
     // GROUP BY use would hit DecayedWindowAgg's time-ordered merge
     // with engine-internal block order — refuse like the public
-    // spelling instead of shipping a silently wrong answer
-    if (java.util.regex.Pattern.compile("(?i)__graft_decayed_")
-        .matcher(sql).find())
+    // spelling instead of shipping a silently wrong answer. Only names
+    // count: a literal or a comment may mention it.
+    val lx = ChLexer(sql)
+    if (lx.code.exists(t => t.kind != ChLexer.Str && lx.text(t)
+        .toLowerCase(java.util.Locale.ROOT).contains("__graft_decayed_")))
       throw new IllegalArgumentException(
         "__graft_decayed_* are internal; use exponentialTimeDecayed" +
           "{Sum,Count,Max,Avg}(tau)(...) OVER (... ORDER BY t)")
     val base = rewriteMannWhitney(rewriteKolmogorov(rewriteEma(
       translateCh0(rewriteDecayed(sql)))))
     mergePrewhere(stripGlobal(rewriteTotals(rewriteLimitBy(
-      rewriteSample(rewriteArrayJoin(rewriteNumbers(rewriteAge(
-        rewriteDateDiff(rewriteRunning(rewriteRankCorr(rewriteDeltaSum(
-          base))))))))))))
+      rewriteArrayJoin(rewriteNumbers(rewriteAge(rewriteDateDiff(
+        rewriteRunning(rewriteRankCorr(rewriteDeltaSum(base)))))))))))
   }
 
   /** CH `deltaSumTimestamp(value, ts)` — the counter-delta sum: the
@@ -3957,12 +3848,6 @@ object Compat {
             s"AS __rc$t$i"
       }.mkString(", "))
 
-  private def stripStrLit(s: String): Option[String] = {
-    val t = s.trim
-    if (t.length >= 2 && t.head == '\'' && t.last == '\'')
-      Some(t.substring(1, t.length - 1)) else None
-  }
-
   /** CH `mannWhitneyUTest([alternative[, continuity_correction]])
     * (sample_data, sample_index)` → `(u_statistic, p_value)`:
     * rows with index 0 form the first sample, anything else the
@@ -3989,7 +3874,7 @@ object Compat {
   private def rewriteMannWhitney(sql: String): String =
     rewriteGroupWindow(sql, "mannwhitneyutest",
       call = (i, a) => {
-        val alt = if (a.size >= 3) stripStrLit(a(0)).getOrElse(
+        val alt = if (a.size >= 3) ChLexer.stringValue(a(0)).getOrElse(
           throw new IllegalArgumentException(
             "mannWhitneyUTest alternative must be a string literal, " +
               s"got ${a(0)}")) else "two-sided"
@@ -4044,7 +3929,7 @@ object Compat {
   private def rewriteKolmogorov(sql: String): String =
     rewriteGroupWindow(sql, "kolmogorovsmirnovtest",
       call = (i, a) => {
-        val alt = if (a.size >= 3) stripStrLit(a(0)).getOrElse(
+        val alt = if (a.size >= 3) ChLexer.stringValue(a(0)).getOrElse(
           throw new IllegalArgumentException(
             "kolmogorovSmirnovTest alternative must be a string " +
               s"literal, got ${a(0)}")) else "two-sided"
@@ -4052,8 +3937,8 @@ object Compat {
           "kolmogorovSmirnovTest: only the two-sided alternative is " +
             s"supported (got '$alt') — one-sided D+/D- is a different " +
             "statistic this rewrite does not compute")
-        val method = if (a.size == 4) stripStrLit(a(1)).getOrElse("auto")
-          else "auto"
+        val method = Option(a).filter(_.size == 4)
+          .flatMap(a => ChLexer.stringValue(a(1))).getOrElse("auto")
         if (method == "exact") throw new IllegalArgumentException(
           "kolmogorovSmirnovTest: computation_method 'exact' is not " +
             "supported — the p-value here is always the asymptotic " +
@@ -4111,47 +3996,27 @@ object Compat {
       call: (Int, Seq[String]) => String,
       defs: (Int, Seq[String], String) => String,
       argsOk: Seq[String] => Boolean = _.size == 2): String = {
-    val lower = sql.toLowerCase(java.util.Locale.ROOT)
-    if (!lower.contains(fn + "(")) return sql
-    // depth/quote map over the whole text, for clause anchoring
-    def topLevelIndexOf(word: String, from: Int): Int = {
-      var i = from; var depth = 0; var inStr = false
-      val w = word.toLowerCase(java.util.Locale.ROOT)
-      while (i < lower.length) {
-        val c = lower.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false }
-        else if (c == '\'') inStr = true
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && lower.startsWith(w, i) &&
-          (i == 0 || !lower.charAt(i - 1).isLetterOrDigit &&
-            lower.charAt(i - 1) != '_') &&
-          (i + w.length >= lower.length ||
-            !lower.charAt(i + w.length).isLetterOrDigit &&
-              lower.charAt(i + w.length) != '_')) return i
-        i += 1
-      }
-      -1
-    }
-    val trimmed = lower.dropWhile(_.isWhitespace)
-    if (!trimmed.startsWith("select")) return sql
+    val lx = ChLexer(sql)
+    val lower = lx.mask.toLowerCase(java.util.Locale.ROOT)
+    if (!lower.contains(fn + "(") || !lower.trim.startsWith("select"))
+      return sql
     val selStart = lower.indexOf("select") + "select".length
-    val fromAt = topLevelIndexOf("from", selStart)
+    val fromAt = lx.topLevel("from", selStart)
     if (fromAt < 0) return sql
-    val groupAt = topLevelIndexOf("group", fromAt)
+    val groupAt = lx.topLevel("group", fromAt)
     if (groupAt < 0) return sql
-    val byM = java.util.regex.Pattern.compile("^group\\s+by\\s")
-      .matcher(lower.substring(groupAt))
+    val byM =
+      Pattern.compile("^group\\s+by\\s").matcher(lower.substring(groupAt))
     if (!byM.find()) return sql
     val keysStart = groupAt + byM.end()
     val tailAt = Seq("having", "order", "limit")
-      .map(topLevelIndexOf(_, keysStart)).filter(_ >= 0)
+      .map(lx.topLevel(_, keysStart)).filter(_ >= 0)
       .sorted.headOption.getOrElse(sql.length)
-    val keys = sql.substring(keysStart, tailAt).trim
+    val keys = lx.slice(keysStart, tailAt)
     if (keys.isEmpty ||
       keys.split(",").exists(_.trim.matches("\\d+"))) return sql
     // every call must live in the select list
-    if (topLevelIndexOf(fn, fromAt) >= 0) return sql
+    if (lx.topLevel(fn, fromAt) >= 0) return sql
     // collect (start, argsEnd, args) per call in the select list,
     // then splice right-to-left
     val calls = scala.collection.mutable.ArrayBuffer
@@ -4160,7 +4025,7 @@ object Compat {
     while (at >= 0 && at < fromAt) {
       if (at > 0 && (lower.charAt(at - 1).isLetterOrDigit ||
           lower.charAt(at - 1) == '_')) return sql
-      splitTopLevelArgs(sql, at + fn.length + 1) match {
+      lx.args(at + fn.length + 1) match {
         case Some((args, close)) if argsOk(args) =>
           calls += ((at, close, args))
         case _ => return sql
@@ -4176,56 +4041,11 @@ object Compat {
     val defText = calls.zipWithIndex
       .map { case ((_, _, args), i) => defs(i, args, keys) }
       .mkString(", ")
-    val fromPart = sql.substring(fromAt + 4, groupAt).trim
+    val fromPart = lx.slice(fromAt + 4, groupAt)
     s"SELECT $selectList FROM (SELECT *, $defText FROM $fromPart) " +
       s"__${fn}q GROUP BY $keys ${sql.substring(tailAt)}"
   }
 
-  /** Split an argument list starting just AFTER an opening '(' at
-    * position `from` into top-level comma-separated pieces; returns
-    * (trimmed args, index of the matching ')'), None if unbalanced.
-    * Quote-aware ('' escapes toggle twice, which nets out). */
-  private def splitTopLevelArgs(sql: String, from: Int)
-      : Option[(Seq[String], Int)] = {
-    var i = from; val n = sql.length
-    var depth = 0; var inStr = false
-    val args = scala.collection.mutable.ArrayBuffer.empty[String]
-    var start = i
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') {
-        if (depth == 0) {
-          args += sql.substring(start, i)
-          return Some((args.map(_.trim).toSeq, i))
-        }
-        depth -= 1
-      } else if (c == ',' && depth == 0) {
-        args += sql.substring(start, i); start = i + 1
-      }
-      i += 1
-    }
-    None
-  }
-
-  /** CH's block-scoped "running" family. A distributed engine has no
-    * block order, so these translate only in their window-extended
-    * spelling `fn(args) OVER (...)` — CH itself deprecates the bare
-    * forms in favor of window functions, and an explicit window is
-    * the only deterministic reading at scale. Supported:
-    *  - runningDifference(x) OVER w -> x minus the previous x in w,
-    *    0 on the first row (CH's first-row contract);
-    *  - neighbor(x, k[, d]) OVER w  -> lead (k>=0) / lag (k<0) by a
-    *    LITERAL offset k (CH requires a constant too); without d the
-    *    out-of-frame fill is NULL, not CH's type default (documented
-    *    NULL-fill deviation);
-    *  - lagInFrame/leadInFrame      -> lag/lead (rename; both respect
-    *    the usual PARTITION BY/ORDER BY window).
-    * Bare spellings without OVER pass through and fail loudly in
-    * Spark's parser (the house honest-refusal contract).
-    */
   /** CH's exponentialTimeDecayed window family in its windowed
     * spelling `fn(τ)(args) OVER (w)` — Sum/Count/Max/Avg of
     * e^(−(t_r−t_i)/τ)-weighted values over an explicit window, t_r
@@ -4244,123 +4064,113 @@ object Compat {
     * exponentialTimeDecayedSum/Count/Max/Avg.
     */
   private def rewriteDecayed(sql: String): String = {
-    val head = java.util.regex.Pattern.compile(
-      "(?i)\\bexponentialTimeDecayed(Sum|Count|Max|Avg)\\s*\\(")
-    val m = head.matcher(sql)
-    if (!m.find()) return sql
-    val kind = m.group(1).toLowerCase(java.util.Locale.ROOT)
-    def pass(at: Int) =
-      sql.substring(0, at) + rewriteDecayed(sql.substring(at))
-    splitTopLevelArgs(sql, m.end) match {
-      case Some((params, pClose)) if params.length == 1 =>
-        val argM = java.util.regex.Pattern.compile("^\\s*\\(")
-          .matcher(sql.substring(pClose + 1))
-        if (!argM.find()) return pass(pClose + 1)
-        splitTopLevelArgs(sql, pClose + 1 + argM.end) match {
-          case Some((args, aClose)) =>
-            // OVER (...) inline spec, or OVER w naming a WINDOW-clause
-            // definition — both Spark spellings survive the rewrite
-            val tailS = sql.substring(aClose + 1)
-            val overP = java.util.regex.Pattern
-              .compile("(?is)^\\s*OVER\\s*\\(").matcher(tailS)
-            val overN = java.util.regex.Pattern
-              .compile("(?is)^\\s*OVER\\s+([A-Za-z_][A-Za-z0-9_]*)")
-              .matcher(tailS)
-            val winAndClose: Option[(String, Int)] =
-              if (overP.find())
-                splitTopLevelArgs(sql, aClose + 1 + overP.end).map {
-                  case (winParts, wc) => (s"(${winParts.mkString(", ")})", wc)
-                }
-              else if (overN.find())
-                Some((overN.group(1), aClose + overN.end))
-              else None
-            if (winAndClose.isEmpty) return pass(aClose + 1)
-            winAndClose match {
-              case Some((win, wClose)) =>
-                val tau = s"CAST((${params.head}) AS DOUBLE)"
-                def d(e: String) = s"CAST(($e) AS DOUBLE)"
-                // O(1)-state running form (DecayedWindowAgg) whenever
-                // the frame PROVABLY ends at the current row and is
-                // ordered by the decay-time argument — then the
-                // running re-anchored state evaluated at the frame end
-                // equals the fold's per-row anchor exactly (same
-                // math, one rescale per row instead of an O(frame)
-                // collect+fold per row). Any other / unprovable
-                // spelling keeps the fold below.
-                val specText: Option[String] =
-                  if (win.startsWith("("))
-                    Some(win.substring(1, win.length - 1))
-                  else namedWindowSpec(sql, win)
-                val tArg = args.last
-                val running: Option[String] =
-                  if (specText.exists(sp => frameEndsAtCurrentRow(sp) &&
-                      windowOrderedBy(sp, tArg))) {
-                    val vArg = kind match {
-                      case "count" => "CAST(1.0 AS DOUBLE)"
-                      case _       => d(args.head)
+    val lx = ChLexer(sql)
+    lx.rewriteEach(decayedHead) { m =>
+      def keep(end: Int) = (sql.substring(m.start, end), end)
+      lx.args(m.end) match {
+        case None => keep(sql.length)
+        case Some((params, pClose)) =>
+          lx.at(openParen, pClose + 1).filter(_ => params.length == 1) match {
+            case None => keep(pClose + 1)
+            case Some(a) => lx.args(a.end) match {
+              case None => keep(sql.length)
+              case Some((args, aClose)) =>
+                // OVER (...) inline spec, or OVER w naming a WINDOW-clause
+                // definition — both Spark spellings survive the rewrite
+                val win: Option[(String, Int)] =
+                  lx.at(overParen, aClose + 1) match {
+                    case Some(o) => lx.args(o.end).map {
+                      case (parts, wc) => (s"(${parts.mkString(", ")})", wc)
                     }
-                    if (args.length == (if (kind == "count") 1 else 2))
-                      Some(s"__graft_decayed_$kind($vArg, ${d(tArg)}, " +
-                        s"$tau) OVER $win")
-                    else None
-                  } else None
-                if (running.isDefined)
-                  return sql.substring(0, m.start) + running.get +
-                    rewriteDecayed(sql.substring(wClose + 1))
-                // NULL parity with the running form (DecayedWindowAgg):
-                // rows with a NULL value or time contribute nothing —
-                // the list is filtered before folding, and an
-                // all-invalid frame yields NULL (NULL-seeded
-                // accumulator), not 0/NaN. One documented residual
-                // divergence: a CURRENT row whose own t is NULL
-                // anchors the fold at NULL (result NULL) while the
-                // running form reports the state at the last valid
-                // row; no declared gate carries NULL decay times.
-                val repl: Option[String] = (kind, args) match {
-                  case ("count", Seq(t)) =>
-                    val anchor = d(t)
-                    // collect_list(t) already skips NULL t entries
-                    Some(s"aggregate(collect_list(${d(t)}) OVER $win" +
-                      s", CAST(NULL AS DOUBLE), (__dacc, __dt) -> " +
-                      s"coalesce(__dacc, CAST(0.0 AS DOUBLE)) + " +
-                      s"exp((__dt - $anchor) / $tau))")
-                  case (_, Seq(v, t)) =>
-                    val anchor = d(t)
-                    val lst = s"filter(collect_list(named_struct(" +
-                      s"'v', ${d(v)}, 't', ${d(t)})) OVER $win, " +
-                      s"__dp -> __dp.v IS NOT NULL AND " +
-                      s"__dp.t IS NOT NULL)"
-                    val w = s"exp((__dp.t - $anchor) / $tau)"
-                    kind match {
-                      case "sum" => Some(s"aggregate($lst, " +
-                        s"CAST(NULL AS DOUBLE), (__dacc, __dp) -> " +
-                        s"coalesce(__dacc, CAST(0.0 AS DOUBLE)) + " +
-                        s"__dp.v * $w)")
-                      case "max" => Some(s"array_max(transform(" +
-                        s"$lst, __dp -> __dp.v * $w))")
-                      case "avg" => Some(s"aggregate($lst, " +
-                        s"named_struct('s', CAST(NULL AS DOUBLE), " +
-                        s"'c', CAST(0.0 AS DOUBLE)), " +
-                        s"(__dacc, __dp) -> named_struct(" +
-                        s"'s', coalesce(__dacc.s, CAST(0.0 AS DOUBLE))" +
-                        s" + __dp.v * $w, " +
-                        s"'c', __dacc.c + $w), " +
-                        s"__dacc -> __dacc.s / __dacc.c)")
-                      case _ => None
-                    }
-                  case _ => None
+                    case None => lx.at(overName, aClose + 1)
+                      .map(o => (lx.group(o, 1), o.end - 1))
+                  }
+                win match {
+                  case None => keep(aClose + 1)
+                  case Some((w, wClose)) =>
+                    decayedWindow(lx, m.group(1).toLowerCase(
+                      java.util.Locale.ROOT), params.head, args, w)
+                      .fold(keep(wClose + 1))(r => (r, wClose + 1))
                 }
-                repl match {
-                  case Some(r) => sql.substring(0, m.start) + r +
-                    rewriteDecayed(sql.substring(wClose + 1))
-                  case None => pass(wClose + 1)
-                }
-              case None => sql
             }
-          case None => sql
+          }
+      }
+    }
+  }
+  private val decayedHead = Pattern.compile(
+    "(?i)\\bexponentialTimeDecayed(Sum|Count|Max|Avg)\\s*\\(")
+  private val openParen = Pattern.compile("\\s*\\(")
+  private val overParen =
+    Pattern.compile("(?is)\\s*OVER\\s*\\(")
+  private val overName = Pattern
+    .compile("(?is)\\s*OVER\\s+([A-Za-z_][A-Za-z0-9_]*)")
+
+  /** The translation of `fn(param)(args) OVER win` for decay `kind`, or
+    * None for an argument list the family does not take. */
+  private def decayedWindow(lx: ChLexer.Lexed, kind: String, param: String,
+      args: Seq[String], win: String): Option[String] = {
+    val tau = s"CAST(($param) AS DOUBLE)"
+    def d(e: String) = s"CAST(($e) AS DOUBLE)"
+    // O(1)-state running form (DecayedWindowAgg) whenever the frame PROVABLY
+    // ends at the current row and is ordered by the decay-time argument —
+    // then the running re-anchored state evaluated at the frame end equals
+    // the fold's per-row anchor exactly (same math, one rescale per row
+    // instead of an O(frame) collect+fold per row). Any other / unprovable
+    // spelling keeps the fold below.
+    val specText =
+      if (win.startsWith("(")) Some(win.substring(1, win.length - 1))
+      else namedWindowSpec(lx, win)
+    val tArg = args.last
+    if (specText.exists(sp => frameEndsAtCurrentRow(sp) &&
+        windowOrderedBy(sp, tArg)) &&
+        args.length == (if (kind == "count") 1 else 2)) {
+      val vArg = kind match {
+        case "count" => "CAST(1.0 AS DOUBLE)"
+        case _       => d(args.head)
+      }
+      return Some(s"__graft_decayed_$kind($vArg, ${d(tArg)}, " +
+        s"$tau) OVER $win")
+    }
+    // NULL parity with the running form (DecayedWindowAgg): rows with a NULL
+    // value or time contribute nothing — the list is filtered before folding,
+    // and an all-invalid frame yields NULL (NULL-seeded accumulator), not
+    // 0/NaN. One documented residual divergence: a CURRENT row whose own t is
+    // NULL anchors the fold at NULL (result NULL) while the running form
+    // reports the state at the last valid row; no declared gate carries NULL
+    // decay times.
+    (kind, args) match {
+      case ("count", Seq(t)) =>
+        val anchor = d(t)
+        // collect_list(t) already skips NULL t entries
+        Some(s"aggregate(collect_list(${d(t)}) OVER $win" +
+          s", CAST(NULL AS DOUBLE), (__dacc, __dt) -> " +
+          s"coalesce(__dacc, CAST(0.0 AS DOUBLE)) + " +
+          s"exp((__dt - $anchor) / $tau))")
+      case (_, Seq(v, t)) =>
+        val anchor = d(t)
+        val lst = s"filter(collect_list(named_struct(" +
+          s"'v', ${d(v)}, 't', ${d(t)})) OVER $win, " +
+          s"__dp -> __dp.v IS NOT NULL AND " +
+          s"__dp.t IS NOT NULL)"
+        val w = s"exp((__dp.t - $anchor) / $tau)"
+        kind match {
+          case "sum" => Some(s"aggregate($lst, " +
+            s"CAST(NULL AS DOUBLE), (__dacc, __dp) -> " +
+            s"coalesce(__dacc, CAST(0.0 AS DOUBLE)) + " +
+            s"__dp.v * $w)")
+          case "max" => Some(s"array_max(transform(" +
+            s"$lst, __dp -> __dp.v * $w))")
+          case "avg" => Some(s"aggregate($lst, " +
+            s"named_struct('s', CAST(NULL AS DOUBLE), " +
+            s"'c', CAST(0.0 AS DOUBLE)), " +
+            s"(__dacc, __dp) -> named_struct(" +
+            s"'s', coalesce(__dacc.s, CAST(0.0 AS DOUBLE))" +
+            s" + __dp.v * $w, " +
+            s"'c', __dacc.c + $w), " +
+            s"__dacc -> __dacc.s / __dacc.c)")
+          case _ => None
         }
-      case Some((_, pClose)) => pass(pClose + 1)
-      case None => sql
+      case _ => None
     }
   }
 
@@ -4368,13 +4178,12 @@ object Compat {
     * present — lets [[rewriteDecayed]] prove frame properties of a
     * named window before choosing the running form.
     */
-  private def namedWindowSpec(sql: String, name: String): Option[String] = {
-    val p = java.util.regex.Pattern.compile(
-      "(?is)\\bWINDOW\\s+" + java.util.regex.Pattern.quote(name) +
-        "\\s+AS\\s*\\(")
-    val m = p.matcher(sql)
-    if (!m.find()) None
-    else splitTopLevelArgs(sql, m.end).map(_._1.mkString(", "))
+  private def namedWindowSpec(lx: ChLexer.Lexed,
+      name: String): Option[String] = {
+    val m = Pattern.compile(
+      "(?is)\\bWINDOW\\s+" + Pattern.quote(name) +
+        "\\s+AS\\s*\\(").matcher(lx.mask)
+    if (!m.find()) None else lx.args(m.end).map(_._1.mkString(", "))
   }
 
   /** Whether a window spec's frame ends at the CURRENT ROW — true for
@@ -4388,23 +4197,15 @@ object Compat {
     * last-frame-row anchor and the fold's current-row anchor differ
     * by e^((t_end−t_cur)/τ), so admitting it would be wrong.
     */
-  private def frameEndsAtCurrentRow(spec: String): Boolean = {
-    val frameM =
-      java.util.regex.Pattern.compile("(?i)\\b(ROWS|RANGE)\\b")
-        .matcher(spec)
-    val hasOrder =
-      java.util.regex.Pattern.compile("(?i)\\bORDER\\s+BY\\b")
-        .matcher(spec).find()
-    if (!frameM.find()) return hasOrder
+  private def frameEndsAtCurrentRow(specText: String): Boolean = {
+    val spec = ChLexer(specText).mask
+    def has(re: String, in: String) = Pattern.compile(re).matcher(in).find()
+    val frameM = Pattern.compile("(?i)\\b(ROWS|RANGE)\\b").matcher(spec)
+    if (!frameM.find()) return has("(?i)\\bORDER\\s+BY\\b", spec)
     val frame = spec.substring(frameM.start).trim
-    if (java.util.regex.Pattern.compile("(?i)\\bFOLLOWING\\b")
-        .matcher(frame).find()) return false
-    val hasBetween =
-      java.util.regex.Pattern.compile("(?i)\\bBETWEEN\\b")
-        .matcher(frame).find()
-    if (!hasBetween) return true // `<x> PRECEDING` shorthand
-    java.util.regex.Pattern.compile("(?is)\\bAND\\s+CURRENT\\s+ROW\\s*$")
-      .matcher(frame).find()
+    // no BETWEEN: the `<x> PRECEDING` shorthand
+    !has("(?i)\\bFOLLOWING\\b", frame) && (!has("(?i)\\bBETWEEN\\b", frame) ||
+      has("(?is)\\bAND\\s+CURRENT\\s+ROW\\s*$", frame))
   }
 
   /** Whether the spec's ORDER BY is exactly the decay-time expression
@@ -4412,14 +4213,15 @@ object Compat {
     * last-row anchor to equal the fold's current-row anchor.
     */
   private def windowOrderedBy(spec: String, tExpr: String): Boolean = {
-    val m = java.util.regex.Pattern.compile(
+    val lx = ChLexer(spec)
+    val m = Pattern.compile(
       "(?is)\\bORDER\\s+BY\\s+(.*?)(\\bROWS\\b|\\bRANGE\\b|$)")
-      .matcher(spec)
+      .matcher(lx.mask)
     if (!m.find()) return false
     // strip only UNBALANCED trailing parens (a stray close from an
     // enclosing context); an order key that legitimately ends in ')'
     // — e.g. `ORDER BY unix_timestamp(ts)` — must survive intact
-    var key = m.group(1).trim
+    var key = lx.group(m, 1)
     while (key.endsWith(")") &&
         key.count(_ == ')') > key.count(_ == '(')) {
       key = key.dropRight(1).trim
@@ -4431,84 +4233,91 @@ object Compat {
     norm == want && !norm.contains(",")
   }
 
-  private def rewriteRunning(sql: String): String = {
-    val renamed = sql
-      .replaceAll("(?i)\\blagInFrame\\s*\\(", "lag(")
-      .replaceAll("(?i)\\bleadInFrame\\s*\\(", "lead(")
-    rewriteRunning0(renamed)
-  }
-  private def rewriteRunning0(sql: String): String = {
-    val head = java.util.regex.Pattern.compile(
-      "(?i)\\b(runningDifference|neighbor|nonNegativeDerivative)" +
-        "\\s*\\(")
-    val m = head.matcher(sql)
-    if (!m.find()) return sql
-    val fn = m.group(1).toLowerCase
-    def passThrough(at: Int) =
-      sql.substring(0, at) + rewriteRunning0(sql.substring(at))
-    splitTopLevelArgs(sql, m.end) match {
-      case None => sql
-      case Some((args, close)) =>
-        val overM = java.util.regex.Pattern.compile("(?is)^\\s*OVER\\s*\\(")
-          .matcher(sql.substring(close + 1))
-        if (!overM.find()) return passThrough(close + 1)
-        splitTopLevelArgs(sql, close + 1 + overM.end) match {
-          case None => sql
-          case Some((winParts, winClose)) =>
-            val win = winParts.mkString(", ")
-            val repl: Option[String] = fn match {
-              case "runningdifference" if args.length == 1 =>
-                val x = args.head
-                Some(s"($x - coalesce(lag($x, 1) OVER ($win), $x))")
-              case "neighbor"
-                  if (args.length == 2 || args.length == 3) &&
-                    args(1).matches("-?\\d+") =>
-                val k = args(1).toLong
-                val d = if (args.length == 3) s", ${args(2)}" else ""
-                val (dir, off) = if (k >= 0) ("lead", k) else ("lag", -k)
-                Some(s"${dir}(${args.head}, $off$d) OVER ($win)")
-              // nonNegativeDerivative(m, t[, INTERVAL n unit]) OVER w
-              // -> max(0, Δm/Δt·scale), 0 on the first row (the
-              // runningDifference first-row contract) and 0 on a
-              // zero Δt (CH's inf reading has no SQL home). t casts
-              // to DOUBLE = epoch seconds; scale = the interval in
-              // seconds (default 1 s), literal second-convertible
-              // units only — calendar units refuse by non-match
-              case "nonnegativederivative"
-                  if args.length == 2 || args.length == 3 =>
-                val scaleSec: Option[Long] =
-                  if (args.length == 2) Some(1L)
-                  else {
-                    val im = java.util.regex.Pattern.compile(
-                      "(?i)^\\s*INTERVAL\\s+(\\d+)\\s+" +
-                        "(SECOND|MINUTE|HOUR|DAY)S?\\s*$")
-                      .matcher(args(2))
-                    if (!im.matches()) None
-                    else Some(im.group(1).toLong * (im.group(2)
-                      .toUpperCase(java.util.Locale.ROOT) match {
-                        case "SECOND" => 1L
-                        case "MINUTE" => 60L
-                        case "HOUR" => 3600L
-                        case _ => 86400L
-                      }))
-                  }
-                scaleSec.map { sc =>
-                  val mm = s"CAST((${args.head}) AS DOUBLE)"
-                  val tt = s"CAST((${args(1)}) AS DOUBLE)"
-                  s"greatest(CAST(0.0 AS DOUBLE), coalesce(" +
-                    s"($mm - lag($mm, 1) OVER ($win)) / " +
-                    s"nullif($tt - lag($tt, 1) OVER ($win), 0.0D) " +
-                    s"* $sc, CAST(0.0 AS DOUBLE)))"
-                }
-              case _ => None
-            }
-            repl match {
-              case Some(r) => sql.substring(0, m.start) + r +
-                rewriteRunning0(sql.substring(winClose + 1))
-              case None => passThrough(winClose + 1)
-            }
+  /** CH's block-scoped "running" family. A distributed engine has no
+    * block order, so these translate only in their window-extended
+    * spelling `fn(args) OVER (...)` — CH itself deprecates the bare
+    * forms in favor of window functions, and an explicit window is
+    * the only deterministic reading at scale. Supported:
+    *  - runningDifference(x) OVER w -> x minus the previous x in w,
+    *    0 on the first row (CH's first-row contract);
+    *  - neighbor(x, k[, d]) OVER w  -> lead (k>=0) / lag (k<0) by a
+    *    LITERAL offset k (CH requires a constant too); without d the
+    *    out-of-frame fill is NULL, not CH's type default (documented
+    *    NULL-fill deviation);
+    *  - lagInFrame/leadInFrame      -> lag/lead (rename; both respect
+    *    the usual PARTITION BY/ORDER BY window).
+    * Bare spellings without OVER pass through and fail loudly in
+    * Spark's parser (the house honest-refusal contract).
+    */
+  private def rewriteRunning(sql0: String): String = {
+    val sql =
+      ChLexer.replaceAll(sql0, "(?i)\\b(lag|lead)InFrame\\s*\\(", "$1(")
+    val lx = ChLexer(sql)
+    lx.rewriteEach(runningHead) { m =>
+      def keep(end: Int) = (sql.substring(m.start, end), end)
+      lx.args(m.end) match {
+        case None => keep(sql.length)
+        case Some((args, close)) => lx.at(overParen, close + 1) match {
+          case None => keep(close + 1)
+          case Some(o) => lx.args(o.end) match {
+            case None => keep(sql.length)
+            case Some((winParts, winClose)) =>
+              runningWindow(m.group(1).toLowerCase(java.util.Locale.ROOT),
+                args, winParts.mkString(", "))
+                .fold(keep(winClose + 1))(r => (r, winClose + 1))
+          }
         }
+      }
     }
+  }
+  private val runningHead = Pattern.compile(
+    "(?i)\\b(runningDifference|neighbor|nonNegativeDerivative)\\s*\\(")
+
+  private def runningWindow(fn: String, args: Seq[String],
+      win: String): Option[String] = fn match {
+    case "runningdifference" if args.length == 1 =>
+      val x = args.head
+      Some(s"($x - coalesce(lag($x, 1) OVER ($win), $x))")
+    case "neighbor"
+        if (args.length == 2 || args.length == 3) &&
+          args(1).matches("-?\\d+") =>
+      val k = args(1).toLong
+      val d = if (args.length == 3) s", ${args(2)}" else ""
+      val (dir, off) = if (k >= 0) ("lead", k) else ("lag", -k)
+      Some(s"${dir}(${args.head}, $off$d) OVER ($win)")
+    // nonNegativeDerivative(m, t[, INTERVAL n unit]) OVER w -> max(0,
+    // Δm/Δt·scale), 0 on the first row (the runningDifference first-row
+    // contract) and 0 on a zero Δt (CH's inf reading has no SQL home). t
+    // casts to DOUBLE = epoch seconds; scale = the interval in seconds
+    // (default 1 s), literal second-convertible units only — calendar units
+    // refuse by non-match
+    case "nonnegativederivative"
+        if args.length == 2 || args.length == 3 =>
+      val scaleSec: Option[Long] =
+        if (args.length == 2) Some(1L)
+        else {
+          val im = Pattern.compile(
+            "(?i)^\\s*INTERVAL\\s+(\\d+)\\s+" +
+              "(SECOND|MINUTE|HOUR|DAY)S?\\s*$")
+            .matcher(args(2))
+          if (!im.matches()) None
+          else Some(im.group(1).toLong * (im.group(2)
+            .toUpperCase(java.util.Locale.ROOT) match {
+              case "SECOND" => 1L
+              case "MINUTE" => 60L
+              case "HOUR" => 3600L
+              case _ => 86400L
+            }))
+        }
+      scaleSec.map { sc =>
+        val mm = s"CAST((${args.head}) AS DOUBLE)"
+        val tt = s"CAST((${args(1)}) AS DOUBLE)"
+        s"greatest(CAST(0.0 AS DOUBLE), coalesce(" +
+          s"($mm - lag($mm, 1) OVER ($win)) / " +
+          s"nullif($tt - lag($tt, 1) OVER ($win), 0.0D) " +
+          s"* $sc, CAST(0.0 AS DOUBLE)))"
+      }
+    case _ => None
   }
 
   /** CH `FROM numbers(N)` / `numbers(M, N)` — the row-generator table
@@ -4516,10 +4325,11 @@ object Compat {
     * Literal arguments only (CH's own contract for the table form).
     */
   private def rewriteNumbers(sql: String): String =
-    sql.replaceAll("(?i)\\bnumbers\\s*\\(\\s*(\\d+)\\s*\\)",
-        "(SELECT id AS number FROM range($1))")
-      .replaceAll("(?i)\\bnumbers\\s*\\(\\s*(\\d+)\\s*,\\s*(\\d+)\\s*\\)",
-        "(SELECT id AS number FROM range($1, $1 + $2))")
+    ChLexer.replaceAll(ChLexer.replaceAll(sql,
+      "(?i)\\bnumbers\\s*\\(\\s*(\\d+)\\s*\\)",
+      "(SELECT id AS number FROM range($1))"),
+      "(?i)\\bnumbers\\s*\\(\\s*(\\d+)\\s*,\\s*(\\d+)\\s*\\)",
+      "(SELECT id AS number FROM range($1, $1 + $2))")
 
   /** CH `dateDiff('unit', a, b)` counts UNIT-BOUNDARY CROSSINGS, not
     * complete elapsed units: dateDiff('day','2024-01-01 23:00',
@@ -4530,7 +4340,7 @@ object Compat {
     * `timestampdiff(unit, date_trunc('unit', a), date_trunc('unit',
     * b))` — after truncation every elapsed unit IS a boundary
     * crossing, so the contracts coincide for all inputs. Arguments
-    * are split at top-level commas with a quote/paren-aware scan;
+    * are split at top-level commas by [[ChLexer]];
     * an unrecognized unit passes through and fails loudly in Spark's
     * parser (the house honest-refusal contract). Week boundaries are
     * Mondays (Spark and DuckDB date_trunc agree; CH's mode-0 weeks
@@ -4545,56 +4355,29 @@ object Compat {
     * boundary-crossing translation; the two CH functions differ and
     * so do the two rewrites).
     */
-  private def rewriteAge(sql: String): String = {
-    val head = java.util.regex.Pattern.compile(
-      "(?i)\\bage\\s*\\(\\s*'(\\w+)'\\s*,")
-    val m = head.matcher(sql)
-    if (!m.find()) return sql
-    val unit = m.group(1).toLowerCase
-    if (!dateDiffUnits(unit))
-      return sql.substring(0, m.end) + rewriteAge(sql.substring(m.end))
-    splitTopLevelArgs(sql, m.end) match {
-      case Some((Seq(a, b), close)) =>
-        sql.substring(0, m.start) +
-          s"timestampdiff($unit, CAST($a AS TIMESTAMP), " +
-          s"CAST($b AS TIMESTAMP))" + rewriteAge(sql.substring(close + 1))
-      case _ =>
-        sql.substring(0, m.end) + rewriteAge(sql.substring(m.end))
-    }
-  }
+  private def rewriteAge(sql: String): String =
+    rewriteUnitCall(sql, "age", (u, a, b) => s"timestampdiff($u, " +
+      s"CAST($a AS TIMESTAMP), CAST($b AS TIMESTAMP))")
 
-  private def rewriteDateDiff(sql: String): String = {
-    val head = java.util.regex.Pattern.compile(
-      "(?i)\\b(?:dateDiff|date_diff|timestampDiff)\\s*\\(\\s*'(\\w+)'\\s*,")
-    val m = head.matcher(sql)
-    if (!m.find()) return sql
-    val unit = m.group(1).toLowerCase
-    if (!dateDiffUnits(unit))
-      return sql.substring(0, m.end) + rewriteDateDiff(sql.substring(m.end))
-    var i = m.end; val n = sql.length
-    var depth = 0; var inStr = false
-    val args = scala.collection.mutable.ArrayBuffer.empty[String]
-    var start = i; var close = -1
-    while (i < n && close < 0) {
-      val c = sql.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') {
-        if (depth == 0) { args += sql.substring(start, i); close = i }
-        else depth -= 1
-      } else if (c == ',' && depth == 0) {
-        args += sql.substring(start, i); start = i + 1
+  private def rewriteDateDiff(sql: String): String =
+    rewriteUnitCall(sql, "dateDiff|date_diff|timestampDiff", (u, a, b) =>
+      s"timestampdiff($u, date_trunc('$u', CAST($a AS TIMESTAMP)), " +
+        s"date_trunc('$u', CAST($b AS TIMESTAMP)))")
+
+  /** Each call `fn('unit', a, b)` of one of the `fns` with a known
+    * unit, replaced by `repl(unit, a, b)`. */
+  private def rewriteUnitCall(sql: String, fns: String,
+      repl: (String, String, String) => String): String = {
+    val lx = ChLexer(sql)
+    lx.rewriteEach(Pattern.compile(
+        s"(?i)\\b(?:$fns)\\s*\\(\\s*'([^']*)'\\s*,")) { m =>
+      val unit = lx.group(m, 1).toLowerCase(java.util.Locale.ROOT)
+      lx.args(m.end) match {
+        case Some((Seq(a, b), close)) if dateDiffUnits(unit) =>
+          (repl(unit, a, b), close + 1)
+        case _ => (sql.substring(m.start, m.end), m.end)
       }
-      i += 1
     }
-    if (close < 0 || args.length != 2)
-      return sql.substring(0, m.end) + rewriteDateDiff(sql.substring(m.end))
-    val Seq(a, b) = args.map(_.trim).toSeq
-    val repl = s"timestampdiff($unit, " +
-      s"date_trunc('$unit', CAST($a AS TIMESTAMP)), " +
-      s"date_trunc('$unit', CAST($b AS TIMESTAMP)))"
-    sql.substring(0, m.start) + repl + rewriteDateDiff(sql.substring(close + 1))
   }
 
   private val digestRenames: Map[String, String] = Map(
@@ -4602,69 +4385,47 @@ object Compat {
     "SHA256" -> "chSHA256", "SHA512" -> "chSHA512",
     "CRC32" -> "chCRC32")
 
-  private def translateCh0(sql: String): String = {
-    val noFormat = sql.replaceAll("(?is)\\s+FORMAT\\s+[A-Za-z]\\w*\\s*;?\\s*$", "")
-    val n = noFormat.length
-    val sb = new StringBuilder(n)
+  private def translateCh0(sql0: String): String = {
+    val format = formatClause.matcher(ChLexer(sql0).mask)
+    val sql = if (format.find()) sql0.substring(0, format.start) else sql0
+    val lx = ChLexer(sql)
+    val toks = lx.code
+    def opens(i: Int) = i < toks.length && lx.is(toks(i), '(')
+    val sb = new java.lang.StringBuilder(sql.length)
+    var last = 0
+    def splice(from: Int, to: Int, text: String): Unit = {
+      sb.append(sql, last, from).append(text)
+      last = to
+    }
     var i = 0
-    def isIdent(c: Char) = c.isLetterOrDigit || c == '_'
-    while (i < n) {
-      val c = noFormat.charAt(i)
-      if (c == '\'') {
-        // string literal, '' escapes included, copied verbatim
-        sb.append(c); i += 1
-        var open = true
-        while (i < n && open) {
-          sb.append(noFormat.charAt(i))
-          if (noFormat.charAt(i) == '\'') {
-            if (i + 1 < n && noFormat.charAt(i + 1) == '\'') {
-              sb.append('\''); i += 1
-            } else open = false
-          }
-          i += 1
-        }
-      } else if (isIdent(c) && (i == 0 || !isIdent(noFormat.charAt(i - 1)))) {
-        val s0 = i
-        while (i < n && isIdent(noFormat.charAt(i))) i += 1
-        val ident = noFormat.substring(s0, i)
-        if (digestRenames.contains(ident) && i < n &&
-            noFormat.substring(i).matches("(?s)\\s*\\(.*")) {
+    while (i < toks.length) {
+      val w = lx.text(toks(i))
+      if (toks(i).kind == ChLexer.Word && opens(i + 1)) {
+        if (digestRenames.contains(w)) {
           // CASE-SENSITIVE CH digest spellings → internal ch* names
           // (the case-insensitive registry must not shadow Spark's
-          // own md5/sha1/crc32; see the registration comment).
-          // Whitespace before '(' is valid SQL — same tolerance as
-          // the count() branch below
-          sb.append(digestRenames(ident))
-        } else if (ident.equalsIgnoreCase("count") && i < n &&
-            noFormat.substring(i).matches("(?s)\\s*\\(\\s*\\).*")) {
-          sb.append(ident)
-          while (noFormat.charAt(i) != ')') { i += 1 }
-          sb.append("(*)"); i += 1
-        } else if (parametricNames(ident.toLowerCase) && i < n &&
-            noFormat.charAt(i) == '(') {
-          // find the matching ')' of the parameter group
-          var j = i; var depth = 0; var inStr = false; var closed = false
-          while (j < n && !closed) {
-            val ch = noFormat.charAt(j)
-            if (inStr) { if (ch == '\'') inStr = false }
-            else if (ch == '\'') inStr = true
-            else if (ch == '(') depth += 1
-            else if (ch == ')') { depth -= 1; if (depth == 0) closed = true }
-            j += 1
+          // own md5/sha1/crc32; see the registration comment)
+          splice(toks(i).start, toks(i).end, digestRenames(w))
+        } else if (w.equalsIgnoreCase("count") && i + 2 < toks.length &&
+            lx.is(toks(i + 2), ')')) {
+          splice(toks(i).end, toks(i + 2).end, "(*)")
+          i += 2
+        } else if (parametricNames(w.toLowerCase)) {
+          // name(params)(args) → name(params, args)
+          val close = toks.indexWhere(
+            t => lx.is(t, ')') && t.depth == toks(i + 1).depth, i + 2)
+          if (close > 0 && opens(close + 1)) {
+            splice(toks(close).start, toks(close + 1).end, ", ")
+            i = close + 1
           }
-          var k = j
-          while (k < n && noFormat.charAt(k).isWhitespace) k += 1
-          if (closed && k < n && noFormat.charAt(k) == '(') {
-            // name(params)(args) → name(params, args)
-            sb.append(ident)
-            sb.append(noFormat.substring(i, j - 1)).append(", ")
-            i = k + 1
-          } else sb.append(ident) // plain call — copy as-is from '('
-        } else sb.append(ident)
-      } else { sb.append(c); i += 1 }
+        }
+      }
+      i += 1
     }
-    sb.toString
+    sb.append(sql, last, sql.length).toString
   }
+  private val formatClause = Pattern.compile(
+    "(?is)\\s+FORMAT\\s+[A-Za-z]\\w*\\s*;?\\s*$")
 
   /** CH `ORDER BY <col> WITH FILL [FROM a] [TO b] [STEP s]` — gap
     * filling over an integral or date axis. The fill axis is
@@ -4677,22 +4438,23 @@ object Compat {
     * fails loudly in Spark's parser.
     */
   private def applyWithFill(spark: SparkSession, sql: String): DataFrame = {
-    val p = java.util.regex.Pattern.compile(
-      "(?is)^(.*\\bORDER\\s+BY\\s+)([A-Za-z_]\\w*)\\s+WITH\\s+FILL" +
+    val lx = ChLexer(sql)
+    val m = Pattern.compile(
+      "(?is)^(.*)\\bORDER\\s+BY\\s+([A-Za-z_]\\w*)\\s+WITH\\s+FILL" +
         "(?:\\s+FROM\\s+(\\S+))?(?:\\s+TO\\s+(\\S+))?" +
         "(?:\\s+STEP\\s+(\\d+))?" +
-        "(?:\\s+INTERPOLATE\\s*\\(([^)]*)\\))?\\s*;?\\s*$")
-    val m = p.matcher(sql)
+        "(?:\\s+INTERPOLATE\\s*\\(([^)]*)\\))?\\s*;?\\s*$").matcher(lx.mask)
     if (!m.matches()) return spark.sql(sql)
-    val (head, c) = (m.group(1), m.group(2))
-    val (from, to) = (Option(m.group(3)), Option(m.group(4)))
-    val step = Option(m.group(5)).map(_.toLong).getOrElse(1L)
+    val Seq(head, c) = Seq(1, 2).map(lx.group(m, _))
+    val Seq(from, to, stepText, interpolate) =
+      (3 to 6).map(g => Option(lx.group(m, g)))
+    val step = stepText.map(_.toLong).getOrElse(1L)
     // INTERPOLATE (col [AS col], ...): carry the previous row's value
     // through synthesized rows. Only the identity form is supported —
     // CH applies `AS expr` REPEATEDLY over consecutive gaps, which no
     // window formulation expresses; a non-identity expression refuses
     // loudly rather than filling wrongly.
-    val interp: Seq[String] = Option(m.group(6)).toSeq.flatMap(
+    val interp: Seq[String] = interpolate.toSeq.flatMap(
       _.split(",").map(_.trim).filter(_.nonEmpty).map { item =>
         val parts = item.split("(?i)\\s+AS\\s+").map(_.trim)
         if (parts.length == 1) parts(0)
@@ -4703,8 +4465,7 @@ object Compat {
             "an AS-expression repeatedly across consecutive gap rows, " +
             "which has no deterministic window formulation here")
       })
-    val inner = spark.sql(
-      head.replaceAll("(?is)\\bORDER\\s+BY\\s+$", ""))
+    val inner = spark.sql(head)
     import org.apache.spark.sql.functions._
     val dt = inner.schema(c).dataType
     val isDate = dt == org.apache.spark.sql.types.DateType
@@ -4746,9 +4507,8 @@ object Compat {
     * the result to Spark's parser. The function pack comes with the
     * session ([[clickHouseFunctions]]). */
   def chSql(spark: SparkSession, sql: String): DataFrame =
-    applyWithFill(spark,
-      rewriteFinal(spark, rewriteMergeFn(spark,
-        rewriteAsof(spark, translateCh(sql)))))
+    applyWithFill(spark, rewriteFinal(spark, rewriteSample(spark,
+      rewriteMergeFn(spark, rewriteAsof(spark, translateCh(sql))))))
 
   /** summing-table rows -> the reference's column names and shapes. */
   def compatView(summed: DataFrame): DataFrame =

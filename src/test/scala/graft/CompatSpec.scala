@@ -301,6 +301,61 @@ class CompatSpec extends AnyFunSuite {
     assert(r.getDouble(0) == 20.0 && r.getLong(1) == 3L)
   }
 
+  test("hostile input: literals, quoted names and comments reach Spark " +
+      "unchanged, and a comment hides no clause") {
+    def probe(lit: String, from: String = "") =
+      Compat.chSql(spark, s"SELECT $lit AS s$from").collect().head.get(0)
+    // clause shapes inside a string literal are data, not clauses
+    Seq("x GROUP BY a WITH TOTALS", "t ARRAY JOIN arr AS e", "numbers(3)",
+      "ORDER BY a LIMIT 1 BY b").foreach { v =>
+      assert(probe(s"'$v'") == v)
+    }
+    // the apostrophe in a line comment opens no string: the count()
+    // and the WITH TOTALS on the next line still rewrite
+    Seq("a", "b").toDF("k").createOrReplaceTempView("hostile_t")
+    val tot = Compat.chSql(spark, "SELECT 'x' AS s -- it's a comment\n" +
+      "  , k, count() AS n FROM hostile_t GROUP BY k WITH TOTALS ORDER BY k")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    assert(tot.toSeq == Seq(("x", null, 2L), ("x", "a", 1L), ("x", "b", 1L)))
+    // a hint stays a hint
+    val hinted = Compat.chSql(spark,
+      "SELECT /*+ BROADCAST(t) */ 'v' AS s FROM (SELECT 1 AS a) t")
+    assert(hinted.queryExecution.logical.exists {
+      case h: org.apache.spark.sql.catalyst.plans.logical.UnresolvedHint =>
+        h.name.equalsIgnoreCase("BROADCAST")
+      case _ => false
+    }, hinted.queryExecution.logical)
+    assert(hinted.collect().head.getString(0) == "v")
+    // a backticked column named like a table function is a name
+    assert(probe("`numbers(3)`", " FROM (SELECT 'v' AS `numbers(3)`)") == "v")
+    assert(Compat.translateCh("SELECT `numbers(3)` FROM t")
+      == "SELECT `numbers(3)` FROM t")
+  }
+
+  test("SAMPLE keys and FINAL views belong to the registering session") {
+    val child = spark.newSession()
+    Seq(spark, child).foreach { s =>
+      s.range(1, 401).toDF("id").createOrReplaceTempView("scope_docs")
+      s.createDataFrame(Seq((java.sql.Date.valueOf("2024-06-01"), "k1", 1L),
+        (java.sql.Date.valueOf("2024-06-01"), "k1", 2L)))
+        .toDF("date", "k", "ver").createOrReplaceTempView("scope_repl")
+    }
+    Compat.registerSamplingKey(spark, "scope_docs", "id")
+    Compat.registerReplacing(spark, "scope_repl", Seq("k"), "ver")
+    def sampled(s: org.apache.spark.sql.SparkSession) = Compat.chSql(s,
+      "SELECT count() FROM scope_docs SAMPLE 0.25").collect().head.getLong(0)
+    def finalRows(s: org.apache.spark.sql.SparkSession) =
+      Compat.chSql(s, "SELECT ver FROM scope_repl FINAL").count()
+    val (n, f) = (sampled(spark), finalRows(spark))
+    assert(n > 50 && n < 150 && f == 1L, (n, f))
+    // the child never saw the registrations: SAMPLE stays CH syntax,
+    // and FINAL is read as a table alias over both versions
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+      sampled(child))
+    assert(finalRows(child) == 2L)
+    assert(sampled(spark) == n && finalRows(spark) == f)
+  }
+
   test("round-11 clause shims: ARRAY JOIN, LIMIT BY, SAMPLE, FINAL") {
     import Compat.translateCh
 
@@ -323,13 +378,10 @@ class CompatSpec extends AnyFunSuite {
     assert(translateCh("SELECT a FROM t LIMIT 2 BY a")
       == "SELECT a FROM t LIMIT 2 BY a")
 
-    // SAMPLE: only registered tables rewrite, deterministically
-    Compat.registerSamplingKey("sample_docs", "id")
-    assert(translateCh("SELECT count() FROM unregistered SAMPLE 0.5")
-      == "SELECT count(*) FROM unregistered SAMPLE 0.5")
-    val sm = translateCh("SELECT count() AS n FROM sample_docs SAMPLE 0.25")
-    assert(sm == "SELECT count(*) AS n FROM (SELECT * FROM sample_docs " +
-      "WHERE substring(md5(cast(id AS STRING)), 1, 4) < '4000') sample_docs")
+    // SAMPLE: only tables with a key registered in the session rewrite
+    Compat.registerSamplingKey(spark, "sample_docs", "id")
+    intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+      Compat.chSql(spark, "SELECT count() FROM unregistered SAMPLE 0.5"))
 
     // end-to-end over real frames
     Seq((1L, "alpha beta"), (2L, "gamma")).toDF("id", "text")
@@ -356,6 +408,9 @@ class CompatSpec extends AnyFunSuite {
       .collect().head.getLong(0)
     assert(n1 == n2, "sampling must be deterministic across runs")
     assert(n1 > 50 && n1 < 150, s"~25% of 400 expected, got $n1")
+    assert(n1 == spark.sql("SELECT count(*) FROM sample_docs " +
+      "WHERE substring(md5(cast(id AS STRING)), 1, 4) < '4000'")
+      .collect().head.getLong(0))
 
     // FINAL: keep-latest == the engine's own readFinal collapse
     val dts = java.sql.Date.valueOf("2024-06-01")
@@ -363,7 +418,7 @@ class CompatSpec extends AnyFunSuite {
       (dts, "k2", 5L, "only"))
       .toDF("date", "k", "ver", "payload")
       .createOrReplaceTempView("repl_t")
-    Compat.registerReplacing("repl_t", Seq("k"), "ver")
+    Compat.registerReplacing(spark, "repl_t", Seq("k"), "ver")
     val fin = Compat.chSql(spark,
       "SELECT k, payload FROM repl_t FINAL ORDER BY k")
       .collect().map(r => (r.getString(0), r.getString(1)))

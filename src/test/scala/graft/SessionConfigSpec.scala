@@ -63,6 +63,13 @@ class SessionConfigSpec extends AnyFunSuite {
     assert(child.catalog.functionExists("dictGet"))
   }
 
+  test("the ClickHouse pack names each function once") {
+    val names = graft.sql.Compat.clickHouseFunctions
+      .map(_._1.toLowerCase(java.util.Locale.ROOT))
+    val dups = names.diff(names.distinct).distinct
+    assert(dups.isEmpty, dups)
+  }
+
   test("the local filesystem on both Hadoop APIs is the in-process one") {
     val conf = spark.sessionState.newHadoopConf()
     assert(new Path("file:///tmp").getFileSystem(conf).getClass.getName ==
