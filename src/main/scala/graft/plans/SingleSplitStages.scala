@@ -28,24 +28,23 @@ import graft.sink.TxFileIndex
   * inserted when its child provably yields exactly one partition: a
   * chain of single-child operators that keep their child's partition
   * count, ending at a [[TxFileIndex]] scan that is not bucketed, has no
-  * subquery or dynamic-pruning filter, and plans one split. The partial
-  * and final aggregates, the global sort and the top-k then run in one
-  * task of one job. Exactly one split, not at most one: an empty scan
-  * has no partition, and a global aggregate over it still owes a row.
+  * bucket-pruning, subquery or dynamic-pruning filter, and plans one
+  * split. The partial and final aggregates, the global sort and the
+  * top-k then run in one task of one job. Exactly one split: an empty
+  * scan has no partition, yet a global aggregate over it owes a row.
   *
   * What always stays: shuffles with another origin (`repartition`, the
   * writer's `repartitionByRange` in `TxTable.prep`), so file layouts do
   * not change; every exchange of a plan with a multi-child operator
   * (join, union), because co-partitioning is out of scope; and every
-  * exchange over a multi-split, bucketed or non-tx scan.
+  * exchange over a multi-split, bucketed, bucket-pruned or non-tx scan.
   *
   * Installed by `graft.functions.GraftExtensions` as an AQE query-stage
   * preparation rule, so it runs after AQE's `EnsureRequirements` on the
-  * initial plan and on every re-plan. The splits are the scan's file
-  * index listing (for a [[TxFileIndex]], an in-memory prune of its
-  * snapshot) packed as the scan packs its read RDD, which is not built.
-  * The scan's own `selectedPartitions` would also set its listing
-  * metrics, which the action then resets to zero before it runs.
+  * initial plan and on every re-plan. The splits are the file index
+  * listing (an in-memory prune of the snapshot) packed as the unbuilt
+  * read RDD would pack it; the scan's own `selectedPartitions` would
+  * set listing metrics that the action then resets to zero.
   */
 object SingleSplitStages extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan =
@@ -59,6 +58,7 @@ object SingleSplitStages extends Rule[SparkPlan] {
   private def oneSplit(p: SparkPlan): Boolean = p match {
     case s: FileSourceScanExec =>
       s.relation.location.isInstanceOf[TxFileIndex] && !s.bucketedScan &&
+        s.optionalBucketSet.isEmpty &&
         !(s.partitionFilters ++ s.dataFilters).exists(_.exists {
           case _: PlanExpression[_] | _: DynamicPruningExpression => true
           case _ => false

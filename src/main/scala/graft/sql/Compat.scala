@@ -886,7 +886,7 @@ object Compat {
           s"splitByChar separator must be a string literal, got $other")
       }
       capSubstrings(
-        StringSplit(e(1), Literal(Pattern.quote(sep)),
+        StringSplit(e(1), Literal(java.util.regex.Pattern.quote(sep)),
           Literal(-1)), e, 2)
     }
     // -State / -Merge combinators (the AggregatingMergeTree surface):
@@ -1897,7 +1897,7 @@ object Compat {
       f("extract") { e =>
         val grp = e(1) match {
           case Literal(u: UTF8String, StringType) =>
-            if (Pattern.compile(u.toString)
+            if (java.util.regex.Pattern.compile(u.toString)
               .matcher("").groupCount() > 0) 1 else 0
           case other => throw new IllegalArgumentException(
             s"extract needs a literal pattern, got $other")
@@ -1958,7 +1958,7 @@ object Compat {
       f("splitByString") { e =>
         val sep = e.head match {
           case Literal(u: UTF8String, StringType) =>
-            Pattern.quote(u.toString)
+            java.util.regex.Pattern.quote(u.toString)
           case other => throw new IllegalArgumentException(
             s"splitByString needs a literal separator, got $other")
         }
@@ -1968,7 +1968,7 @@ object Compat {
       f("extractAll") { e =>
         val grp = e(1) match {
           case Literal(u: UTF8String, StringType) =>
-            if (Pattern.compile(u.toString)
+            if (java.util.regex.Pattern.compile(u.toString)
               .matcher("").groupCount() > 0) 1 else 0
           case other => throw new IllegalArgumentException(
             s"extractAll needs a literal pattern, got $other")
@@ -2892,7 +2892,7 @@ object Compat {
           case other => throw new IllegalArgumentException(
             s"extractGroups needs a literal pattern, got $other")
         }
-        val n = Pattern.compile(pat)
+        val n = java.util.regex.Pattern.compile(pat)
           .matcher("").groupCount()
         require(n >= 1, "extractGroups needs at least one group")
         org.apache.spark.sql.catalyst.expressions.CreateArray(
@@ -3336,7 +3336,7 @@ object Compat {
           case other => throw new IllegalArgumentException(
             "extractAllGroups* needs a literal pattern, got " + other)
         }
-        val n = Pattern.compile(re).matcher("").groupCount()
+        val n = java.util.regex.Pattern.compile(re).matcher("").groupCount()
         require(n >= 1, "extractAllGroups*: the pattern has no groups")
         (n, (1 to n).map(g =>
           org.apache.spark.sql.catalyst.expressions
@@ -3585,8 +3585,8 @@ object Compat {
     * contract, unlike `TABLESAMPLE`), and the (keys, version column) of
     * a view that `FROM <t> FINAL` reads as a ReplacingMergeTree. The
     * session owns it: `GraftExtensions` injects one per session state as
-    * a check rule that checks nothing, so a `newSession()` child starts
-    * empty.
+    * a check rule that checks nothing, so a `newSession()` child or a
+    * clone (a streaming `foreachBatch`'s session) starts empty.
     */
   final class ChTables extends (LogicalPlan => Unit) {
     val samplingKeys = new scala.collection.concurrent.TrieMap[String, String]
@@ -3625,12 +3625,11 @@ object Compat {
     * through and fail loudly in the parser.
     */
   private def rewriteSample(spark: SparkSession, sql: String): String = {
-    val keys = chTables(spark).samplingKeys
     val lx = ChLexer(sql)
     lx.replaceAll(samplePattern) { m =>
       val (kw, table) = (lx.group(m, 1), lx.group(m, 2))
       val frac = lx.group(m, 3).toDouble
-      keys.get(table.toLowerCase) match {
+      chTables(spark).samplingKeys.get(table.toLowerCase) match {
         case Some(key) if frac > 0 && frac < 1 =>
           val thr = f"${math.round(frac * 65536).toInt}%04x"
           s"$kw (SELECT * FROM $table WHERE " +
@@ -3769,19 +3768,23 @@ object Compat {
 
   private val asofSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def rewriteFinal(spark: SparkSession, sql: String): String =
-    chTables(spark).replacing.foldLeft(sql) {
-      case (acc, (view, (keys, ver))) =>
-        val lx = ChLexer(acc)
-        val p = Pattern.compile(s"(?i)\\b${Pattern.quote(view)}\\s+FINAL\\b")
-        if (!p.matcher(lx.mask).find()) acc
-        else {
-          val fv = s"${view.replace('.', '_')}__final"
-          graft.sink.TxTable.latestPerKey(spark.table(view), keys, ver)
-            .createOrReplaceTempView(fv)
-          lx.replaceAll(p)(_ => fv)
-        }
+  /** `FROM <view> FINAL` → the registered view's keep-latest collapse;
+    * an unregistered view is refused, not read as the alias `FINAL`. */
+  private def rewriteFinal(spark: SparkSession, sql: String): String = {
+    val lx = ChLexer(sql)
+    lx.replaceAll(finalPattern) { m =>
+      val (kw, view) = (lx.group(m, 1), lx.group(m, 2))
+      val (keys, ver) = chTables(spark).replacing.getOrElse(view.toLowerCase,
+        throw new IllegalArgumentException(s"$view FINAL: not registered " +
+          "in this session (Compat.registerReplacing)"))
+      val fv = s"${view.replace('.', '_')}__final"
+      graft.sink.TxTable.latestPerKey(spark.table(view), keys, ver)
+        .createOrReplaceTempView(fv)
+      s"$kw $fv"
     }
+  }
+  private val finalPattern = Pattern.compile(
+    "(?is)(\\bFROM|\\bJOIN|,)\\s+([A-Za-z_][\\w.]*)\\s+FINAL\\b")
 
   def translateCh(sql: String): String = {
     // __graft_decayed_* are rewriter-internal (emitted by

@@ -7,9 +7,11 @@ import graft.sql.Compat.translateCh
 
 /** The ClickHouse shim ([[graft.sql.Compat.translateCh]]) never rewrites
   * inside a string literal, a quoted name or a comment; it leaves plain
-  * Spark SQL alone; and translating twice is translating once. The
-  * literal and comment contents are built from the shim's own keywords,
-  * quotes and parens, so every pass gets a chance to misfire.
+  * Spark SQL alone; and translating twice is translating once, except
+  * for a running decayed window (`OVER (ORDER BY t)`), whose output
+  * calls the internal `__graft_decayed_*` that a second pass refuses.
+  * The literal and comment contents are built from the shim's own
+  * keywords, quotes and parens, so every pass gets a chance to misfire.
   */
 object ChShimProperties extends Properties("graft") {
   private val pieces = Seq("GROUP BY a WITH TOTALS", " WITH ROLLUP",
@@ -64,6 +66,11 @@ object ChShimProperties extends Properties("graft") {
     (c, s) => s"SELECT $c exponentialTimeDecayedSum(10)(v, t) OVER " +
       "(ORDER BY t ROWS BETWEEN 2 PRECEDING AND 1 PRECEDING) AS e, " +
       s"$s FROM t")
+  /** The running form of a decayed window: rewritten to an internal
+    * name, so not idempotent. */
+  private val runningDecayed: (String, String) => String = (c, s) =>
+    s"SELECT $c exponentialTimeDecayedSum(10)(v, t) OVER (ORDER BY t) " +
+      s"AS e, $s FROM t"
 
   /** Spark SQL that no pass applies to, as fragments a generated gap
     * (a space or a comment) joins; "@" marks the select items. */
@@ -83,9 +90,10 @@ object ChShimProperties extends Properties("graft") {
   private val gap = Gen.oneOf(Gen.const(" "), comment.map(c => s" $c "))
 
   property("shim keeps literal, quoted-name and comment text") =
-    forAllNoShrink(Gen.oneOf(chShapes), items, comment) { (shape, ls, c) =>
-      val out = translateCh(shape(c, select(ls)))
-      (ls :+ c).forall(out.contains) :| out
+    forAllNoShrink(Gen.oneOf(chShapes :+ runningDecayed), items, comment) {
+      (shape, ls, c) =>
+        val out = translateCh(shape(c, select(ls)))
+        (ls :+ c).forall(out.contains) :| out
     }
 
   property("shim is the identity on Spark SQL") =
@@ -100,5 +108,15 @@ object ChShimProperties extends Properties("graft") {
     forAllNoShrink(Gen.oneOf(chShapes), items, comment) { (shape, ls, c) =>
       val once = translateCh(shape(c, select(ls)))
       (translateCh(once) == once) :| once
+    }
+
+  property("a second pass refuses a running decayed window's output") =
+    forAllNoShrink(items, comment) { (ls, c) =>
+      val once = translateCh(runningDecayed(c, select(ls)))
+      scala.util.Try(translateCh(once)).failed.toOption.exists {
+        case e: IllegalArgumentException =>
+          e.getMessage.contains("__graft_decayed_")
+        case _ => false
+      } :| once
     }
 }

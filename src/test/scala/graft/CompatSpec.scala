@@ -348,11 +348,17 @@ class CompatSpec extends AnyFunSuite {
       Compat.chSql(s, "SELECT ver FROM scope_repl FINAL").count()
     val (n, f) = (sampled(spark), finalRows(spark))
     assert(n > 50 && n < 150 && f == 1L, (n, f))
-    // the child never saw the registrations: SAMPLE stays CH syntax,
-    // and FINAL is read as a table alias over both versions
+    // the child never saw the registrations: SAMPLE stays CH syntax
+    // and fails in the parser, and FINAL is refused, not read as a
+    // table alias over both versions
     intercept[org.apache.spark.sql.catalyst.parser.ParseException](
       sampled(child))
-    assert(finalRows(child) == 2L)
+    val e = intercept[IllegalArgumentException](finalRows(child))
+    assert(e.getMessage.contains("scope_repl FINAL"), e.getMessage)
+    // the clauses inside literals are neither rewritten nor refused
+    assert(Compat.chSql(child, "SELECT 'FROM x FINAL' AS f, " +
+      "'t SAMPLE 0.5' AS s FROM scope_docs LIMIT 1").collect().head
+      .toSeq == Seq("FROM x FINAL", "t SAMPLE 0.5"))
     assert(sampled(spark) == n && finalRows(spark) == f)
   }
 

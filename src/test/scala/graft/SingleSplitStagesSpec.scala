@@ -193,6 +193,31 @@ class SingleSplitStagesSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       Seq(("v0", 14L), ("v1", 13L), ("v2", 13L)))
   }
 
+  test("a one-file bucketed tx table filtered to a key of another bucket " +
+      "keeps its exchange and counts 0") {
+    import org.apache.spark.sql.types.{DateType, LongType, StructField,
+      StructType}
+    import spark.implicits._
+    val t = Files.createTempDirectory("graft_single_split_prune").toString + "/t"
+    TxTable.createTable(spark, t, StructType(Seq(StructField("date", DateType),
+      StructField("k", LongType))),
+      Seq("graft.bucketBy" -> "k", "graft.buckets" -> "4"))
+    // the writer's bucket id: pmod(hash(k), buckets)
+    val bucket = (0L until 40L).toDF("k").select($"k",
+      expr("pmod(hash(k), 4)")).as[(Long, Int)].collect().toMap
+    val kept = bucket.keys.filter(bucket(_) == bucket(0L)).toSeq.sorted
+    val other = (kept.head to kept.last).find(bucket(_) != bucket(0L)).get
+    TxTable.append(spark, kept.map(k => (java.sql.Date.valueOf(day), k))
+      .toDF("date", "k"), t)
+    assert(TxTable.liveFiles(spark, t).size == 1)
+    val n = TxFileIndex.readV2(spark, t).where(col("k") === other)
+      .agg(count(lit(1)))
+    assert(scans(n).exists(_.optionalBucketSet.isDefined),
+      n.queryExecution.executedPlan)
+    assert(exchanges(n).nonEmpty, n.queryExecution.executedPlan)
+    assert(n.collect().toSeq == Seq(Row(0L)))
+  }
+
   test("a join of two one-file tx tables keeps its exchanges") {
     val (tx, plain) = flowArms
     val s = spark.newSession()
