@@ -50,6 +50,12 @@ object Graft {
       // zstd-decompressed batches; AQE handles shuffle-side sizing/skew
       .config("spark.sql.files.maxPartitionBytes", "256m")
       .config("spark.sql.parquet.compression.codec", "zstd")
+      // generated-code cache (static, JVM-wide): Spark's default of 100
+      // entries is below the 100-180 distinct classes one kubenetmon
+      // backfill-plus-dashboard round generates, so a repeated round
+      // re-compiled 22-37 of them with Janino and the JIT compiled them
+      // again; 1000 holds that working set several times over
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
     conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
   }

@@ -58,10 +58,38 @@ object Bloom {
   private def setBit(words: Array[Long], p: Int): Unit =
     words(p >> 6) |= 1L << (p & 63)
 
+  /** Set the k bits of hash `h` ([[positions]] without the array). */
+  def setBits(words: Array[Long], h: Long, m: Int, k: Int): Unit = {
+    val h2 = (h >>> 32) | 1L
+    var i = 0
+    while (i < k) {
+      val x = (h + i.toLong * h2) % m
+      setBit(words, (if (x < 0) x + m else x).toInt)
+      i += 1
+    }
+  }
+
+  /** Approximate distinct count of a value filter, from its bit count
+    * (the swamping estimator n ≈ -(m/k)·ln(1 - X/m)): the `#ndv` count
+    * stat comes free with the bitset. A saturated filter reads as
+    * 2^40, unknown-large yet far from Long overflow in a million-file
+    * sum (the catalog clamps it to the row count).
+    */
+  def ndvOf(bits: Array[Byte]): Long = {
+    var x = 0L
+    var i = 0
+    while (i < bits.length) {
+      x += java.lang.Integer.bitCount(bits(i) & 0xff); i += 1
+    }
+    val m = M.toDouble
+    if (x >= M) 1L << 40
+    else math.round(-(m / K) * math.log1p(-x / m))
+  }
+
   /** Buffer words → bytes, bit i at byte i>>3 mask 1<<(i&7) — the
     * layout [[testBit]] reads back through the base64 framing.
     */
-  private def toBytes(words: Array[Long], m: Int): Array[Byte] = {
+  def toBytes(words: Array[Long], m: Int): Array[Byte] = {
     val out = new Array[Byte](m / 8)
     var j = 0
     while (j < out.length) {
@@ -144,9 +172,7 @@ object Bloom {
       extends Aggregator[Long, Array[Long], Array[Byte]] {
     override def zero: Array[Long] = new Array[Long](m / 64)
     override def reduce(b: Array[Long], h: Long): Array[Long] = {
-      val ps = positions(h, m, k)
-      var i = 0
-      while (i < ps.length) { setBit(b, ps(i)); i += 1 }
+      setBits(b, h, m, k)
       b
     }
     override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {

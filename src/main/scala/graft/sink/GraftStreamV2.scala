@@ -654,7 +654,10 @@ class GraftV2WriteBuilder(path: String, writeSchema: StructType,
   }
 }
 
-final case class GraftEpochFiles(files: Seq[String])
+/** A task's committed files (table-relative) and the stats it folded
+  * for each, keyed `date=<d>/<name>` (see [[FileStatsFold]]). */
+final case class GraftEpochFiles(files: Seq[String],
+    stats: Map[String, Map[String, TxTable.ColStats]])
   extends WriterCommitMessage
 
 class GraftStreamingWrite(table: String, writerId: String,
@@ -672,19 +675,18 @@ class GraftStreamingWrite(table: String, writerId: String,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val conf = new SerializableHadoopConf(
-      SparkSession.active.sessionState.newHadoopConf())
-    GraftStreamWriterFactory(table, dirPrefix, writeSchema, conf)
+    val spark = SparkSession.active
+    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
+    GraftStreamWriterFactory(table, dirPrefix, writeSchema, conf,
+      TxTable.bucketNgramCols(TxTable.tableProperties(spark, table)))
   }
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.iterator.collect {
-      case GraftEpochFiles(fs) => fs
-    }.flatten.toSet
+    val done = messages.toSeq.collect { case m: GraftEpochFiles => m }
     TxTable.commitStreamingEpoch(SparkSession.active, table,
-      s"$dirPrefix-e$epochId", files, writerId, epochId, writeSchema,
-      replace)
+      s"$dirPrefix-e$epochId", done.flatMap(_.files).toSet, writerId,
+      epochId, writeSchema, replace, done.flatMap(_.stats).toMap)
     ()
   }
 
@@ -695,7 +697,7 @@ class GraftStreamingWrite(table: String, writerId: String,
     val spark = SparkSession.active
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    messages.iterator.collect { case GraftEpochFiles(names) => names }
+    messages.iterator.collect { case m: GraftEpochFiles => m.files }
       .flatten.foreach { rel =>
         try fs.delete(new Path(root, rel), false)
         catch { case _: Exception => () }
@@ -707,12 +709,12 @@ class GraftStreamingWrite(table: String, writerId: String,
 }
 
 final case class GraftStreamWriterFactory(table: String, dirPrefix: String,
-    writeSchema: StructType, conf: SerializableHadoopConf)
-    extends StreamingDataWriterFactory {
+    writeSchema: StructType, conf: SerializableHadoopConf,
+    ngramCols: Seq[String]) extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftParquetDataWriter(table, s"$dirPrefix-e$epochId",
-      writeSchema, conf.value, partitionId, taskId)
+      writeSchema, conf.value, partitionId, taskId, ngramCols)
 }
 
 /** StructType -> parquet `MessageType` for the executor-side writer —
@@ -761,13 +763,16 @@ object GraftParquetSchema {
 
 /** Per-task parquet writer: routes rows to one open file per date
   * partition (`<dataDir>/date=<d>/part-p<pid>-t<tid>-<uuid>.parquet`),
-  * zstd-compressed via the public parquet-mr Group API. The task's
-  * commit message reports the table-relative paths it wrote; ONLY
-  * those become candidates for the epoch commit.
+  * zstd-compressed via the public parquet-mr Group API, folding each
+  * file's log stats and filters as its rows pass ([[FileStatsFold]]).
+  * The task's commit message reports the table-relative paths it wrote
+  * and their stats; ONLY those files become candidates for the epoch
+  * commit.
   */
 class GraftParquetDataWriter(table: String, dataDir: String,
     schema: StructType, conf: Configuration, partitionId: Int,
-    taskId: Long) extends DataWriter[InternalRow] {
+    taskId: Long, ngramCols: Seq[String] = Seq.empty)
+    extends DataWriter[InternalRow] {
 
   private val root = new Path(table)
   private val fs = root.getFileSystem(conf)
@@ -804,10 +809,12 @@ class GraftParquetDataWriter(table: String, dataDir: String,
       }
     }
 
-  private val open =
-    scala.collection.mutable.HashMap.empty[String, (ParquetWriter[Group], String)]
+  private val fold = new FileStatsFold(schema, ngramCols)
 
-  private def writerFor(date: String): ParquetWriter[Group] =
+  private val open = scala.collection.mutable.HashMap.empty[String,
+    (ParquetWriter[Group], String, fold.Acc)]
+
+  private def writerFor(date: String): (ParquetWriter[Group], String, fold.Acc) =
     open.getOrElseUpdate(date, {
       val rel = s"$dataDir/date=$date/part-p$partitionId-t$taskId-$uuid.parquet"
       val w = ExampleParquetWriter.builder(
@@ -817,8 +824,8 @@ class GraftParquetDataWriter(table: String, dataDir: String,
         .withCompressionCodec(CompressionCodecName.ZSTD)
         .withWriteMode(org.apache.parquet.hadoop.ParquetFileWriter.Mode.OVERWRITE)
         .build()
-      (w, rel)
-    })._1
+      (w, rel, fold.newFile())
+    })
 
   override def write(row: InternalRow): Unit = {
     require(!row.isNullAt(dateIdx),
@@ -832,16 +839,20 @@ class GraftParquetDataWriter(table: String, dataDir: String,
       if (setters(i) != null && !row.isNullAt(i)) setters(i)(g, row, i)
       i += 1
     }
-    writerFor(date).write(g)
+    val (w, _, acc) = writerFor(date)
+    w.write(g)
+    fold.add(acc, row)
   }
 
   override def commit(): WriterCommitMessage = {
     open.values.foreach(_._1.close())
-    GraftEpochFiles(open.values.map(_._2).toSeq)
+    GraftEpochFiles(open.values.map(_._2).toSeq,
+      open.values.map { case (_, rel, acc) =>
+        FileStatsTracker.keyOf(rel) -> fold.result(acc) }.toMap)
   }
 
   override def abort(): Unit = {
-    open.values.foreach { case (w, rel) =>
+    open.values.foreach { case (w, rel, _) =>
       try w.close() catch { case _: Exception => () }
       try fs.delete(new Path(root, rel), false)
       catch { case _: Exception => () }

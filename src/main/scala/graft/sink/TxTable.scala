@@ -31,7 +31,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * A commit file holds tab-separated action lines over table-relative
   * paths — `A <date> <bytes> <relpath> [stats]` adds a file (recording
   * its date partition value, size, AND per-file min/max column stats
-  * from the parquet footer, so readers plan pruning, splits, data
+  * folded by the write tasks, so readers plan pruning, splits, data
   * skipping, and TTL from log METADATA, never a 100 TB directory
   * listing or a million getFileStatus calls), `R <relpath>` removes
   * one — and a
@@ -699,7 +699,7 @@ object TxTable {
     * stats are absent/empty in any row group is dropped for that file:
     * absence of stats must read as "cannot skip", never as a range.
     */
-  private def footerStats(fs: FileSystem, file: Path): Map[String, ColStats] = {
+  private[graft] def footerStats(fs: FileSystem, file: Path): Map[String, ColStats] = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.parquet.io.api.Binary
@@ -789,11 +789,6 @@ object TxTable {
   private[graft] val NullsSuffix = "#nulls"
   private[graft] val NdvSuffix = "#ndv"
 
-  /** Stage `df` (which must carry a `date` column) as immutable parquet
-    * under a fresh uuid dir and return the (relpath -> meta) adds,
-    * footer stats included. Nothing is visible until these are
-    * committed.
-    */
   /** Serializes the set-conf → write → restore-conf window below: the
     * parquet writer reads `outputTimestampType` from the SESSION conf at
     * job-planning time (Spark 4.1 has no per-write option for it), so
@@ -870,12 +865,7 @@ object TxTable {
       if (parent.getName.startsWith("__gb=") &&
           f.getName.startsWith("part-")) {
         val b = parent.getName.stripPrefix("__gb=").toInt
-        val base = f.getName
-        val dot = base.indexOf('.')
-        val renamed =
-          if (dot < 0) f"${base}_$b%05d"
-          else f"${base.substring(0, dot)}_$b%05d${base.substring(dot)}"
-        moves += ((f, new Path(parent.getParent, renamed)))
+        moves += ((f, new Path(parent.getParent, bucketFileName(f.getName, b))))
       }
     }
     moves.foreach { case (src, dst) =>
@@ -890,6 +880,26 @@ object TxTable {
     }
   }
 
+  private def bucketFileName(base: String, b: Int): String = {
+    val dot = base.indexOf('.')
+    if (dot < 0) f"${base}_$b%05d"
+    else f"${base.substring(0, dot)}_$b%05d${base.substring(dot)}"
+  }
+
+  /** A folded-stats key (`date=<d>/__gb=<b>/<name>`) after
+    * [[promoteBucketDirs]] moved its file. */
+  private def promotedKey(key: String): String =
+    key.split('/') match {
+      case Array(d, gb, name) if gb.startsWith("__gb=") =>
+        s"$d/${bucketFileName(name, gb.stripPrefix("__gb=").toInt)}"
+      case _ => key
+    }
+
+  /** Stage `df` (which must carry a `date` column) as immutable parquet
+    * under a fresh uuid dir and return the (relpath -> meta) adds, with
+    * the stats and filters its write tasks folded. Nothing is visible
+    * until these are committed.
+    */
   private def stage(df0: DataFrame, fs: FileSystem,
       root: Path): Seq[(String, FileMeta)] = {
     // ONE log replay per stage serves both property consumers
@@ -899,247 +909,165 @@ object TxTable {
     // — passes the table's CHECK constraints, enforced inside this job
     val df = enforceConstraints(df0, props)
     val dataDir = s"d-${java.util.UUID.randomUUID().toString.take(12)}"
+    val bucketing = bucketSpecOf(props)
+    val (toWrite, partCols) = bucketing match {
+      case Some((keys, n)) =>
+        // bucket id = Spark's own bucketing hash (Murmur3 pmod n),
+        // so the scan's HashPartitioning claim is exactly what the
+        // files contain. The callers' range-repartition collapses
+        // into this exchange (CollapseRepartition) — a bucketed
+        // write costs ONE shuffle, like any other.
+        keys.foreach(k => require(df.columns.contains(k),
+          s"bucketed table: every write needs key column $k"))
+        require(!df.columns.contains("__gb"), "__gb is reserved")
+        val sk = sortKey.filter(df.columns.contains)
+        (df.withColumn("__gb", pmod(hash(keys.map(col): _*), lit(n)))
+          .repartition(n, col("__gb"))
+          .sortWithinPartitions(("__gb" +: sk).map(col): _*),
+          Seq("date", "__gb"))
+      case None => (df, Seq("date"))
+    }
     // INT96 (Spark's compatibility default) carries no usable min/max
-    // stats in parquet — pin INT64 micros so interval_start skipping has
-    // footer stats to read. Session-conf scoped to the write, under the
-    // per-session stage lock (see [[stageLocks]]).
+    // stats in parquet — pin INT64 micros so row-group pushdown and the
+    // footer fallback see interval_start ranges. Session-conf scoped to
+    // the write, under the per-session stage lock (see [[stageLocks]]).
     val tsKey = "spark.sql.parquet.outputTimestampType"
     val sess = df.sparkSession
-    val bucketing = bucketSpecOf(props)
-    stageLocks.computeIfAbsent(sess, _ => new Object).synchronized {
-      val prevTs = sess.conf.getOption(tsKey)
-      sess.conf.set(tsKey, "TIMESTAMP_MICROS")
-      try bucketing match {
-        case Some((keys, n)) =>
-          // bucket id = Spark's own bucketing hash (Murmur3 pmod n),
-          // so the scan's HashPartitioning claim is exactly what the
-          // files contain. The callers' range-repartition collapses
-          // into this exchange (CollapseRepartition) — a bucketed
-          // write costs ONE shuffle, like any other.
-          keys.foreach(k => require(df.columns.contains(k),
-            s"bucketed table: every write needs key column $k"))
-          require(!df.columns.contains("__gb"), "__gb is reserved")
-          val sk = sortKey.filter(df.columns.contains)
-          df.withColumn("__gb", pmod(hash(keys.map(col): _*), lit(n)))
-            .repartition(n, col("__gb"))
-            .sortWithinPartitions(("__gb" +: sk).map(col): _*)
-            .write.option("compression", "zstd")
-            .partitionBy("date", "__gb")
-            .parquet(new Path(root, dataDir).toString)
-        case None =>
-          df.write.option("compression", "zstd")
-            .partitionBy("date").parquet(new Path(root, dataDir).toString)
-      } finally prevTs match {
-        case Some(v) => sess.conf.set(tsKey, v)
-        case None    => sess.conf.unset(tsKey)
+    val (folded, summed) =
+      stageLocks.computeIfAbsent(sess, _ => new Object).synchronized {
+        val prevTs = sess.conf.getOption(tsKey)
+        sess.conf.set(tsKey, "TIMESTAMP_MICROS")
+        try writeFiles(toWrite, new Path(root, dataDir), partCols,
+          bucketNgramCols(props))
+        finally prevTs match {
+          case Some(v) => sess.conf.set(tsKey, v)
+          case None    => sess.conf.unset(tsKey)
+        }
       }
-    }
-    if (bucketing.isDefined) promoteBucketDirs(fs, new Path(root, dataDir))
-    indexStagedDir(sess, fs, root, dataDir, knownSchema = Some(df.schema),
-      ngramCols = bucketNgramCols(props))
+    val stats =
+      if (bucketing.isEmpty) folded
+      else {
+        promoteBucketDirs(fs, new Path(root, dataDir))
+        folded.map { case (k, st) => promotedKey(k) -> st }
+      }
+    val tag = if (summed) Map(SummedKey -> ColStats('l', "1", "1")) else Map.empty
+    stagedMetas(fs, root, dataDir, stats.map { case (k, st) => k -> (st ++ tag) })
   }
 
-  /** Index an already-staged data dir: per-file footer stats, the
-    * Bloom/token sidecar, and the (relpath -> meta) adds a commit
-    * needs. The second half of [[stage]], also the publish half of
-    * the DSv2 STREAMING write ([[GraftStreamingWrite]]), whose
-    * executors wrote the parquet themselves. `onlyFiles` (table-
-    * relative) restricts indexing to a committed subset — aborted or
-    * speculative task attempts may have left extra files in the dir,
-    * which stay unreferenced and fall to vacuum.
+  /** Write `df` as parquet under `dir`, partitioned by `partCols`,
+    * through Spark's file writer with a [[FileStatsTracker]]: the write
+    * tasks fold every file's stats and filters as they produce it. Also
+    * reports whether the rows are provably unique on the non-measure
+    * columns: a Catalyst distinct-key set of the plan (a GROUP BY key,
+    * kept through projections, filters, repartitions and sorts) lies
+    * within them. The plan is optimized once, for both answers.
     */
-  private[sink] def indexStagedDir(sess: SparkSession, fs: FileSystem,
-      root: Path, dataDir: String,
-      onlyFiles: Option[Set[String]] = None,
-      knownSchema: Option[StructType] = None,
-      ngramCols: Seq[String] = Seq.empty): Seq[(String, FileMeta)] = {
-    val files = scala.collection.mutable.ArrayBuffer.empty[(Path, String, Long)]
-    listFilesNoPerm(fs, new Path(root, dataDir)).foreach { st =>
+  private def writeFiles(df: DataFrame, dir: Path, partCols: Seq[String],
+      ngramCols: Seq[String]): (Map[String, Map[String, ColStats]], Boolean) = {
+    import org.apache.spark.internal.io.FileCommitProtocol
+    import org.apache.spark.sql.catalyst.expressions.AttributeSet
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // planned as `DataFrameWriter.partitionBy` plans a write (Spark's
+    // V1Writes): a local sort on the partition columns over the query.
+    // The optimizer drops a within-partition sort below it
+    // (EliminateSorts), so files keep the layout a `df.write` gives
+    // them: range-clustered, rows in the range exchange's order.
+    val qe = df.sortWithinPartitions(partCols.map(col): _*).queryExecution
+    val plan = qe.optimizedPlan
+    val output = plan.output
+    val parts = partCols.map(c => output.find(_.name == c).getOrElse(
+      throw new IllegalArgumentException(s"a tx table write needs a `$c` column")))
+    val dataCols = output.filterNot(parts.contains)
+    val tracker = new FileStatsTracker(new FileStatsFold(
+      StructType(dataCols.map(a => StructField(a.name, a.dataType, a.nullable))),
+      ngramCols))
+    val options = Map("compression" -> "zstd")
+    val committer = FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, dir.toString)
+    SQLExecution.withNewExecutionId(qe, Some(s"tx stage $dir")) {
+      FileFormatWriter.write(spark, qe.executedPlan, new ParquetFileFormat,
+        committer, FileFormatWriter.OutputSpec(dir.toString, Map.empty, output),
+        spark.sessionState.newHadoopConfWithOptions(options), parts, None,
+        Seq(tracker), options)
+    }
+    val keys = AttributeSet(output.filterNot(a => measures(a.name)))
+    val summed = plan.distinctKeys.exists(_.forall(e =>
+      e.deterministic && e.references.subsetOf(keys)))
+    (tracker.collected, summed)
+  }
+
+  /** Stats key of the per-file "already summed" tag: the commit that
+    * wrote the file proved its rows unique on every non-measure column
+    * (one row per key, as a SummingMergeTree part is after its insert).
+    * [[compact]] skips a date whose live files all carry it from one
+    * commit.
+    */
+  private[graft] val SummedKey = "#summed"
+
+  /** The staged data dir of a logged file: its path up to `/date=`.
+    * One stage is one commit, so files of one dir came in together. */
+  private def stagedDirOf(rel: String): String =
+    rel.substring(0, math.max(0, rel.lastIndexOf("/date=")))
+
+  /** The (relpath -> meta) adds for the files of a staged dir: each
+    * file's folded stats (keyed `date=<d>/<name>`), its Bloom payloads
+    * moved to the dir's `_filters.tsv` sidecar (see [[BloomStore]]). A
+    * file with no folded stats — written by an older writer, say —
+    * falls back to its footer. `onlyFiles` (table-relative) restricts
+    * the adds to a committed subset: aborted or speculative task
+    * attempts may have left extra files in the dir, which stay
+    * unreferenced and fall to vacuum.
+    */
+  private[sink] def stagedMetas(fs: FileSystem, root: Path, dataDir: String,
+      folded: Map[String, Map[String, ColStats]],
+      onlyFiles: Option[Set[String]] = None): Seq[(String, FileMeta)] = {
+    val files = listFilesNoPerm(fs, new Path(root, dataDir)).flatMap { st =>
       val f = st.getPath
       val date = f.getParent.getName.stripPrefix("date=")
-      val rel = s"$dataDir/date=$date/${f.getName}"
+      val key = s"date=$date/${f.getName}"
       if (f.getName.startsWith("part-") &&
-          onlyFiles.forall(_.contains(rel))) {
-        files += ((f, date, st.getLen))
+          onlyFiles.forall(_.contains(s"$dataDir/$key")))
+        Some((key, date, st.getLen,
+          folded.getOrElse(key, footerStats(fs, f))))
+      else None
+    }
+    val stats = writeFilters(fs, root, dataDir,
+      files.map { case (key, _, _, st) => key -> st }.toMap)
+    files.map { case (key, date, len, _) =>
+      s"$dataDir/$key" -> FileMeta(date, len, stats(key))
+    }
+  }
+
+  /** Move the 'b' bitset payloads of a staged dir's files to ONE
+    * immutable sidecar (`<dataDir>/_filters.tsv`, line format in
+    * [[BloomStore]]); the log carries a pointer per (file, column)
+    * instead of ~27 KB of base64 replicated into every checkpoint. The
+    * small scalar count stats (`#ndv`) stay inline in the log line.
+    */
+  private def writeFilters(fs: FileSystem, root: Path, dataDir: String,
+      inline: Map[String, Map[String, ColStats]])
+      : Map[String, Map[String, ColStats]] = {
+    val lines = inline.toSeq.sortBy(_._1).flatMap { case (f, cols) =>
+      cols.toSeq.sortBy(_._1).collect {
+        case (c, st) if st.typ == 'b' => s"$f\t$c\t${st.max}\t${st.min}"
       }
     }
-    // the index pass only needs FIELD NAMES/TYPES to pick the skip-index
-    // columns: callers that just wrote the data pass their schema so no
-    // extra footer read (a per-commit driver round trip) happens here
-    val stagedSchema = knownSchema.getOrElse(
-      if (files.isEmpty) new StructType()
-      else sess.read.parquet(files.head._1.toString).schema)
-    // per-file Bloom filters for the skip-index columns: ONE
-    // column-pruned distributed job over the just-staged files (the
-    // only pass that sees values; footers can't provide membership).
-    // Keyed by the last TWO path segments (`date=<d>/<name>`): dynamic
-    // partitionBy REUSES one part-XXXXX-<jobUUID> file name across the
-    // date dirs a single task writes, so the bare name alone would
-    // merge different partitions' filters (conservative but weaker
-    // skipping).
-    val bloomCols = bloomColumns.filter(stagedSchema.fieldNames.contains)
-    val tokCols = tokenBloomColumns.filter(c =>
-      stagedSchema.fieldNames.contains(c) &&
-        stagedSchema(c).dataType == org.apache.spark.sql.types.StringType)
-    def stagedByName = sess.read
-      .parquet(files.toSeq.map(_._1.toString): _*)
-      .withColumn("__name", concat_ws("/",
-        element_at(split(col("_metadata.file_path"), "/"), -2),
-        element_at(split(col("_metadata.file_path"), "/"), -1)))
-    val valueBlooms: Map[String, Map[String, ColStats]] =
-      if (bloomCols.isEmpty || files.isEmpty) Map.empty
-      else {
-        // per-file approximate NDV (`<col>#ndv`, the CBO count stat) is
-        // DERIVED from the bitset the job collects anyway — the Bloom
-        // swamping estimator n ≈ -(m/k)·ln(1 - X/m), X = bits set —
-        // so it costs a driver-side popcount, not a second distributed
-        // aggregate re-hashing every value (an approx_count_distinct
-        // column here measured ~1.15× on the bloom-writing gates)
-        val aggs = bloomCols.map(c => Bloom.agg(col(c)).as(c))
-        def ndvOf(bits: Array[Byte]): Long = {
-          var x = 0L
-          var i = 0
-          while (i < bits.length) {
-            x += java.lang.Integer.bitCount(bits(i) & 0xff); i += 1
-          }
-          val m = Bloom.M.toDouble
-          // saturated filter: unknown-large. 2^40 keeps a million-file
-          // Σ far from Long overflow; the catalog clamps to rowCount.
-          if (x >= Bloom.M) 1L << 40
-          else math.round(-(m / Bloom.K) * math.log1p(-x / m))
-        }
-        stagedByName.groupBy("__name")
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().map { r =>
-            r.getString(0) -> (bloomCols.map { c =>
-              c -> ColStats('b', Bloom.encode(r.getAs[Array[Byte]](c)),
-                s"${Bloom.M},${Bloom.K}")
-            } ++ bloomCols.map { c =>
-              val n = ndvOf(r.getAs[Array[Byte]](c))
-              s"$c$NdvSuffix" -> ColStats('l', n.toString, n.toString)
-            }).toMap
-          }.toMap
+    if (lines.isEmpty) return inline
+    val sidecarRel = s"$dataDir/_filters.tsv"
+    val out = fs.create(new Path(root, sidecarRel), true)
+    try out.write((lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    inline.map { case (f, cols) =>
+      f -> cols.map {
+        case (c, st) if st.typ == 'b' =>
+          c -> ColStats('b', s"${BloomStore.Ptr}$sidecarRel", st.max)
+        case other => other
       }
-    // token filters: one pass per indexed text column — the explode
-    // repeats rows, which is harmless for a SET-semantics bitset
-    val tokenBlooms: Map[String, Map[String, ColStats]] =
-      tokCols.foldLeft(Map.empty[String, Map[String, ColStats]]) {
-        (acc, c) =>
-          if (files.isEmpty) acc
-          else {
-            // same pre-explode spread as the ngram pass below: the
-            // token explode multiplies rows ~30x after a scan whose
-            // parallelism is file-count-bound
-            val per = stagedByName
-              .repartition(sess.sparkContext.defaultParallelism)
-              .select(col("__name"),
-                explode(split(col(c), " ")).as("__t"))
-              .filter(length(col("__t")) > 0)
-              .groupBy("__name")
-              .agg(Bloom.agg(col("__t"), Bloom.TokM).as("b"))
-              .collect().map { r =>
-                r.getString(0) -> Map(s"$c#tok" -> ColStats('b',
-                  Bloom.encode(r.getAs[Array[Byte]]("b")),
-                  s"${Bloom.TokM},${Bloom.K}"))
-              }.toMap
-            acc ++ per.map { case (f, m) =>
-              f -> (acc.getOrElse(f, Map.empty) ++ m)
-            }
-          }
-      }
-    // ngram filters (ClickHouse `ngrambf_v1` analog): OPT-IN via the
-    // `graft.ngramBloomBy` table property — the build explodes one
-    // 4-gram per character position, which is ~5× the token pass's
-    // row count, so only tables that serve substring (LIKE '%..%')
-    // lookups should pay it. Probed at planning time for
-    // Contains/StartsWith/EndsWith predicates whose literal is >= 4
-    // chars: EVERY gram of the needle must may-contain, else the file
-    // is skipped (a substring match implies all its grams appear).
-    val ngCols = ngramCols
-      .filter(c => stagedSchema.fieldNames.contains(c) &&
-        stagedSchema(c).dataType == org.apache.spark.sql.types.StringType)
-    val ngramBlooms: Map[String, Map[String, ColStats]] =
-      ngCols.foldLeft(Map.empty[String, Map[String, ColStats]]) {
-        (acc, c) =>
-          if (files.isEmpty) acc
-          else {
-            val n = Bloom.NgramN
-            // array_distinct BEFORE the explode: a bitset only needs
-            // each gram once per document, and natural text repeats
-            // grams heavily — measured 8x fewer exploded rows on the
-            // bench corpus (SCALE.md ngramtax arm)
-            val grams = expr(s"CASE WHEN length($c) >= $n THEN " +
-              s"array_distinct(transform(sequence(1, length($c) - ${n - 1}), " +
-              s"i -> substring($c, i, $n))) ELSE array() END")
-            // one staged file = ONE input partition; the gram explode
-            // multiplies rows ~200x, so hash it at full parallelism:
-            // round-robin the (cheap, pre-explode) doc rows first —
-            // partial bitsets per partition merge per __name after
-            val per = stagedByName
-              .repartition(sess.sparkContext.defaultParallelism)
-              .select(col("__name"), explode(grams).as("__g"))
-              .groupBy("__name")
-              .agg(Bloom.agg(col("__g"), Bloom.TokM).as("b"))
-              .collect().map { r =>
-                r.getString(0) -> Map(s"$c#ng" -> ColStats('b',
-                  Bloom.encode(r.getAs[Array[Byte]]("b")),
-                  s"${Bloom.TokM},${Bloom.K}"))
-              }.toMap
-            acc ++ per.map { case (f, m) =>
-              f -> (acc.getOrElse(f, Map.empty) ++ m)
-            }
-          }
-      }
-    val bloomsInline: Map[String, Map[String, ColStats]] =
-      (valueBlooms.keySet ++ tokenBlooms.keySet ++ ngramBlooms.keySet)
-        .map { f =>
-          f -> (valueBlooms.getOrElse(f, Map.empty) ++
-            tokenBlooms.getOrElse(f, Map.empty) ++
-            ngramBlooms.getOrElse(f, Map.empty))
-        }.toMap
-    // filters go to ONE immutable sidecar per staged dir; the log
-    // carries a pointer per (file, column) instead of ~27 KB of base64
-    // replicated into every checkpoint (see [[BloomStore]])
-    val blooms: Map[String, Map[String, ColStats]] =
-      if (bloomsInline.isEmpty) bloomsInline
-      else {
-        val sidecarRel = s"$dataDir/_filters.tsv"
-        // only the 'b' bitset payloads move to the sidecar; the small
-        // scalar count stats (`#ndv`) stay inline in the log line
-        val lines = bloomsInline.toSeq.sortBy(_._1).flatMap {
-          case (f, cols) => cols.toSeq.sortBy(_._1).collect {
-            case (c, st) if st.typ == 'b' => s"$f\t$c\t${st.max}\t${st.min}"
-          }
-        }
-        val out = fs.create(new Path(root, sidecarRel), true)
-        try out.write((lines.mkString("\n") + "\n")
-          .getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-        bloomsInline.map { case (f, cols) =>
-          f -> cols.map {
-            case (c, st) if st.typ == 'b' =>
-              c -> ColStats('b', s"${BloomStore.Ptr}$sidecarRel", st.max)
-            case other => other
-          }
-        }
-      }
-    // footer reads are independent metadata fetches — do them on a
-    // bounded driver pool, not one-at-a-time (a 1000-file stage at
-    // ~10ms/footer is 10s sequential, <1s at 16-way; same move Delta
-    // makes for stats collection)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, files.size)))
-    try {
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      Await.result(Future.traverse(files.toSeq) { case (f, date, len) =>
-        Future((s"$dataDir/date=${date}/${f.getName}",
-          FileMeta(date, len,
-            footerStats(fs, f) ++
-              blooms.getOrElse(s"date=${date}/${f.getName}", Map.empty))))
-      }, Duration.Inf)
-    } finally pool.shutdown()
+    }
   }
 
   /** The data schema `df` will write (`partitionBy` strips `date` from
@@ -1207,7 +1135,14 @@ object TxTable {
     }
   }
 
-  /** Transactional append: new files become visible in one commit. */
+  /** Transactional append: new files become visible in one commit,
+    * with each file's stats and filters folded by the write tasks.
+    * When the plan of `df` proves its rows unique on the non-measure
+    * columns (a GROUP BY over them, as `FlowPipeline.run` ends with),
+    * every file carries the [[SummedKey]] tag and a later [[compact]]
+    * leaves the commit's dates alone while no other commit feeds them.
+    * Returns the commit version.
+    */
   def append(spark: SparkSession, df: DataFrame, table: String): Long = {
     val (fs, root) = fsFor(spark, table)
     commitRetry(fs, root, stage(prep(df), fs, root), Seq.empty, None,
@@ -1232,6 +1167,10 @@ object TxTable {
     * 100 batches). The contract this buys REQUIRES the app's versions
     * to be monotone — exactly what Structured Streaming's batchId is;
     * dedup survives [[expireLog]] because checkpoints carry the marks.
+    *
+    * Stats, filters and the [[SummedKey]] tag come as in [[append]], so
+    * a date fed by one micro-batch commit is already summed for
+    * [[compact]].
     */
   def appendTxn(spark: SparkSession, df: DataFrame, table: String,
       appId: String, version: Long,
@@ -1585,11 +1524,12 @@ object TxTable {
   }
 
   /** Publish one DSv2 streaming EPOCH: the executors already wrote the
-    * parquet themselves ([[GraftParquetDataWriter]]); this is the
-    * driver-side half — index exactly the files the epoch's committed
-    * tasks reported (`onlyFiles`; files from aborted/speculative
-    * attempts in the same dir stay unreferenced and fall to
-    * [[vacuum]]), then land them in ONE commit carrying the
+    * parquet themselves ([[GraftParquetDataWriter]]) and folded each
+    * file's stats and filters (`folded`, keyed `date=<d>/<name>`); this
+    * is the driver-side half — take exactly the files the epoch's
+    * committed tasks reported (`onlyFiles`; files from
+    * aborted/speculative attempts in the same dir stay unreferenced and
+    * fall to [[vacuum]]), then land them in ONE commit carrying the
     * `(writerId, epochId)` mark, so a replayed epoch after checkpoint
     * recovery lands ZERO times — the same exactly-once contract as
     * [[appendTxn]], with the pre-index high-water check keeping the
@@ -1601,7 +1541,8 @@ object TxTable {
   private[graft] def commitStreamingEpoch(spark: SparkSession,
       table: String, dataDir: String, onlyFiles: Set[String],
       appId: String, epochId: Long, writeSchema: StructType,
-      replace: Boolean = false): Long = {
+      replace: Boolean = false,
+      folded: Map[String, Map[String, ColStats]] = Map.empty): Long = {
     val (fs, root) = fsFor(spark, table)
     if (txnHighWater(fs, root).get(appId).exists(_ >= epochId))
       return -1L // replayed epoch: don't even list the staged dir
@@ -1613,8 +1554,7 @@ object TxTable {
         "write job buckets like any other append")
     val adds =
       if (onlyFiles.isEmpty) Seq.empty
-      else indexStagedDir(spark, fs, root, dataDir, Some(onlyFiles),
-        Some(writeSchema), ngramCols = bucketNgramCols(props))
+      else stagedMetas(fs, root, dataDir, folded, Some(onlyFiles))
     val next = StructType(writeSchema.filterNot(_.name == "date")
       .map(f => f.copy(nullable = true)))
     val schemaAction = logSchema(fs, root) match {
@@ -2047,16 +1987,32 @@ object TxTable {
     * target dates into fresh files and atomically swap them in. Old
     * files stay on disk (time travel / reader isolation) until
     * [[vacuum]]; a crash mid-compaction leaves the old version live.
+    *
+    * A date with nothing to merge is left out, as ClickHouse merges
+    * only a partition that holds two or more parts: every live file of
+    * the date carries the [[SummedKey]] tag from ONE commit and no
+    * deletion vector, so its rows are already one per key. Returns the
+    * commit version, or -1 when no target date is left (no commit at
+    * all, as for a replayed [[appendTxn]]).
     */
   def compact(spark: SparkSession, table: String,
       dates: Option[Seq[String]] = None): Long = {
     val (fs, root) = fsFor(spark, table)
-    val targetDates = snapshotFiles(fs, root).values.map(_.date).toSet.toSeq
-      .sorted.filter(d => dates.forall(_.contains(d)))
-    val compacted = resum(read(spark, table, Some(targetDates)))
+    val state = replayState(fs, root, None)
+    val live = state.files
+    def summed(files: Iterable[(String, FileMeta)]): Boolean =
+      files.forall { case (_, m) =>
+        m.stats.contains(SummedKey) && DvStore.pointerOf(m.stats).isEmpty
+      } && files.map { case (rel, _) => stagedDirOf(rel) }.toSet.size == 1
+    val targetDates = live.groupBy(_._2.date).toSeq
+      .collect { case (d, files) if dates.forall(_.contains(d)) && !summed(files) => d }
+      .sorted
+    if (targetDates.isEmpty) return -1L
+    // one snapshot for what is read and what is removed
+    val targets = live.toSeq.filter { case (_, m) => targetDates.contains(m.date) }
+    val compacted = resum(readFileSet(spark, root, targets, state.schema))
     val adds = stage(prep(compacted), fs, root)
-    val removes = snapshotFiles(fs, root)
-      .collect { case (rel, m) if targetDates.contains(m.date) => rel }.toSeq
+    val removes = targets.map(_._1)
     // normally a no-op; on a pre-evolution log this upgrades it with an
     // M action for the (unchanged) schema
     commitRetry(fs, root, adds, removes, None,

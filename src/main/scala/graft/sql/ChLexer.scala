@@ -186,6 +186,7 @@ object ChLexer {
       * starts. `p` must not match the empty string. */
     def rewriteEach(p: Pattern)(f: Matcher => (String, Int)): String = {
       val m = p.matcher(mask)
+      if (!m.find()) return sql
       val sb = new java.lang.StringBuilder(sql.length)
       var last = 0
       while (last < sql.length && m.find(last)) {
@@ -197,15 +198,19 @@ object ChLexer {
     }
   }
 
-  /** `sql` with every match of `regex` on its mask replaced by
+  /** The lexing of `out`, the text a pass made of `lx`: `lx` itself
+    * when the pass changed nothing, so a chain of passes lexes a text
+    * once. */
+  def relex(lx: Lexed, out: String): Lexed =
+    if ((out eq lx.sql) || out == lx.sql) lx else apply(out)
+
+  /** `lx` with every match of `regex` on its mask replaced by
     * `template`, whose `$n` stand for the groups' original text. */
-  def replaceAll(sql: String, regex: String, template: String): String = {
-    val lx = apply(sql)
-    lx.replaceAll(Pattern.compile(regex)) { m =>
+  def replaceAll(lx: Lexed, regex: String, template: String): Lexed =
+    relex(lx, lx.replaceAll(Pattern.compile(regex)) { m =>
       GroupRef.replaceAllIn(template, r => Matcher.quoteReplacement(
         Option(lx.group(m, r.group(1).toInt)).getOrElse("")))
-    }
-  }
+    })
   private val GroupRef = "\\$(\\d)".r
 
   /** The value of `s` when it is exactly one string literal. */

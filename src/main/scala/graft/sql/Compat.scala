@@ -3473,8 +3473,8 @@ object Compat {
     * and fail in Spark's parser loudly rather than being rewritten
     * wrongly.
     */
-  private def mergePrewhere(sql: String): String = {
-    val lx = ChLexer(sql)
+  private def mergePrewhere(lx: ChLexer.Lexed): String = {
+    val sql = lx.sql
     val words = lx.code.filter(t => t.kind == ChLexer.Word && t.depth == 0)
     def kw(t: ChLexer.Token) = lx.text(t).toUpperCase(java.util.Locale.ROOT)
     val clauseKw = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
@@ -3507,8 +3507,8 @@ object Compat {
     * a join/membership keyword, so a column actually named `global`
     * survives.
     */
-  private def stripGlobal(sql: String): String =
-    ChLexer.replaceAll(sql, "(?i)\\bGLOBAL\\s+(?=(?:IN|NOT|JOIN|ANY|ALL|" +
+  private def stripGlobal(lx: ChLexer.Lexed): ChLexer.Lexed =
+    ChLexer.replaceAll(lx, "(?i)\\bGLOBAL\\s+(?=(?:IN|NOT|JOIN|ANY|ALL|" +
       "LEFT|RIGHT|INNER|FULL|CROSS|SEMI|ANTI)\\b)", "")
 
   /** `GROUP BY ... WITH TOTALS` → `GROUP BY GROUPING SETS ((...), ())`:
@@ -3517,7 +3517,7 @@ object Compat {
     * the key columns (Spark's grouping-sets convention) where CH shows
     * type defaults (0 / '').
     */
-  private def rewriteTotals(sql: String): String = {
+  private def rewriteTotals(lx: ChLexer.Lexed): ChLexer.Lexed = {
     // the captured key list must not span ANOTHER `GROUP BY` — a lazy
     // `(.+?)` would anchor on the FIRST GROUP BY in the statement and
     // swallow a subquery/CTE boundary when the WITH TOTALS belongs to an
@@ -3527,7 +3527,7 @@ object Compat {
     // deviation as TOTALS)
     val keys = "((?:(?!\\bGROUP\\s+BY\\b).)+?)"
     Seq("TOTALS" -> "GROUPING SETS (($1), ())", "ROLLUP" -> "ROLLUP ($1)",
-      "CUBE" -> "CUBE ($1)").foldLeft(sql) { case (acc, (mod, to)) =>
+      "CUBE" -> "CUBE ($1)").foldLeft(lx) { case (acc, (mod, to)) =>
       ChLexer.replaceAll(acc,
         s"(?is)GROUP\\s+BY\\s+$keys\\s+WITH\\s+$mod", s"GROUP BY $to")
     }
@@ -3542,9 +3542,9 @@ object Compat {
     * untouched and fails loudly in the parser rather than being
     * rewritten wrongly.
     */
-  private def rewriteArrayJoin(sql: String): String = {
+  private def rewriteArrayJoin(lx: ChLexer.Lexed): ChLexer.Lexed = {
     val expr = "((?:(?!\\bAS\\b).)+?)"
-    Seq("\\bLEFT\\s+" -> "OUTER ", "\\b" -> "").foldLeft(sql) {
+    Seq("\\bLEFT\\s+" -> "OUTER ", "\\b" -> "").foldLeft(lx) {
       case (acc, (left, outer)) => ChLexer.replaceAll(acc,
         s"(?is)${left}ARRAY\\s+JOIN\\s+$expr\\s+AS\\s+(\\w+)",
         s"LATERAL VIEW ${outer}explode($$1) __aj AS $$2")
@@ -3562,8 +3562,8 @@ object Compat {
     * anything else (no ORDER BY, nested LIMIT BY) passes through and
     * fails loudly in Spark's parser.
     */
-  private def rewriteLimitBy(sql: String): String = {
-    val lx = ChLexer(sql)
+  private def rewriteLimitBy(lx: ChLexer.Lexed): String = {
+    val sql = lx.sql
     val m = limitBy.matcher(lx.mask)
     // the ORDER BY we anchored on must not live inside a subquery
     if (!m.matches() ||
@@ -3760,10 +3760,10 @@ object Compat {
     // right-side reference fails loudly instead of silently resolving);
     // string literals and longer identifiers that merely START with
     // the alias are left intact
-    Seq(aAl -> "__l_", bAl -> "__r_").foldLeft(spliced) {
+    Seq(aAl -> "__l_", bAl -> "__r_").foldLeft(ChLexer(spliced)) {
       case (acc, (alias, repl)) => ChLexer.replaceAll(acc,
         s"(?i)\\b${Pattern.quote(alias)}\\.", repl)
-    }
+    }.sql
   }
 
   private val asofSeq = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -3799,11 +3799,17 @@ object Compat {
       throw new IllegalArgumentException(
         "__graft_decayed_* are internal; use exponentialTimeDecayed" +
           "{Sum,Count,Max,Avg}(tau)(...) OVER (... ORDER BY t)")
-    val base = rewriteMannWhitney(rewriteKolmogorov(rewriteEma(
-      translateCh0(rewriteDecayed(sql)))))
-    mergePrewhere(stripGlobal(rewriteTotals(rewriteLimitBy(
-      rewriteArrayJoin(rewriteNumbers(rewriteAge(rewriteDateDiff(
-        rewriteRunning(rewriteRankCorr(rewriteDeltaSum(base)))))))))))
+    // one lexing per text: a pass that changes nothing hands its
+    // lexing on to the next
+    def text(pass: ChLexer.Lexed => String)(in: ChLexer.Lexed) =
+      ChLexer.relex(in, pass(in))
+    Seq[ChLexer.Lexed => ChLexer.Lexed](text(rewriteDecayed),
+      text(translateCh0), text(rewriteEma), text(rewriteKolmogorov),
+      text(rewriteMannWhitney), text(rewriteDeltaSum),
+      text(rewriteRankCorr), text(rewriteRunning), text(rewriteDateDiff),
+      text(rewriteAge), rewriteNumbers, rewriteArrayJoin,
+      text(rewriteLimitBy), rewriteTotals, stripGlobal, text(mergePrewhere))
+      .foldLeft(lx)((in, pass) => pass(in)).sql
   }
 
   /** CH `deltaSumTimestamp(value, ts)` — the counter-delta sum: the
@@ -3824,8 +3830,8 @@ object Compat {
     * select list. Anything else passes through unrewritten and fails
     * loudly in the analyzer — never a silently different answer.
     */
-  private def rewriteDeltaSum(sql: String): String =
-    rewriteGroupWindow(sql, "deltasumtimestamp",
+  private def rewriteDeltaSum(lx: ChLexer.Lexed): String =
+    rewriteGroupWindow(lx, "deltasumtimestamp",
       call = (i, _) => s"sum(greatest(__dst$i, 0))",
       defs = (i, a, keys) => s"((${a(0)}) - lag(${a(0)}) OVER " +
         s"(PARTITION BY $keys ORDER BY ${a(1)})) AS __dst$i")
@@ -3841,8 +3847,8 @@ object Compat {
     * [[rewriteDeltaSum]]; unsupported shapes refuse loudly via the
     * registered fallback.
     */
-  private def rewriteRankCorr(sql: String): String =
-    rewriteGroupWindow(sql, "rankcorr",
+  private def rewriteRankCorr(lx: ChLexer.Lexed): String =
+    rewriteGroupWindow(lx, "rankcorr",
       call = (i, _) => s"corr(__rcx$i, __rcy$i)",
       defs = (i, a, keys) => Seq(a(0) -> "x", a(1) -> "y").map {
         case (v, t) =>
@@ -3874,8 +3880,8 @@ object Compat {
     * first. Same supported query shape as [[rewriteDeltaSum]];
     * unsupported shapes pass through and fail loudly at analysis.
     */
-  private def rewriteMannWhitney(sql: String): String =
-    rewriteGroupWindow(sql, "mannwhitneyutest",
+  private def rewriteMannWhitney(lx: ChLexer.Lexed): String =
+    rewriteGroupWindow(lx, "mannwhitneyutest",
       call = (i, a) => {
         val alt = if (a.size >= 3) ChLexer.stringValue(a(0)).getOrElse(
           throw new IllegalArgumentException(
@@ -3929,8 +3935,8 @@ object Compat {
     * asymptotic answer under an 'exact' label violates the refusal
     * policy. NULL sample values: filter first, as with
     * [[rewriteMannWhitney]]. */
-  private def rewriteKolmogorov(sql: String): String =
-    rewriteGroupWindow(sql, "kolmogorovsmirnovtest",
+  private def rewriteKolmogorov(lx: ChLexer.Lexed): String =
+    rewriteGroupWindow(lx, "kolmogorovsmirnovtest",
       call = (i, a) => {
         val alt = if (a.size >= 3) ChLexer.stringValue(a(0)).getOrElse(
           throw new IllegalArgumentException(
@@ -3977,8 +3983,8 @@ object Compat {
     * same one-shuffle shape as the other group-window rewrites, and
     * anchoring at the max keeps every weight ≤ 1 (no overflow at any
     * epoch scale). */
-  private def rewriteEma(sql: String): String =
-    rewriteGroupWindow(sql, "exponentialmovingaverage",
+  private def rewriteEma(lx: ChLexer.Lexed): String =
+    rewriteGroupWindow(lx, "exponentialmovingaverage",
       call = (i, _) => s"(sum(__emv$i * __emw$i) / sum(__emw$i))",
       defs = (i, a, keys) =>
         s"CAST((${a(1)}) AS DOUBLE) AS __emv$i, " +
@@ -3995,11 +4001,11 @@ object Compat {
     * keys, calls outside the select list) passes through unrewritten
     * and fails loudly at analysis — never a silently different answer.
     */
-  private def rewriteGroupWindow(sql: String, fn: String,
+  private def rewriteGroupWindow(lx: ChLexer.Lexed, fn: String,
       call: (Int, Seq[String]) => String,
       defs: (Int, Seq[String], String) => String,
       argsOk: Seq[String] => Boolean = _.size == 2): String = {
-    val lx = ChLexer(sql)
+    val sql = lx.sql
     val lower = lx.mask.toLowerCase(java.util.Locale.ROOT)
     if (!lower.contains(fn + "(") || !lower.trim.startsWith("select"))
       return sql
@@ -4066,8 +4072,8 @@ object Compat {
     * Ref: reference has no equivalent; CH docs
     * exponentialTimeDecayedSum/Count/Max/Avg.
     */
-  private def rewriteDecayed(sql: String): String = {
-    val lx = ChLexer(sql)
+  private def rewriteDecayed(lx: ChLexer.Lexed): String = {
+    val sql = lx.sql
     lx.rewriteEach(decayedHead) { m =>
       def keep(end: Int) = (sql.substring(m.start, end), end)
       lx.args(m.end) match {
@@ -4252,10 +4258,10 @@ object Compat {
     * Bare spellings without OVER pass through and fail loudly in
     * Spark's parser (the house honest-refusal contract).
     */
-  private def rewriteRunning(sql0: String): String = {
-    val sql =
-      ChLexer.replaceAll(sql0, "(?i)\\b(lag|lead)InFrame\\s*\\(", "$1(")
-    val lx = ChLexer(sql)
+  private def rewriteRunning(lx0: ChLexer.Lexed): String = {
+    val lx =
+      ChLexer.replaceAll(lx0, "(?i)\\b(lag|lead)InFrame\\s*\\(", "$1(")
+    val sql = lx.sql
     lx.rewriteEach(runningHead) { m =>
       def keep(end: Int) = (sql.substring(m.start, end), end)
       lx.args(m.end) match {
@@ -4327,8 +4333,8 @@ object Compat {
     * function — → Spark's `range`, with CH's column name (`number`).
     * Literal arguments only (CH's own contract for the table form).
     */
-  private def rewriteNumbers(sql: String): String =
-    ChLexer.replaceAll(ChLexer.replaceAll(sql,
+  private def rewriteNumbers(lx: ChLexer.Lexed): ChLexer.Lexed =
+    ChLexer.replaceAll(ChLexer.replaceAll(lx,
       "(?i)\\bnumbers\\s*\\(\\s*(\\d+)\\s*\\)",
       "(SELECT id AS number FROM range($1))"),
       "(?i)\\bnumbers\\s*\\(\\s*(\\d+)\\s*,\\s*(\\d+)\\s*\\)",
@@ -4358,27 +4364,26 @@ object Compat {
     * boundary-crossing translation; the two CH functions differ and
     * so do the two rewrites).
     */
-  private def rewriteAge(sql: String): String =
-    rewriteUnitCall(sql, "age", (u, a, b) => s"timestampdiff($u, " +
+  private def rewriteAge(lx: ChLexer.Lexed): String =
+    rewriteUnitCall(lx, "age", (u, a, b) => s"timestampdiff($u, " +
       s"CAST($a AS TIMESTAMP), CAST($b AS TIMESTAMP))")
 
-  private def rewriteDateDiff(sql: String): String =
-    rewriteUnitCall(sql, "dateDiff|date_diff|timestampDiff", (u, a, b) =>
+  private def rewriteDateDiff(lx: ChLexer.Lexed): String =
+    rewriteUnitCall(lx, "dateDiff|date_diff|timestampDiff", (u, a, b) =>
       s"timestampdiff($u, date_trunc('$u', CAST($a AS TIMESTAMP)), " +
         s"date_trunc('$u', CAST($b AS TIMESTAMP)))")
 
   /** Each call `fn('unit', a, b)` of one of the `fns` with a known
     * unit, replaced by `repl(unit, a, b)`. */
-  private def rewriteUnitCall(sql: String, fns: String,
+  private def rewriteUnitCall(lx: ChLexer.Lexed, fns: String,
       repl: (String, String, String) => String): String = {
-    val lx = ChLexer(sql)
     lx.rewriteEach(Pattern.compile(
         s"(?i)\\b(?:$fns)\\s*\\(\\s*'([^']*)'\\s*,")) { m =>
       val unit = lx.group(m, 1).toLowerCase(java.util.Locale.ROOT)
       lx.args(m.end) match {
         case Some((Seq(a, b), close)) if dateDiffUnits(unit) =>
           (repl(unit, a, b), close + 1)
-        case _ => (sql.substring(m.start, m.end), m.end)
+        case _ => (lx.sql.substring(m.start, m.end), m.end)
       }
     }
   }
@@ -4388,10 +4393,11 @@ object Compat {
     "SHA256" -> "chSHA256", "SHA512" -> "chSHA512",
     "CRC32" -> "chCRC32")
 
-  private def translateCh0(sql0: String): String = {
-    val format = formatClause.matcher(ChLexer(sql0).mask)
-    val sql = if (format.find()) sql0.substring(0, format.start) else sql0
-    val lx = ChLexer(sql)
+  private def translateCh0(lx0: ChLexer.Lexed): String = {
+    val format = formatClause.matcher(lx0.mask)
+    val lx =
+      if (format.find()) ChLexer(lx0.sql.substring(0, format.start)) else lx0
+    val sql = lx.sql
     val toks = lx.code
     def opens(i: Int) = i < toks.length && lx.is(toks(i), '(')
     val sb = new java.lang.StringBuilder(sql.length)

@@ -78,6 +78,10 @@ class SessionConfigSpec extends AnyFunSuite {
       == "graft.ops.FastLocalFs")
   }
 
+  test("the generated-code cache holds the engine's working set") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
+  }
+
   test("UTC session time zone and size-adaptive AQE coalescing") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
