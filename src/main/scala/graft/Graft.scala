@@ -59,4 +59,15 @@ object Graft {
     conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
   }
+
+  /** Runs `body` with its Spark jobs, adaptive query stages included,
+    * described as `desc` after the caller's description (a stream's
+    * batch, say), which it restores afterwards. */
+  def describing[A](spark: SparkSession, desc: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    val nested = Option(prev).filter(_.nonEmpty).fold(desc)(p => s"$p > $desc")
+    sc.setJobDescription(nested)
+    try body finally sc.setJobDescription(prev)
+  }
 }

@@ -33,81 +33,70 @@ case class FlowConfig(
   */
 object FlowPipeline {
 
-  // ---- F1-F3: agent-side junk filters (collector.go:227-247) ----
-  /** The localhost check is null-safe (`<=>`): pure-v6 flows carry NULL
-    * v4 columns and must survive to [[dropIpv6]] — the stage that owns
-    * their drop, like the reference's labeler — not be silently
-    * null-eliminated here. EqualNullSafe remains a pushable predicate.
-    */
-  def filterJunk(flows: DataFrame): DataFrame =
-    flows
-      .filter(col("orig_bytes") > 0 || col("orig_pkts") > 0 ||
-        col("reply_bytes") > 0 || col("reply_pkts") > 0)
-      .filter(col("proto").isin(6, 17))
-      .filter(!(col("orig_src_ip") <=> SyntheticFlows.LOCALHOST) &&
-        !(col("orig_dst_ip") <=> SyntheticFlows.LOCALHOST) &&
-        !(col("reply_src_ip") <=> SyntheticFlows.LOCALHOST) &&
-        !(col("reply_dst_ip") <=> SyntheticFlows.LOCALHOST))
+  // ---- F1-F5: the checks that read raw columns only ----
+  /** A predicate a kept flow satisfies, named by the outcome of a flow
+    * that fails it. NULL fails, as a filter drops it. */
+  private type Check = (String, Column)
 
-  // ---- F4: configurable UDP drop (labeler.go:183-188) ----
-  def dropUdp(cfg: FlowConfig)(flows: DataFrame): DataFrame =
-    if (cfg.ignoreUDP) flows.filter(col("proto") =!= 17) else flows
+  /** F1-F3 (collector.go:227-247). The localhost check is null-safe:
+    * pure-v6 flows (NULL v4 columns) must reach the IPv6 check. */
+  private val junkChecks: Seq[Check] = Seq(
+    "ignored_zero" -> (col("orig_bytes") > 0 || col("orig_pkts") > 0 ||
+      col("reply_bytes") > 0 || col("reply_pkts") > 0),
+    "ignored_proto" -> col("proto").isin(6, 17),
+    "ignored_localhost" -> Seq("orig_src_ip", "orig_dst_ip", "reply_src_ip",
+      "reply_dst_ip").map(c => !(col(c) <=> SyntheticFlows.LOCALHOST)).reduce(_ && _))
 
-  // ---- F5: IPv6 drop (labeler.go:243-247,379-405) ----
-  /** The proto carries each endpoint as a oneof `{u32 v4 | bytes v6}`
-    * (flow_handler.proto:30-41); sources surface the v6 branch as
-    * nullable BinaryType `*_ip6` columns. Any v6 endpoint drops the
-    * flow, like the reference's ErrIPv6Flow. Returns the v6-detection
-    * predicate over whatever v6 columns the schema carries; None for
-    * pure-v4 schemas. A NULL `is_ipv6` flag means "not v6" (coalesced —
-    * a bare `!flag` filter would null-eliminate valid v4 rows).
-    */
-  private def isIpv6(flows: DataFrame): Option[Column] = {
-    val v6cols = Seq("orig_src_ip6", "orig_dst_ip6",
-      "reply_src_ip6", "reply_dst_ip6").filter(flows.columns.contains)
-    val checks =
-      v6cols.map(c => col(c).isNotNull) ++
-        (if (flows.columns.contains("is_ipv6"))
-          Seq(coalesce(col("is_ipv6"), lit(false))) else Nil)
-    checks.reduceOption(_ || _)
-  }
+  /** F4, the configurable UDP drop (labeler.go:183-188). */
+  private def udpChecks(cfg: FlowConfig): Seq[Check] =
+    if (cfg.ignoreUDP) Seq("ignored_udp" -> (col("proto") =!= 17)) else Nil
 
-  def dropIpv6(flows: DataFrame): DataFrame =
-    isIpv6(flows) match {
-      case Some(pred) =>
-        // every surviving row is pure-v4, so the v6 columns are all-NULL
-        // dead weight from here on — drop them NOW so 4 BinaryType
-        // columns (plus the flag) don't ride every downstream exchange
-        val dead = Seq("orig_src_ip6", "orig_dst_ip6",
-          "reply_src_ip6", "reply_dst_ip6", "is_ipv6")
-          .filter(flows.columns.contains)
-        flows.filter(!pred).drop(dead: _*)
-      case None => flows
+  /** F5, the IPv6 drop (labeler.go:243-247,379-405): the proto's v6
+    * endpoint branch (flow_handler.proto:30-41) surfaces as nullable
+    * `*_ip6` columns or an `is_ipv6` flag (NULL = v4); any v6 endpoint
+    * drops the flow (ErrIPv6Flow). No check for a pure-v4 schema. */
+  private def ipv6Checks(flows: DataFrame): Seq[Check] = {
+    val isV6 = v6Columns.filter(flows.columns.contains).map {
+      case "is_ipv6" => coalesce(col("is_ipv6"), lit(false))
+      case c => col(c).isNotNull
     }
-
-  // ---- F6/J2: node-flow anti-join (labeler.go:407-427) ----
-  def dropNodeFlows(nodes: DataFrame)(flows: DataFrame): DataFrame = {
-    val ips = broadcast(nodes.select(col("node_internal_ip").as("nip")))
-    flows
-      .join(ips, col("orig_src_ip") === col("nip"), "left_anti")
-      .join(ips, col("reply_src_ip") === col("nip"), "left_anti")
+    isV6.reduceOption(_ || _).map(v6 => "ignored_ipv6" -> !v6).toSeq
   }
+
+  private val v6Columns = Seq("orig_src_ip6", "orig_dst_ip6", "reply_src_ip6",
+    "reply_dst_ip6", "is_ipv6")
+
+  private def keep(checks: Seq[Check])(flows: DataFrame): DataFrame =
+    checks.foldLeft(flows) { case (df, (_, pass)) => df.filter(pass) }
+
+  def filterJunk(flows: DataFrame): DataFrame = keep(junkChecks)(flows)
+
+  def dropUdp(cfg: FlowConfig)(flows: DataFrame): DataFrame =
+    keep(udpChecks(cfg))(flows)
+
+  /** Also drops the v6 columns, all NULL on surviving rows, so they ride
+    * no downstream exchange. */
+  def dropIpv6(flows: DataFrame): DataFrame =
+    keep(ipv6Checks(flows))(flows).drop(v6Columns: _*)
+
+  // ---- F6/J2: node flows (labeler.go:407-427) ----
+  /** Flags (`__node_flow`) a flow whose orig or reply source is a node
+    * IP; distinct, so duplicate node rows fan no flow out. Dimension
+    * aggregates run on one partition: broadcast whole anyway, unshuffled.
+    */
+  private def flagNodeFlows(nodes: DataFrame)(flows: DataFrame): DataFrame = {
+    val ips = broadcast(nodes.select(col("node_internal_ip")).coalesce(1).distinct())
+    flows
+      .join(ips.toDF("__n1"), col("orig_src_ip") === col("__n1"), "left_outer")
+      .join(ips.toDF("__n2"), col("reply_src_ip") === col("__n2"), "left_outer")
+      .withColumn("__node_flow", col("__n1").isNotNull || col("__n2").isNotNull)
+      .drop("__n1", "__n2")
+  }
+
+  def dropNodeFlows(nodes: DataFrame)(flows: DataFrame): DataFrame =
+    flagNodeFlows(nodes)(flows).filter(!col("__node_flow")).drop("__node_flow")
 
   // ---- J1×2 + J3 + P4: pod enrichment and direction resolution ----
-  /** NAT-aware endpoint derivation (labeler.go getEndpointsForFlow): the
-    * src endpoint is the ORIGINAL tuple's source, the dst endpoint is the
-    * REPLY tuple's source — under DNAT (k8s service VIPs) orig_dst holds
-    * the pre-NAT VIP while reply_src is the real backend, so all dst
-    * identity (pod lookup, remote IP for LPM, ports) flows from reply_src.
-    *
-    * Direction (getFlowType, labeler.go:475-499) with the assume-local
-    * fallbacks: an unknown IP talking to a pod known to live on a node is
-    * assumed to be the local side. Flows where either endpoint IP maps to
-    * more than one pod are labeling ERRORS (getEndpointsForFlow) — they
-    * are excluded here and surface as `error_ambiguous_pod_ip` outcome
-    * rows in [[routeOutcomes]]. Remaining unattributable flows get
-    * direction NULL and are dropped by F7.
-    */
   /** Sources that don't carry reply-tuple ports or flags get the non-NAT
     * conntrack defaults (reply_src_port = orig_dst_port etc.). */
   private def withFlowDefaults(flows: DataFrame): DataFrame = {
@@ -121,93 +110,95 @@ object FlowPipeline {
     df
   }
 
-  /** The getFlowType truth table (labeler.go:475-499) as four predicates
-    * over (src/dst pod identity, pod node, observing node) — ONE source
-    * of truth shared by [[resolveDirection]] and [[routeOutcomes]], whose
-    * pod-join shapes differ but whose direction semantics must not.
-    * Returns (srcLocal, dstLocal, srcAssumedLocal, dstAssumedLocal);
-    * precedence is the when-cascade order.
-    */
-  private def directionPredicates(srcId: Column, srcNode: Column,
-      dstId: Column, dstNode: Column): (Column, Column, Column, Column) = {
-    val srcLocal = srcId.isNotNull && srcNode === col("node_name")
-    val dstLocal = dstId.isNotNull && dstNode === col("node_name")
-    // assume-local fallbacks: unknown IP talking to a pod known to live
-    // on a node -> the unknown side must be the local one
-    val srcAssumed = srcId.isNull && dstId.isNotNull && dstNode =!= ""
-    val dstAssumed = srcId.isNotNull && srcNode =!= "" && dstId.isNull
-    (srcLocal, dstLocal, srcAssumed, dstAssumed)
+  /** Joins both endpoints to pods keyed by IP: `pod_n` counts the pods
+    * claiming the IP, and the pod's node zone rides along (one per node
+    * id). NAT-aware (getEndpointsForFlow): `src_*` is the ORIGINAL
+    * tuple's source, `dst_*` the REPLY tuple's — under DNAT orig_dst is
+    * the service VIP while reply_src is the real backend. */
+  private def joinPods(pods: DataFrame, nodes: DataFrame)(flows: DataFrame): DataFrame = {
+    val zones = nodes.coalesce(1).groupBy(col("node_id"))
+      .agg(max(col("node_zone")).as("pod_zone"))
+    val byIp = pods.coalesce(1).groupBy(col("pod_ip"))
+      .agg(count(lit(1)).as("pod_n"), Seq("pod_name", "pod_namespace",
+        "pod_node", "pod_app", "pod_instance").map(c => max(col(c)).as(c)): _*)
+      .join(broadcast(zones), col("pod_node") === col("node_id"), "left_outer")
+      .drop("node_id")
+    def side(p: String) = broadcast(byIp.toDF(byIp.columns.map(p + _): _*))
+    flows
+      .join(side("src_"), col("orig_src_ip") === col("src_pod_ip"), "left_outer")
+      .join(side("dst_"), col("reply_src_ip") === col("dst_pod_ip"), "left_outer")
   }
 
-  def resolveDirection(pods: DataFrame, nodes: DataFrame)(flows0: DataFrame): DataFrame = {
-    val flows = withFlowDefaults(flows0)
-    val ambIps = broadcast(pods.groupBy(col("pod_ip"))
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-      .select(col("pod_ip").as("amb_ip")))
-    val src = pods.toDF(pods.columns.map("src_" + _): _*)
-    val dst = pods.toDF(pods.columns.map("dst_" + _): _*)
-    val withPods = flows
-      .join(ambIps, col("orig_src_ip") === col("amb_ip"), "left_anti")
-      .join(ambIps.toDF("amb_ip2"), col("reply_src_ip") === col("amb_ip2"), "left_anti")
-      .join(broadcast(src), col("orig_src_ip") === col("src_pod_ip"), "left_outer")
-      .join(broadcast(dst), col("reply_src_ip") === col("dst_pod_ip"), "left_outer")
-    val (srcLocal, dstLocal, srcAssumed, dstAssumed) = directionPredicates(
-      col("src_pod_name"), col("src_pod_node"),
-      col("dst_pod_name"), col("dst_pod_node"))
-    val typed = withPods.withColumn("flow_type",
-      when(srcLocal, lit("fromPod"))
-        .when(dstLocal, lit("toPod"))
-        .when(srcAssumed, lit("fromPod"))
-        .when(dstAssumed, lit("toPod"))
-        .otherwise(lit(null).cast("string")))
+  /** Two pods claim an endpoint's IP: a labeling ERROR row, not an
+    * exception (labeler.go:449-469, server.go:100-117). */
+  private val ambiguousPodIp: Column =
+    coalesce(col("src_pod_n"), lit(0L)) > 1 || coalesce(col("dst_pod_n"), lit(0L)) > 1
+
+  /** getFlowType (labeler.go:475-499) with the assume-local fallbacks:
+    * an unknown IP talking to a pod on a known node is the local side. */
+  private val flowType: Column = {
+    val src = col("src_pod_ip").isNotNull
+    val dst = col("dst_pod_ip").isNotNull
+    when(src && col("src_pod_node") === col("node_name"), lit("fromPod"))
+      .when(dst && col("dst_pod_node") === col("node_name"), lit("toPod"))
+      .when(!src && dst && col("dst_pod_node") =!= "", lit("fromPod"))
+      .when(src && col("src_pod_node") =!= "" && !dst, lit("toPod"))
+      .otherwise(lit(null).cast("string"))
+  }
+
+  /** [[resolveDirection]]'s columns after `flow_type`; the local pod's
+    * node is `local_node`, so the observing `node_name` can stay. */
+  private def directed: Seq[Column] = {
     val isFrom = col("flow_type") === "fromPod"
+    def pick(from: String, to: String) = when(isFrom, col(from)).otherwise(col(to))
     // Go zero-value strings for missing pod identity, like the reference
-    def localF(f: String) =
-      coalesce(when(isFrom, col("src_" + f)).otherwise(col("dst_" + f)), lit(""))
-    def remoteF(f: String) =
-      coalesce(when(isFrom, col("dst_" + f)).otherwise(col("src_" + f)), lit(""))
-    val resolved = typed.select(
-      col("flow_id"), col("ts"), col("proto"), col("connection_flags"),
-      col("flow_type"),
+    def localF(f: String) = coalesce(pick("src_" + f, "dst_" + f), lit(""))
+    def remoteF(f: String) = coalesce(pick("dst_" + f, "src_" + f), lit(""))
+    Seq(
       // the inserted node is the LOCAL POD's node (FlowData.LocalNode,
       // labeler.go:337-345) — empty when the local side is an
       // assumed-local unknown IP, even though the observing node is known
-      localF("pod_node").as("node_name"),
+      localF("pod_node").as("local_node"),
       localF("pod_name").as("local_pod"),
       localF("pod_namespace").as("local_namespace"),
       localF("pod_app").as("local_app"),
       localF("pod_instance").as("local_instance"),
-      when(isFrom, col("orig_src_ip")).otherwise(col("reply_src_ip")).as("local_ip"),
-      when(isFrom, col("orig_src_port")).otherwise(col("reply_src_port")).as("local_port"),
-      when(isFrom, col("reply_src_ip")).otherwise(col("orig_src_ip")).as("remote_ip"),
-      when(isFrom, col("reply_src_port")).otherwise(col("orig_src_port")).as("remote_port"),
+      pick("orig_src_ip", "reply_src_ip").as("local_ip"),
+      pick("orig_src_port", "reply_src_port").as("local_port"),
+      pick("reply_src_ip", "orig_src_ip").as("remote_ip"),
+      pick("reply_src_port", "orig_src_port").as("remote_port"),
       // remote pod enrichment (other endpoint may also be a known pod,
       // possibly on another node — labeler.go:352-373)
-      when(isFrom, col("dst_pod_app")).otherwise(col("src_pod_app")).as("remote_app_raw"),
+      pick("dst_pod_app", "src_pod_app").as("remote_app_raw"),
       remoteF("pod_name").as("remote_pod"),
       remoteF("pod_namespace").as("remote_namespace"),
       remoteF("pod_instance").as("remote_instance"),
       remoteF("pod_node").as("remote_node"),
       // counter swap: out = traffic leaving the local pod
-      when(isFrom, col("orig_bytes")).otherwise(col("reply_bytes")).as("bytes_out"),
-      when(isFrom, col("orig_pkts")).otherwise(col("reply_pkts")).as("pkts_out"),
-      when(isFrom, col("reply_bytes")).otherwise(col("orig_bytes")).as("bytes_in"),
-      when(isFrom, col("reply_pkts")).otherwise(col("orig_pkts")).as("pkts_in"))
-    // J3: local + remote node zones (topology.kubernetes.io/zone), both
-    // resolved via the POD's node (node_name is now the local pod's node)
-    val zones = nodes.select(col("node_id"), col("node_zone"))
-    resolved
-      .join(broadcast(zones), col("node_name") === col("node_id"), "left_outer")
-      .drop("node_id")
-      // unknown node -> empty zone, like the reference's missing label
-      .withColumn("local_zone", coalesce(col("node_zone"), lit("")))
-      .drop("node_zone")
-      .join(broadcast(zones.toDF("r_node_id", "r_node_zone")),
-        col("remote_node") === col("r_node_id"), "left_outer")
-      .drop("r_node_id")
-      .withColumn("remote_zone", coalesce(col("r_node_zone"), lit("")))
-      .drop("r_node_zone")
+      pick("orig_bytes", "reply_bytes").as("bytes_out"),
+      pick("orig_pkts", "reply_pkts").as("pkts_out"),
+      pick("reply_bytes", "orig_bytes").as("bytes_in"),
+      pick("reply_pkts", "orig_pkts").as("pkts_in"),
+      // local + remote node zones, both via the POD's node
+      localF("pod_zone").as("local_zone"),
+      remoteF("pod_zone").as("remote_zone"))
   }
+
+  /** The columns a flow keeps through [[resolveDirection]] unchanged. */
+  private val carried = Seq("flow_id", "ts", "proto", "connection_flags")
+
+  /** Pod enrichment and direction per flow. Flows where either endpoint
+    * IP maps to more than one pod are excluded here (they are
+    * `error_ambiguous_pod_ip` in [[label]]); the rest that cannot be
+    * attributed get direction NULL and are dropped by F7.
+    */
+  def resolveDirection(pods: DataFrame, nodes: DataFrame)(flows: DataFrame): DataFrame =
+    withFlowDefaults(flows)
+      .transform(joinPods(pods, nodes))
+      .filter(!ambiguousPodIp)
+      .withColumn("flow_type", flowType)
+      .select((carried :+ "flow_type").map(col) ++ directed: _*)
+      .withColumnRenamed("local_node", "node_name")
 
   // ---- F7: drop unlabelable flows (labeler.go:319-331,493-498) ----
   def dropUnlabeled(flows: DataFrame): DataFrame =
@@ -243,6 +234,56 @@ object FlowPipeline {
         coalesce(col("remote_app_raw"), lit("")).as("remote_app"),
         col("p_len")): _*)
   }
+
+  // ---- F8: the labeler — the good/bad outcome taxonomy as data
+  //      (server.go:100-117, labeler.go:21-44), not exceptions ----
+  /** Tags EVERY raw observation, like one labeler call per flow that
+    * returns a labeled `FlowData` or why the flow was dropped: the
+    * input's columns, `outcome`, and `flow`, the labeled record
+    * ([[resolveDirection]]'s columns then [[classify]]'s). The outcome
+    * is the first failing check in the reference's order — those of
+    * [[filterJunk]], [[dropUdp]], [[dropIpv6]], then node flow,
+    * ambiguous pod IP, direction and same-cloud empty region
+    * (remote.go:151-155) — or `labeled`. One node-IP join, one pods join
+    * per endpoint and one LPM probe serve every check. */
+  def label(pods: DataFrame, nodes: DataFrame, prefixes: DataFrame,
+      cfg: FlowConfig)(flows: DataFrame): DataFrame = {
+    val (classified, checks) = checked(pods, nodes, prefixes, cfg)(flows)
+    val failed = checks.map { case (o, pass) => (!coalesce(pass, lit(false)), lit(o)) }
+    val outcome = failed.tail
+      .foldLeft(when(failed.head._1, failed.head._2)) { case (w, (f, o)) => w.when(f, o) }
+      .otherwise(lit("labeled"))
+    classified.select(flows.columns.map(col) ++ Seq(outcome.as("outcome"),
+      struct(record(classified): _*).as("flow")): _*)
+  }
+
+  /** [[label]] before the outcome folds its checks: the input's columns,
+    * the node-flow and ambiguity flags, `flow_type`, the directed and
+    * [[classify]]'s columns; and the checks in order. */
+  private def checked(pods: DataFrame, nodes: DataFrame, prefixes: DataFrame,
+      cfg: FlowConfig)(flows: DataFrame): (DataFrame, Seq[Check]) = {
+    val raw = withFlowDefaults(flows)
+    val classified = raw
+      .transform(flagNodeFlows(nodes))
+      .transform(joinPods(pods, nodes))
+      .withColumn("flow_type", flowType)
+      .select(raw.columns.map(col) ++ Seq(col("__node_flow"),
+        ambiguousPodIp.as("__ambiguous"), col("flow_type")) ++ directed: _*)
+      .transform(classify(prefixes, cfg))
+    (classified, junkChecks ++ udpChecks(cfg) ++ ipv6Checks(flows) ++ Seq(
+      "ignored_node_flow" -> !col("__node_flow"),
+      "error_ambiguous_pod_ip" -> !col("__ambiguous"),
+      "unknown_direction" -> col("flow_type").isNotNull,
+      "error_intra_cloud_empty_region" -> !col("connection_class").startsWith("ERROR_")))
+  }
+
+  /** The labeled record: [[resolveDirection]]'s columns, then
+    * [[classify]]'s. */
+  private def record(classified: DataFrame): Seq[Column] =
+    carried.map(col) ++ classified.columns.dropWhile(_ != "flow_type").map {
+      case "local_node" => col("local_node").as("node_name")
+      case c => col(c)
+    }
 
   // ---- O3: directional fan-out (worker.go:143-222) ----
   def fanOut(flows: DataFrame): DataFrame = {
@@ -306,78 +347,39 @@ object FlowPipeline {
   def dropClassifyErrors(flows: DataFrame): DataFrame =
     flows.filter(!col("connection_class").startsWith("ERROR_"))
 
-  /** Full batch pipeline: raw flow observations → summing table rows. */
-  def run(flows: DataFrame, pods: DataFrame, nodes: DataFrame,
-      prefixes: DataFrame, cfg: FlowConfig = FlowConfig()): DataFrame = {
-    val labeled = flows
-      .transform(filterJunk)
-      .transform(dropUdp(cfg))
-      .transform(dropIpv6)
-      .transform(dropNodeFlows(nodes))
-      .transform(resolveDirection(pods, nodes))
-      .transform(dropUnlabeled)
-      .transform(classify(prefixes, cfg))
-      .transform(dropClassifyErrors)
-    annotateConstants(cfg)(summarize(fanOut(labeled)))
+  /** The labeled records of a [[label]]ed frame. */
+  def keepLabeled(labeled: DataFrame): DataFrame =
+    labeled.filter(col("outcome") === "labeled").select(col("flow.*"))
+
+  /** The flows [[run]] sums, as labeled records: the raw-column filters,
+    * then [[label]] kept to `labeled`. The filters come first so that
+    * junk never reaches a join or the trie; keeping a row by each check
+    * rather than by the folded outcome lets every check drop its rows
+    * right after the join it reads, as [[keepLabeled]] cannot.
+    */
+  def labeledFlows(pods: DataFrame, nodes: DataFrame, prefixes: DataFrame,
+      cfg: FlowConfig)(flows: DataFrame): DataFrame = {
+    val (classified, checks) = checked(pods, nodes, prefixes, cfg)(
+      flows.transform(filterJunk).transform(dropUdp(cfg)).transform(dropIpv6))
+    keep(checks)(classified).select(record(classified): _*)
   }
 
-  // ---- F8: error routing — the good/bad outcome taxonomy as data
-  //      (server.go:100-117, labeler.go:21-44), not exceptions ----
-  /** Classifies EVERY raw observation into the reference's outcome
-    * taxonomy instead of silently dropping, so operational metrics
-    * (`count by outcome`) fall out of the same plan. Precedence follows
-    * the reference's check order.
+  /** Full batch pipeline: raw flow observations → summing table rows —
+    * [[labeledFlows]], fanned out, summed per minute and annotated.
+    */
+  def run(flows: DataFrame, pods: DataFrame, nodes: DataFrame,
+      prefixes: DataFrame, cfg: FlowConfig = FlowConfig()): DataFrame =
+    annotateConstants(cfg)(summarize(fanOut(
+      labeledFlows(pods, nodes, prefixes, cfg)(flows))))
+
+  /** EVERY raw observation with its outcome: [[label]] projected to the
+    * input's columns plus `outcome`, so operational metrics (`count by
+    * outcome`) come from the plan the summing table does. The rows it
+    * tags `labeled` are exactly the ones [[run]] sums.
     */
   def routeOutcomes(pods: DataFrame, nodes: DataFrame, prefixes: DataFrame,
-      cfg: FlowConfig)(flows: DataFrame): DataFrame = {
-    // distinct: this is an existence check — duplicate node_internal_ip
-    // rows (informer churn) must not fan flow rows out through the join
-    val nodeIps = broadcast(nodes.select(col("node_internal_ip")).distinct())
-    // >1 pod claiming one IP is a labeling ERROR ROW, not an exception
-    // (labeler.go:449-469, server.go:100-117) — the stream must survive
-    val podsByIp = pods.groupBy(col("pod_ip"))
-      .agg(count(lit(1)).as("pod_ip_n"), max(col("pod_node")).as("one_node"))
-    val src = broadcast(podsByIp.select(col("pod_ip").as("src_pod_ip"),
-      col("one_node").as("src_pod_node"), col("pod_ip_n").as("src_n")))
-    val dst = broadcast(podsByIp.select(col("pod_ip").as("dst_pod_ip"),
-      col("one_node").as("dst_pod_node"), col("pod_ip_n").as("dst_n")))
-    val withDims = flows
-      .join(nodeIps.toDF("n1"), col("orig_src_ip") === col("n1"), "left_outer")
-      .join(nodeIps.toDF("n2"), col("reply_src_ip") === col("n2"), "left_outer")
-      .join(src, col("orig_src_ip") === col("src_pod_ip"), "left_outer")
-      // dst endpoint = reply tuple's source (NAT-aware, like resolveDirection)
-      .join(dst, col("reply_src_ip") === col("dst_pod_ip"), "left_outer")
-    val localhost = lit(SyntheticFlows.LOCALHOST)
-    val (srcLocal, dstLocal, srcAssumed, dstAssumed) = directionPredicates(
-      col("src_pod_ip"), col("src_pod_node"),
-      col("dst_pod_ip"), col("dst_pod_node"))
-    val directed = srcLocal || dstLocal || srcAssumed || dstAssumed
-    val isFrom = srcLocal || (!dstLocal && srcAssumed)
-    // LPM over the resolved remote so the same-cloud-empty-region error
-    // (remote.go:151-155) lands in the taxonomy, not in the summing table
-    val withRemote = withDims.withColumn("__remote_ip",
-      when(isFrom, col("reply_src_ip")).otherwise(col("orig_src_ip")))
-    val lpm = LpmJoin.viaTrie(withRemote, prefixes, col("__remote_ip"))
-    lpm.withColumn("outcome",
-      when(!(col("orig_bytes") > 0 || col("orig_pkts") > 0 ||
-        col("reply_bytes") > 0 || col("reply_pkts") > 0), "ignored_zero")
-        .when(!col("proto").isin(6, 17), "ignored_proto")
-        .when(col("orig_src_ip") === localhost || col("orig_dst_ip") === localhost ||
-          col("reply_src_ip") === localhost || col("reply_dst_ip") === localhost,
-          "ignored_localhost")
-        .when(lit(cfg.ignoreUDP) && col("proto") === 17, "ignored_udp")
-        // ErrIPv6Flow (labeler.go:243-247) — run() drops these via
-        // dropIpv6, so the taxonomy must account for them too
-        .when(isIpv6(flows).getOrElse(lit(false)), "ignored_ipv6")
-        .when(col("n1").isNotNull || col("n2").isNotNull, "ignored_node_flow")
-        .when(col("src_n") > 1 || col("dst_n") > 1, "error_ambiguous_pod_ip")
-        .when(!directed, "unknown_direction")
-        .when(!ip_is_private(col("__remote_ip")) &&
-          col("p_cloud") === cfg.localCloud && col("p_region") === "",
-          "error_intra_cloud_empty_region")
-        .otherwise("labeled"))
-      .select(flows.columns.map(col) :+ col("outcome"): _*)
-  }
+      cfg: FlowConfig)(flows: DataFrame): DataFrame =
+    label(pods, nodes, prefixes, cfg)(flows).drop("flow")
 }
 
 /** Longest-prefix-match join (SURVEY.md §2.4 J5). */
@@ -397,17 +399,19 @@ object LpmJoin {
     val spark = flows.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    val rows = prefixes
-      .select(col("p_start"), col("p_len"), col("p_cloud"), col("p_region"),
-        col("p_service"))
-      .collect()
+    val rows = graft.Graft.describing(spark, "LpmJoin prefix collect")(
+      prefixes.select(col("p_start"), col("p_len"), col("p_cloud"),
+        col("p_region"), col("p_service")).collect())
     val trie = Ipv4Trie.build(rows.zipWithIndex.map { case (r, i) =>
       (r.getLong(0), r.getInt(1), i)
     })
     val payload = rows.zipWithIndex.map { case (r, i) =>
       (i, r.getInt(1), r.getString(2), r.getString(3), r.getString(4))
     }.toSeq.toDF("__pidx", "p_len", "p_cloud", "p_region", "p_service")
-    flows.withColumn("__p", column(TrieLpm(expression(ip), trie)))
+    // the probe leads the projection, so a plan string shows it however
+    // wide the frame (it truncates a long column list)
+    flows.select(column(TrieLpm(expression(ip), trie)).as("__p") +:
+        flows.columns.map(col): _*)
       .join(broadcast(payload), col("__p") === col("__pidx"), "left_outer")
       .drop("__p", "__pidx")
   }

@@ -920,11 +920,8 @@ object TxTable {
         keys.foreach(k => require(df.columns.contains(k),
           s"bucketed table: every write needs key column $k"))
         require(!df.columns.contains("__gb"), "__gb is reserved")
-        val sk = sortKey.filter(df.columns.contains)
         (df.withColumn("__gb", pmod(hash(keys.map(col): _*), lit(n)))
-          .repartition(n, col("__gb"))
-          .sortWithinPartitions(("__gb" +: sk).map(col): _*),
-          Seq("date", "__gb"))
+          .repartition(n, col("__gb")), Seq("date", "__gb"))
       case None => (df, Seq("date"))
     }
     // INT96 (Spark's compatibility default) carries no usable min/max
@@ -937,8 +934,9 @@ object TxTable {
       stageLocks.computeIfAbsent(sess, _ => new Object).synchronized {
         val prevTs = sess.conf.getOption(tsKey)
         sess.conf.set(tsKey, "TIMESTAMP_MICROS")
-        try writeFiles(toWrite, new Path(root, dataDir), partCols,
-          bucketNgramCols(props))
+        try graft.Graft.describing(sess, "TxTable.stage write")(
+          writeFiles(toWrite, new Path(root, dataDir), partCols,
+            bucketNgramCols(props)))
         finally prevTs match {
           case Some(v) => sess.conf.set(tsKey, v)
           case None    => sess.conf.unset(tsKey)
@@ -972,9 +970,9 @@ object TxTable {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     // planned as `DataFrameWriter.partitionBy` plans a write (Spark's
     // V1Writes): a local sort on the partition columns over the query.
-    // The optimizer drops a within-partition sort below it
-    // (EliminateSorts), so files keep the layout a `df.write` gives
-    // them: range-clustered, rows in the range exchange's order.
+    // The optimizer would drop any within-partition sort below it
+    // (EliminateSorts), so the callers' exchange alone sets the layout:
+    // range-clustered, rows in the range exchange's order.
     val qe = df.sortWithinPartitions(partCols.map(col): _*).queryExecution
     val plan = qe.optimizedPlan
     val output = plan.output
@@ -1111,8 +1109,11 @@ object TxTable {
   }
 
   private def schemaUpdate(fs: FileSystem, root: Path,
-      df: DataFrame): Option[StructType] = {
-    val next = dataSchema(df)
+      df: DataFrame): Option[StructType] =
+    schemaUpdate(fs, root, dataSchema(df))
+
+  private def schemaUpdate(fs: FileSystem, root: Path,
+      next: StructType): Option[StructType] =
     logSchema(fs, root) match {
       case None                     => Some(next)
       case Some(cur) if cur == next => None
@@ -1133,7 +1134,6 @@ object TxTable {
         val curNames = cur.fieldNames.toSet
         Some(StructType(cur ++ next.filterNot(f => curNames(f.name))))
     }
-  }
 
   /** Transactional append: new files become visible in one commit,
     * with each file's stats and filters folded by the write tasks.
@@ -1557,24 +1557,9 @@ object TxTable {
       else stagedMetas(fs, root, dataDir, folded, Some(onlyFiles))
     val next = StructType(writeSchema.filterNot(_.name == "date")
       .map(f => f.copy(nullable = true)))
-    val schemaAction = logSchema(fs, root) match {
-      case None                      => Some(next)
-      case Some(cur) if cur == next  => None
-      case Some(cur) if cur.map(f => f.name -> relaxNulls(f.dataType)) ==
-          next.map(f => f.name -> relaxNulls(f.dataType)) => None
-      case Some(cur) =>
-        val nextTypes = next.map(f => f.name -> relaxNulls(f.dataType)).toMap
-        val broken = cur.filterNot(f =>
-          nextTypes.get(f.name).contains(relaxNulls(f.dataType)))
-        require(broken.isEmpty || replace,
-          s"non-additive schema change (${broken.map(_.name).mkString(",")})" +
-            ": a streaming append may only ADD columns")
-        if (replace) Some(next)
-        else {
-          val curNames = cur.fieldNames.toSet
-          Some(StructType(cur ++ next.filterNot(f => curNames(f.name))))
-        }
-    }
+    // a replace owns the whole file set, so it takes the new schema as
+    // overwrite does; an append evolves it additively
+    val schemaAction = if (replace) Some(next) else schemaUpdate(fs, root, next)
     val removes =
       if (replace) snapshotFiles(fs, root).keys.toSeq else Seq.empty
     commitRetry(fs, root, adds, removes, Some(appId -> epochId),
@@ -1630,7 +1615,7 @@ object TxTable {
   private def clusterByKeys(df: DataFrame, keys: Seq[String]): DataFrame = {
     val ks = keys.filter(df.columns.contains).map(col)
     if (ks.isEmpty) df
-    else df.repartitionByRange(ks: _*).sortWithinPartitions(ks: _*)
+    else df.repartitionByRange(ks: _*)
   }
 
   /** [[appendTxn]] with [[clusterByKeys]] layout — the incremental
@@ -1883,11 +1868,8 @@ object TxTable {
     * sort key…), not `repartition(date)`: that maps each calendar day
     * to ONE write task, while this splits a day across many.
     */
-  private[graft] def prep(df: DataFrame): DataFrame = {
-    val sk = sortKey.filter(df.columns.contains)
-    val parted = df.repartitionByRange(("date" +: sk).map(col): _*)
-    if (sk.isEmpty) parted else parted.sortWithinPartitions(sk.map(col): _*)
-  }
+  private[graft] def prep(df: DataFrame): DataFrame =
+    df.repartitionByRange(("date" +: sortKey.filter(df.columns.contains)).map(col): _*)
 
   /** Snapshot read at the latest version — or, with `asOfVersion`, TIME
     * TRAVEL to any still-vacuum-retained historical version (immutable
@@ -2011,7 +1993,8 @@ object TxTable {
     // one snapshot for what is read and what is removed
     val targets = live.toSeq.filter { case (_, m) => targetDates.contains(m.date) }
     val compacted = resum(readFileSet(spark, root, targets, state.schema))
-    val adds = stage(prep(compacted), fs, root)
+    val adds = graft.Graft.describing(spark, "TxTable.compact re-sum")(
+      stage(prep(compacted), fs, root))
     val removes = targets.map(_._1)
     // normally a no-op; on a pre-evolution log this upgrades it with an
     // M action for the (unchanged) schema
@@ -2553,12 +2536,9 @@ object TxTable {
       (bytes + targetFileBytes - 1) / targetFileBytes).toInt
     // cluster on the sort key at the right width — packing also
     // restores the stats envelopes micro-batch writes fragment
-    val sk = sortKey.filter(df.columns.contains)
     val packed = df.repartitionByRange(nFiles,
-      ("date" +: sk).distinct.map(col): _*)
-    val sorted = if (sk.isEmpty) packed
-      else packed.sortWithinPartitions(sk.map(col): _*)
-    val adds = stage(sorted, fs, root)
+      ("date" +: sortKey.filter(df.columns.contains)).distinct.map(col): _*)
+    val adds = stage(packed, fs, root)
     val removes = needy.values.flatMap(_.keys).toSeq
     commitRetry(fs, root, adds, removes, None, schemaUpdate(fs, root, df),
       op = Some("optimize"))
@@ -2614,7 +2594,6 @@ object TxTable {
       spark.sessionState.conf.numShufflePartitions)
     val clustered = df.withColumn("__z", z)
       .repartitionByRange(nParts, col("__z"))
-      .sortWithinPartitions(col("__z"))
       .drop("__z")
     val adds = stage(clustered, fs, root)
     commitRetry(fs, root, adds, snapshotFiles(fs, root).keys.toSeq, None,

@@ -468,13 +468,16 @@ object StreamingFlows {
       .otherwise(struct(lit("collector_filtered").as("family"), o.as("label")))
   }
 
-  /** The streaming flow job (W8, W5/W6, A5): one micro-batch of raw
-    * flows → two commits, both keyed by the batch id:
-    *  - `appendTxn` of [[FlowPipeline.run]]'s partial sums to `table`;
-    *  - `appendTxn` of per-(date, outcome) counts from the same
-    *    [[FlowPipeline.routeOutcomes]] plan the oracle gates to
-    *    `outcomesTable`, so metrics and data cannot disagree
-    *    ([[MetricsExporter]] folds them into Prometheus counters).
+  /** The streaming flow job (W8, W5/W6, A5). Each micro-batch of raw
+    * flows is labeled ONCE by [[FlowPipeline.label]] (one dims join, one
+    * trie), persisted, and both commits derive from that frame, keyed by
+    * the batch id:
+    *  - `appendTxn` of the partial sums of its `labeled` rows to `table`
+    *    (what [[FlowPipeline.run]] gives for the batch);
+    *  - `appendTxn` of per-(date, outcome) counts to `outcomesTable`
+    *    (what [[FlowPipeline.routeOutcomes]] gives), so metrics and data
+    *    cannot disagree ([[MetricsExporter]] folds them into Prometheus
+    *    counters).
     *
     * The dims are re-resolved per micro-batch by `loadDims(batchId)` —
     * broadcast is per-plan, so each batch builds and broadcasts the
@@ -503,20 +506,20 @@ object StreamingFlows {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val (pods, nodes, prefixes) = loadDims(batchId)
-        // two commits read the batch: persist so the second is a cache
-        // scan, not a source re-read
-        batch.persist()
+        // two commits read the labeled batch: persist so the second is
+        // a cache scan, not a second source read and label pass
+        val labeled = FlowPipeline.label(pods, nodes, prefixes, cfg)(batch).persist()
         try {
           TxTable.appendTxn(spark,
-            FlowPipeline.run(batch, pods, nodes, prefixes, cfg),
+            FlowPipeline.annotateConstants(cfg)(FlowPipeline.summarize(
+              FlowPipeline.fanOut(FlowPipeline.keepLabeled(labeled)))),
             table, writerId, batchId)
           TxTable.appendTxn(spark,
-            FlowPipeline.routeOutcomes(pods, nodes, prefixes, cfg)(batch)
-              .groupBy(to_date(col("ts")).as("date"), col("outcome"))
+            labeled.groupBy(to_date(col("ts")).as("date"), col("outcome"))
               .agg(count(lit(1)).as("n")),
             outcomesTable, writerId, batchId)
           ()
-        } finally batch.unpersist()
+        } finally labeled.unpersist()
       }
       .start()
   }
@@ -538,10 +541,12 @@ object StreamingFlows {
       _ => (pods, nodes, prefixes))
   }
 
-  /** The PRODUCTION streaming shape of the pipeline: same label/classify
-    * stages, but the summing aggregation is a watermarked 60s window in
-    * APPEND mode — state is bounded by the lateness horizon and each
-    * summing row is emitted exactly once, when its window closes. Rows
+  /** The PRODUCTION streaming shape of the pipeline: the flows
+    * [[FlowPipeline.run]] sums ([[FlowPipeline.labeledFlows]], one
+    * [[FlowPipeline.label]] pass), but the summing aggregation is a
+    * watermarked 60s window in APPEND mode — state is bounded by the
+    * lateness horizon and each summing row is emitted exactly once,
+    * when its window closes. Rows
     * later than `lateness` belong to the batch backfill path
     * (`TxTable.append` + `compact`). Returns the un-started
     * aggregation; run with [[runToMemoryAppend]].
@@ -557,15 +562,7 @@ object StreamingFlows {
     val prefixes = graft.ops.CacheRegistry.track(
       SyntheticFlows.prefixes(spark, dir))
     val cfg = FlowConfig()
-    val labeled = flows
-      .transform(FlowPipeline.filterJunk)
-      .transform(FlowPipeline.dropUdp(cfg))
-      .transform(FlowPipeline.dropIpv6)
-      .transform(FlowPipeline.dropNodeFlows(nodes))
-      .transform(FlowPipeline.resolveDirection(pods, nodes))
-      .transform(FlowPipeline.dropUnlabeled)
-      .transform(FlowPipeline.classify(prefixes, cfg))
-      .transform(FlowPipeline.dropClassifyErrors)
+    val labeled = FlowPipeline.labeledFlows(pods, nodes, prefixes, cfg)(flows)
     val keyNoTime = FlowPipeline.dimensionKey
       .filterNot(Set("date", "interval_start", "interval_seconds"))
     // the watermark is declared HERE, after the label/filter stages, so

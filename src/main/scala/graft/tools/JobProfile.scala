@@ -4,7 +4,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 
 /** Measurement-only tool (guide §1): runs named gates from
   * `graft.SparkEntry.queries` with a SparkListener attached and prints a
-  * per-JOB wall-time breakdown keyed by call site, plus per-stage shuffle
+  * per-JOB wall-time breakdown keyed by job description (the phase that
+  * ran it, e.g. `TxTable.stage write`; the call site when there is
+  * none), plus per-stage shuffle
   * byte totals — the local[n] substitute for the Spark UI's job/stage
   * pages (the UI is disabled in this sandbox). No product code path
   * changes; the output feeds OPTIMIZATION_r16.md's "what we measured".
